@@ -6,10 +6,12 @@ Usage (from the repository root):
 
 Builds the program and the benchmark from source with sbt on first use
 (outputs under .bench_build/ and habitbench/target/), runs the workload in
-a fresh JVM that checks every output against the benchmark's truth model, and
-prints {"correct", "attempted", "failed", "metrics"} as the last line.
+a fresh JVM that checks every output against the benchmark's truth model,
+compares ledger_replay's results with their DuckDB oracle, and prints
+{"correct", "attempted", "failed", "metrics"} as the last line.
 """
 import argparse
+import glob
 import hashlib
 import json
 import os
@@ -20,7 +22,7 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
-WORKLOADS = ("etl_cron", "stream_ingest")
+WORKLOADS = ("etl_cron", "ledger_replay")
 RUN_TIMEOUT_S = 170
 JVM_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -83,6 +85,42 @@ def classpath():
     return cp
 
 
+def canon(df):
+    df = df.reindex(sorted(df.columns), axis=1)
+    return df.sort_values(by=list(df.columns), ignore_index=True)
+
+
+def oracle_matches(oracle_dir):
+    """Compares each ledger replay's first result, as the JVM wrote it, with
+    its DuckDB oracle over the same documents corpus: same columns, same
+    value kinds, same rows (the comparison tools/check_oracle.py makes)."""
+    try:
+        import duckdb
+        import pandas as pd
+    except ImportError:
+        fail("ledger_replay needs the duckdb and pandas Python modules")
+    with open(os.path.join(oracle_dir, "oracle.json")) as fh:
+        spec = json.load(fh)
+    con = duckdb.connect()
+    docs = os.path.join(spec["documents"], "*.parquet").replace("'", "''")
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs}')")
+    ok = True
+    for q, sql in spec["queries"].items():
+        files = glob.glob(os.path.join(oracle_dir, q, "*.parquet"))
+        got = canon(pd.concat([pd.read_parquet(f) for f in files]))
+        want = canon(con.execute(sql).df())
+        same = (list(got.columns) == list(want.columns) and len(got) == len(want)
+                and all({got[c].dtype.kind, want[c].dtype.kind} <= {"i", "u"}
+                        or got[c].dtype.kind == want[c].dtype.kind for c in got.columns)
+                and got.astype(object).where(got.notna(), None).values.tolist()
+                == want.astype(object).where(want.notna(), None).values.tolist())
+        if not same:
+            print(f"habitbench: {q} differs from its DuckDB oracle", file=sys.stderr)
+            ok = False
+    con.close()
+    return ok
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True, choices=WORKLOADS)
@@ -99,11 +137,8 @@ def main():
     work = os.path.join(BUILD, "work", f"{a.workload}-{a.seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "tmp"))
-    # Steadier runs: a fixed-size heap without adaptive resizing, and C1
-    # only, since in a one-minute JVM C2 compilation competes with the
-    # workload for the cores and made runs bimodal.
+    # a fixed-size heap without adaptive resizing, for steadier runs
     cmd = ["java", "-Xms2g", "-Xmx2g", "-XX:+UseParallelGC", "-XX:-UseAdaptiveSizePolicy",
-           "-XX:TieredStopAtLevel=1",
            "-Duser.timezone=UTC",
            f"-Djava.io.tmpdir={work}/tmp", "-Dspark.ui.enabled=false"]
     for p in JVM_OPENS:
@@ -111,20 +146,24 @@ def main():
     cmd += ["-cp", cp, "habitbench.Main", "--workload", a.workload,
             "--seed", str(a.seed), "--seconds", str(a.seconds),
             "--trace", a.trace, "--work", work]
-    proc = subprocess.Popen(cmd, cwd=ROOT, stdout=subprocess.PIPE, stderr=sys.stderr, text=True)
     try:
-        out, _ = proc.communicate(timeout=RUN_TIMEOUT_S)
-    except subprocess.TimeoutExpired:
-        proc.kill()
-        proc.wait()
+        proc = subprocess.Popen(cmd, cwd=ROOT, stdout=subprocess.PIPE, stderr=sys.stderr,
+                                text=True)
+        try:
+            out, _ = proc.communicate(timeout=RUN_TIMEOUT_S)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+            fail(f"run exceeded {RUN_TIMEOUT_S} s")
+        lines = [l for l in out.splitlines() if l.startswith("{")]
+        if proc.returncode != 0 or not lines:
+            fail(f"benchmark JVM exited with {proc.returncode}")
+        result = json.loads(lines[-1])
+        if a.workload == "ledger_replay" and not oracle_matches(os.path.join(work, "oracle")):
+            result["correct"] = False
+            result["failed"] = result["attempted"]
+    finally:
         shutil.rmtree(work, ignore_errors=True)
-        fail(f"run exceeded {RUN_TIMEOUT_S} s")
-    lines = [l for l in out.splitlines() if l.startswith("{")]
-    if proc.returncode != 0 or not lines:
-        shutil.rmtree(work, ignore_errors=True)
-        fail(f"benchmark JVM exited with {proc.returncode}")
-    result = json.loads(lines[-1])
-    shutil.rmtree(work, ignore_errors=True)
     print(json.dumps(result))
     sys.exit(0 if result["correct"] else 1)
 

@@ -20,12 +20,12 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * ticks the tab gains a day of responses and a few edits. */
 final class EtlCron(spark: SparkSession, tracer: Tracer, seed: Long) extends Workload {
   val Users = 40
-  val HistoryDays = 14
+  val HistoryDays = 60
 
   private val schema = StructType(Sheet.Columns.map(StructField(_, StringType)))
   private var dir = ""
   private var tab: SheetTab = _
-  private var truth: Truth.Store = _
+  private val truth = new Truth.Store
   private val seen = mutable.HashSet.empty[Vector[String]]
   // per timed tick, for the traced run's layer metrics
   private val newFrac = mutable.ArrayBuffer.empty[Double]
@@ -72,13 +72,11 @@ final class EtlCron(spark: SparkSession, tracer: Tracer, seed: Long) extends Wor
       .write.parquet(landing)
     val events = HabitTransform.toEvents(t)
     EventStore.write(Merge.upsertEvents(events.limit(0), events), store)
-    truth = new Truth.Store
     truth.upsert(tab.rows.flatMap(Truth.toEvents))
-    seen.clear()
     seen ++= tab.rows.map(asRead)
   }
 
-  def warmupOps: Int = 2
+  def warmupOps: Int = 3
 
   override def prepare(): Unit = { tab.advance(); writeTab() }
 

@@ -115,10 +115,11 @@ final case class Response(user: Int, day: Int, fmt: Int, hour: Int,
   * appends one day of responses from half the users (Zipf-skewed),
   * edits a share of earlier responses in place and re-sends everything
   * else unchanged; [[rows]] is the whole tab as the next tick reads it. */
-final class SheetTab(seed: Long, val users: Int, zipfS: Double = 0.8,
-    editShare: Double = 0.02) {
+final class SheetTab(seed: Long, val users: Int) {
+  private val ZipfS = 0.8
+  private val EditShare = 0.02
   private val rnd = new scala.util.Random(seed)
-  private val weights = Sheet.zipfWeights(users, zipfS)
+  private val weights = Sheet.zipfWeights(users, ZipfS)
   val responses = mutable.ArrayBuffer.empty[Response]
   /** Tab slots: (response index, email style of this copy). A duplicate
     * row is a second slot on the same response. */
@@ -182,7 +183,7 @@ final class SheetTab(seed: Long, val users: Int, zipfS: Double = 0.8,
     if (rnd.nextDouble() < 0.3)
       add(newResponse(rnd.nextInt(users), day).copy(blankEmail = true), 0)
     if (day > 0) {
-      val n = math.max(1, (responses.size * editShare).toInt)
+      val n = math.max(1, (responses.size * EditShare).toInt)
       (0 until n).foreach { _ =>
         val i = rnd.nextInt(responses.size)
         val r = responses(i)
@@ -196,48 +197,34 @@ final class SheetTab(seed: Long, val users: Int, zipfS: Double = 0.8,
   }
 }
 
-/** Seeded stream files for `stream_ingest`: each file is mostly the
-  * newest day's events from half the users (Zipf-skewed), plus late
-  * events on older days and re-sent keys with new values. */
-final class StreamFeed(seed: Long, val users: Int, lateShare: Double = 0.05,
-    resendShare: Double = 0.05) {
-  private val rnd = new scala.util.Random(seed)
-  private val weights = Sheet.zipfWeights(users, 0.8)
-  val habits: Seq[String] = Sheet.Habits.map(_.id)
-  var day = 0
-  private val sent = mutable.ArrayBuffer.empty[Ev]
+/** One row of the `documents` table the registered ledger replays read. */
+final case class Doc(id: Long, text: String, lang: String, source: String)
 
-  def weight(user: String): Double =
-    1.0 + (user.stripPrefix("user").takeWhile(_.isDigit).toInt % 5)
+/** A seeded `documents` corpus in the shape of the sf0.01 test table:
+  * 500 documents of 10–99 words over a 30-word vocabulary, 20 sources
+  * assigned round-robin, five languages (44% `en`), and 5% planted
+  * duplicates that repeat an earlier document's text with " dup"
+  * appended. */
+object DocCorpus {
+  val Size = 500
+  val Sources = 20
+  val Vocabulary: Seq[String] = Seq("a", "agg", "batch", "big", "column",
+    "customer", "data", "fast", "filter", "group", "hash", "join", "key",
+    "line", "merge", "order", "part", "query", "row", "scan", "slow",
+    "small", "sort", "spark", "stream", "table", "the", "value", "vector",
+    "window")
+  private val Langs = Seq("zh", "de", "es", "fr")
 
-  private def ev(u: Int, d: Int, h: String): Ev = {
-    val local = Sheet.Start.plusDays(d).atTime(12, 0)
-    Ev(Truth.micros(local), Sheet.email(u), h, rnd.nextInt(41) * 0.25, null)
-  }
-
-  /** The next file's events. `days > 1` makes a bootstrap file spanning
-    * that many days. */
-  def next(days: Int = 1): Seq[Ev] = {
-    val fresh = (day until day + days).flatMap { d =>
-      Sheet.responders(rnd, weights, users / 2).flatMap(u => habits.map(h => ev(u, d, h)))
+  def apply(seed: Long): Seq[Doc] = {
+    val rnd = new scala.util.Random(seed)
+    val docs = mutable.ArrayBuffer.empty[Doc]
+    (0 until Size).foreach { i =>
+      val text =
+        if (i >= Sources && rnd.nextDouble() < 0.05) docs(rnd.nextInt(i)).text + " dup"
+        else Seq.fill(10 + rnd.nextInt(90))(Vocabulary(rnd.nextInt(Vocabulary.size))).mkString(" ")
+      val lang = if (rnd.nextDouble() < 0.44) "en" else Langs(rnd.nextInt(Langs.size))
+      docs += Doc(i, text, lang, s"src${i % Sources}")
     }
-    day += days
-    val late = if (sent.isEmpty) Nil else
-      (0 until (fresh.size * lateShare).toInt).map { _ =>
-        ev(rnd.nextInt(users), rnd.nextInt(math.max(1, day - 1)),
-          habits(rnd.nextInt(habits.size)))
-      }
-    val resent = if (sent.isEmpty) Nil else
-      (0 until (fresh.size * resendShare).toInt).map { _ =>
-        val old = sent(rnd.nextInt(sent.size))
-        old.copy(value = rnd.nextInt(41) * 0.25)
-      }
-    // one event per key in a file: a file is one micro-batch, and the
-    // upsert picks an arbitrary row among same-key duplicates
-    val out = (fresh ++ late ++ resent).groupBy(_.key).values.map(_.last).toSeq
-      .sortBy(e => (e.ts, e.user, e.habit))
-    sent ++= out
-    out
+    docs.toSeq
   }
 }
-

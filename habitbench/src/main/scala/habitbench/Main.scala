@@ -15,8 +15,7 @@ final case class Done(check: () => Boolean)
 /** One benchmark workload: a closed loop of operations from one client
   * thread over inputs generated from the seed. */
 trait Workload {
-  /** Generates the inputs and preloads the stores under `dir`. Called
-    * several times to time set-up; the last call's state is used. */
+  /** Generates the inputs and preloads the stores under `dir`. */
   def setup(dir: String): Unit
   /** Untimed input staging before each operation. */
   def prepare(): Unit = ()
@@ -50,14 +49,35 @@ final class TraceView(val tracer: Tracer, val attribution: Attribution,
 
   def jobsIn(ss: Seq[Span]): Seq[Int] = ss.flatMap(attribution.jobsIn)
   def stagesIn(ss: Seq[Span]): Seq[StageTotals] = ss.flatMap(attribution.stagesIn)
+
+  /** Structured Streaming batch phases inside `ticks`: the median over
+    * the ticks of each phase's summed milliseconds, batches per tick, and
+    * the share of a tick spent outside addBatch. */
+  def streamingPhases(ticks: Seq[Span]): Map[String, Double] = {
+    val batches = ticks.map(attribution.batchesIn)
+    def phase(k: String): Double =
+      medianOf(batches.map(_.map(_.durations.getOrElse(k, 0L)).sum.toDouble))
+    val overhead = ticks.zip(batches).map { case (s, b) =>
+      (s.seconds * 1000 - b.map(_.durations.getOrElse("addBatch", 0L)).sum) / (s.seconds * 1000)
+    }
+    Map(
+      "streaming.trigger_ms" -> phase("triggerExecution"),
+      "streaming.add_batch_ms" -> phase("addBatch"),
+      "streaming.get_batch_ms" -> phase("getBatch"),
+      "streaming.latest_offset_ms" -> phase("latestOffset"),
+      "streaming.query_planning_ms" -> phase("queryPlanning"),
+      "streaming.wal_commit_ms" -> phase("walCommit"),
+      "streaming.commit_offsets_ms" -> phase("commitOffsets"),
+      "streaming.batches_per_tick" -> batches.map(_.size).sum.toDouble / math.max(1, ticks.size),
+      "streaming.overhead_frac" -> medianOf(overhead))
+  }
 }
 
 object Main {
   final case class Opts(workload: String, seed: Long, seconds: Double,
       trace: Boolean, work: String)
 
-  val SetupReps = 3
-  val Workloads: Seq[String] = Seq("etl_cron", "stream_ingest")
+  val Workloads: Seq[String] = Seq("etl_cron", "ledger_replay")
 
   def parse(args: Array[String]): Opts = {
     val kv = args.grouped(2).collect { case Array(k, v) => k -> v }.toMap
@@ -97,10 +117,6 @@ object Main {
     ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
   }.min
 
-  /** CPU time of the whole JVM: every Spark, JIT and GC thread. */
-  private def cpuNs(): Long = ManagementFactory.getOperatingSystemMXBean
-    .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime
-
   private def log(msg: String): Unit = System.err.println(s"[habitbench] $msg")
 
   def main(args: Array[String]): Unit = {
@@ -118,26 +134,24 @@ object Main {
     }
     val wl: Workload = o.workload match {
       case "etl_cron" => new EtlCron(spark, tracer, o.seed)
-      case "stream_ingest" => new StreamIngest(spark, tracer, o.seed)
+      case "ledger_replay" => new LedgerReplay(spark, tracer, o.seed, s"${o.work}/oracle")
     }
-    val setups = (0 until SetupReps).map { i =>
-      val s = System.nanoTime()
-      wl.setup(s"${o.work}/setup$i")
-      (System.nanoTime() - s) / 1e9
-    }
+    // one set-up per run, to keep a run short; setup_s is steadied by the
+    // median over runs
+    val setupT0 = System.nanoTime()
+    wl.setup(s"${o.work}/setup")
+    val setupS = (System.nanoTime() - setupT0) / 1e9
     var failed = 0L
-    def runOp(i: Int): (Double, Double) = {
+    def runOp(i: Int): Double = {
       wl.prepare()
-      val c = cpuNs()
       val s = System.nanoTime()
       val d = tracer.operation(i)(wl.op())
       val secs = (System.nanoTime() - s) / 1e9
-      val cpu = (cpuNs() - c) / 1e9
       val ok = try d.check() catch {
         case NonFatal(e) => log(s"check failed: $e"); false
       }
       if (!ok) failed += 1
-      (secs, cpu)
+      secs
     }
     val w0 = System.nanoTime()
     (0 until wl.warmupOps).foreach(_ => runOp(-1))
@@ -151,7 +165,6 @@ object Main {
     val lat = mutable.ArrayBuffer.empty[Double]
     val tracedLat = mutable.ArrayBuffer.empty[Double]
     val tracedOps = mutable.Set.empty[Int]
-    val cpu = mutable.ArrayBuffer.empty[Double]
     var attempted = 0L
     val gc0 = gcMs()
     val start = System.nanoTime()
@@ -163,9 +176,8 @@ object Main {
       tracer.enabled = traced
       attempted += 1
       try {
-        val (secs, cpuSecs) = runOp(i)
+        val secs = runOp(i)
         if (traced) { tracedLat += secs; tracedOps += i } else lat += secs
-        cpu += cpuSecs
       } catch {
         case NonFatal(e) => log(s"operation $i failed: $e"); failed += 1
       }
@@ -185,13 +197,11 @@ object Main {
     val values = mutable.Map.empty[String, Double]
     if (!o.trace) {
       values ++= Map(
-        "setup_s" -> (sessionS + Stats.median(setups)),
+        "setup_s" -> (sessionS + setupS),
         "op_s.p50" -> Stats.median(allLat),
-        "op_cpu_s.p50" -> Stats.median(cpu.toSeq),
         "heap_live_mb" -> heapMb)
-      log(f"${o.workload}: session $sessionS%.1f s, set-ups ${setups.map(s => f"$s%.1f").mkString(" ")} s, " +
-        f"${allLat.size} ops in $elapsed%.1f s: ${allLat.map(x => f"$x%.3f").mkString(" ")}, " +
-        s"cpu ${cpu.map(x => f"$x%.3f").mkString(" ")}")
+      log(f"${o.workload}: session $sessionS%.1f s, set-up $setupS%.1f s, " +
+        f"${allLat.size} ops in $elapsed%.1f s: ${allLat.map(x => f"$x%.3f").mkString(" ")}")
     } else {
       Thread.sleep(1000) // let the listener buses drain
       val view = new TraceView(tracer, new Attribution(tracer, sparkL, streamL),

@@ -6,14 +6,13 @@ object Metrics {
   final case class M(name: String, unit: String)
 
   /** Reported on every workload by the untraced run. An "operation" is
-    * the workload's closed-loop unit: a cron tick (etl_cron) or a
-    * cron-started streaming ingest (stream_ingest). No tail percentile
+    * the workload's closed-loop unit: a cron tick (etl_cron) or a pass
+    * over the ledger replays (ledger_replay). No tail percentile
     * is reported: a run holds fewer than 20 operations, and no
     * percentile above the median has ten samples beyond it there. */
   val EndToEnd: Seq[M] = Seq(
     M("setup_s", "s"),
     M("op_s.p50", "s"),
-    M("op_cpu_s.p50", "s"),
     M("heap_live_mb", "MB"))
 
   /** Reported on every workload by the traced run; a layer the workload
@@ -30,14 +29,13 @@ object Metrics {
     M("analytics.rollup_s", "s"), M("analytics.rollup_days", "count"),
     M("plans.plan_s", "s"), M("plans.files_read_frac", "ratio"),
     M("plans.rows_read_per_row_out", "ratio"),
-    M("streaming.start_ms", "ms"), M("streaming.trigger_ms", "ms"),
+    M("streaming.trigger_ms", "ms"),
     M("streaming.add_batch_ms", "ms"), M("streaming.get_batch_ms", "ms"),
     M("streaming.latest_offset_ms", "ms"), M("streaming.query_planning_ms", "ms"),
     M("streaming.wal_commit_ms", "ms"), M("streaming.commit_offsets_ms", "ms"),
-    M("streaming.batches_per_tick", "count"), M("streaming.overhead_frac", "ratio"),
-    M("load.commit_jobs", "count"), M("load.commit_files_written", "count"),
-    M("load.commit_mb_written", "MB"), M("load.view_files", "count")) ++
-    Seq(
+    M("streaming.batches_per_tick", "count"), M("streaming.overhead_frac", "ratio")) ++
+    LedgerReplay.Replays.flatMap(q =>
+      Seq(M(s"ext.replay_s.$q", "s"), M(s"ext.jobs.$q", "count"))) ++ Seq(
     M("spark.jobs_per_op", "count"), M("spark.stages_per_op", "count"),
     M("spark.tasks_per_op", "count"), M("spark.shuffle_mb_per_op", "MB"),
     M("spark.spill_mb", "MB"), M("spark.sched_delay_ms", "ms"),

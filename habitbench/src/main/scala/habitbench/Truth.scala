@@ -14,7 +14,7 @@ final case class Ev(ts: Long, user: String, habit: String, value: Double,
 
 /** Plain-Scala model of what the program must compute, written from the
   * reference semantics rather than from the program's code: the sheet
-  * unpivot, the keyed upsert, the daily rollup and the join view.
+  * unpivot, the keyed upsert and the daily rollup.
   * Workloads compare every Spark result against it. */
 object Truth {
   val Zone: ZoneId = ZoneId.of("America/Chicago")
@@ -93,12 +93,4 @@ object Truth {
 
   def close(a: Double, b: Double): Boolean =
     (a.isNaN && b.isNaN) || math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(a))
-
-  /** The join view `joinViewIngest` maintains: per habit, the row count
-    * and the sum of `round(value * weight * 1e6)` over the store joined
-    * to the user weights. */
-  def joinView(evs: Iterable[Ev], weight: String => Double): Map[String, (Long, Long)] =
-    evs.groupBy(_.habit).map { case (h, g) =>
-      h -> (g.size.toLong, g.map(e => math.round(e.value * weight(e.user) * 1e6)).sum)
-    }
 }

@@ -29,9 +29,17 @@ class BenchSpec extends AnyFunSuite {
   test("generators are deterministic per seed") {
     assert(tab(7, 10).rows == tab(7, 10).rows)
     assert(tab(7, 10).rows != tab(8, 10).rows)
-    val a = new StreamFeed(7, 10); val b = new StreamFeed(7, 10)
-    assert(Seq(a.next(3), a.next()) == Seq(b.next(3), b.next()))
-    assert(new StreamFeed(8, 10).next(3) != new StreamFeed(7, 10).next(3))
+    assert(DocCorpus(7) == DocCorpus(7) && DocCorpus(7) != DocCorpus(8))
+  }
+
+  test("the documents corpus has the sf0.01 shape") {
+    val docs = DocCorpus(3)
+    assert(docs.size == DocCorpus.Size && docs.map(_.id) == (0L until DocCorpus.Size))
+    assert(docs.map(_.source).distinct.size == DocCorpus.Sources)
+    assert(docs.map(_.lang).toSet == Set("en", "zh", "de", "es", "fr"))
+    val dups = docs.filter(_.text.endsWith(" dup"))
+    assert(dups.nonEmpty && dups.forall(d => docs.exists(_.text + " dup" == d.text)))
+    assert(docs.forall(_.text.split(" ").forall((DocCorpus.Vocabulary :+ "dup").contains)))
   }
 
   test("the sheet tab covers the FIXTURES A1 formats and edge rows") {

@@ -15,7 +15,7 @@ import sys
 import time
 
 workload, first, runs = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
-seconds = sys.argv[4] if len(sys.argv) > 4 else "10"
+seconds = sys.argv[4] if len(sys.argv) > 4 else "12"
 trace = sys.argv[5] if len(sys.argv) > 5 else "0"
 values, walls = {}, []
 for seed in range(first, first + runs):
