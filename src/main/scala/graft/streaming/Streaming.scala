@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.analytics.Habits
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Input row for [[Streaming.sessionizeStream]]. */
@@ -65,19 +66,23 @@ object Streaming {
     * coarse mtime granularity (1 s is common) back-to-back writes tie
     * and the tie-break is arbitrary. Calling this after each staged
     * write with strictly increasing `t` makes arrival order explicit
-    * instead of trusting write-time clocks. Hidden files (`_SUCCESS`,
-    * `.crc`) are excluded the way the source itself excludes them. */
-  private def stampStagedBatch(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, t: Long,
+    * instead of trusting write-time clocks. */
+  private def stampStagedBatch(fs: FileSystem, dir: Path, t: Long,
       seen: Set[String]): Set[String] = {
-    val files = fs.listStatus(dir).toSeq.filter(s => s.isFile && {
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    })
+    val files = dataFiles(fs, dir)
     files.filterNot(f => seen(f.getPath.getName))
       .foreach(f => fs.setTimes(f.getPath, t, -1))
     seen ++ files.map(_.getPath.getName)
   }
+
+  /** The data files directly under `dir`: hidden files (`_SUCCESS`,
+    * `.crc`) are excluded the way the file stream source excludes
+    * them. */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter { s =>
+      val n = s.getPath.getName
+      s.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
 
   /** `habit_daily` over a STREAMING frame: tumbling 1-day window with the
     * reference's aggregate set. `endOffset` mirrors the continuous
@@ -304,53 +309,39 @@ object Streaming {
     * that class of bug: any future encoding change that survives the
     * schema branch but lands outside [2000, 2100) fails loudly here
     * instead of corrupting results. */
-  private def withStagedEvents[T](spark: SparkSession, dir: String)(
+  private[graft] def withStagedEvents[T](spark: SparkSession, dir: String)(
       body: (() => DataFrame) => T): T = {
     val prevNanos =
       spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batch = graft.Tables.events(spark, dir)
-    val tsType = spark.read.parquet(s"$dir/events.parquet")
-      .schema("ts").dataType
-    val minYear = batch.agg(min(year(col("ts")))).head().getInt(0)
-    require(minYear >= 2000 && minYear < 2100,
-      s"staged events sanity check failed: min(ts) year $minYear is " +
-        "outside [2000, 2100) — the testdata ts encoding likely changed; " +
-        "update Tables.normalizeEventTs")
-    // Scope the replay to few shuffle partitions: every stateful
-    // streaming operator maintains ONE state-store instance per shuffle
-    // partition per micro-batch (load/commit/snapshot bookkeeping even
-    // for empty partitions), and the stream-stream join keeps FOUR
-    // stores per partition. At 32 session partitions a replay-sized
-    // input pays 32-128 stores of pure overhead per batch; results are
-    // partition-count-independent (the oracle gate proves it — state
-    // keys hash the same rows to fewer partitions). A production
-    // deployment sizes partitions to its rate; this touches only the
-    // one-shot replay scope. The conf is read at query START, so
-    // restoring it after the replay cannot affect the running query.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", tsType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val staged = java.nio.file.Files.createTempDirectory("graft_stream_")
     try {
-      java.nio.file.Files.createSymbolicLink(
-        staged.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
-      body(() => graft.Tables.normalizeEventTs(
-        spark.readStream.schema(schema).parquet(staged.toString)))
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevNanos match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None =>
-          spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+      val batch = graft.Tables.events(spark, dir)
+      val tsType = spark.read.parquet(s"$dir/events.parquet")
+        .schema("ts").dataType
+      val minYear = batch.agg(min(year(col("ts")))).head().getInt(0)
+      require(minYear >= 2000 && minYear < 2100,
+        s"staged events sanity check failed: min(ts) year $minYear is " +
+          "outside [2000, 2100) — the testdata ts encoding likely " +
+          "changed; update Tables.normalizeEventTs")
+      val schema = StructType(Seq(
+        StructField("event_id", LongType), StructField("ts", tsType),
+        StructField("user_id", LongType),
+        StructField("event_type", StringType),
+        StructField("value", DoubleType), StructField("props", StringType)))
+      val staged = java.nio.file.Files.createTempDirectory("graft_stream_")
+      try withStreamShuffle(spark) {
+        java.nio.file.Files.createSymbolicLink(
+          staged.resolve("events.parquet"),
+          java.nio.file.Paths.get(s"$dir/events.parquet"))
+        body(() => graft.Tables.normalizeEventTs(
+          spark.readStream.schema(schema).parquet(staged.toString)))
+      } finally {
+        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
+        java.nio.file.Files.deleteIfExists(staged)
       }
-      java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-      java.nio.file.Files.deleteIfExists(staged)
+    } finally prevNanos match {
+      case Some(v) => spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
+      case None => spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
     }
   }
 
@@ -373,14 +364,193 @@ object Streaming {
     * shuffle through 4 partitions is 4 giant spilling tasks). */
   private lazy val streamShuffleParts: String =
     sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "4").trim
-  private def awaitOneShot(
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      queryName: String): Unit =
+
+  /** Run `body` with `spark.sql.shuffle.partitions` pinned to
+    * [[streamShuffleParts]], restoring the prior value afterwards — on
+    * failure too. This is the one place a replay scopes the conf:
+    * every stateful streaming operator maintains ONE state-store
+    * instance per shuffle partition per micro-batch (load/commit/
+    * snapshot bookkeeping even for empty partitions), and the
+    * stream-stream join keeps FOUR stores per partition. At 32 session
+    * partitions a replay-sized input pays 32-128 stores of pure
+    * overhead per batch; results are partition-count-independent (the
+    * oracle gate proves it — state keys hash the same rows to fewer
+    * partitions). A production deployment sizes partitions to its
+    * rate; this touches only the one-shot replay scope. The conf is
+    * read at query START, so restoring it after the replay cannot
+    * affect the running query. */
+  private def withStreamShuffle[T](spark: SparkSession)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  private def awaitOneShot(q: StreamingQuery, queryName: String): Unit =
     if (!q.awaitTermination(oneShotTimeoutMs)) {
       q.stop()
       throw new RuntimeException(s"stream $queryName did not terminate " +
         s"within ${oneShotTimeoutMs / 1000}s")
     }
+
+  /** The sink every ingest ledger shares: a `foreachBatch` stream
+    * checkpointed under `checkpointDir` that hands each micro-batch and
+    * its id to `tick`. Ticks write their state OVERWRITE into
+    * `batch=<id>` subdirs, so a batch replayed after a crash rewrites
+    * its own state and the ledger never double-counts. The default
+    * `AvailableNow` trigger makes each start one cron tick: drain what
+    * arrived, then stop. A named stream runs every tick under
+    * [[timedTick]]'s slow-tick telemetry. */
+  private def ledgerStream(input: DataFrame, checkpointDir: String,
+      queryName: String = "", trigger: Trigger = Trigger.AvailableNow())(
+      tick: (DataFrame, Long) => Unit): StreamingQuery =
+    named(input.writeStream, queryName)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (queryName.isEmpty) tick(batch, batchId)
+        else timedTick(queryName, batchId)(tick(batch, batchId))
+      }
+      .trigger(trigger)
+      .start()
+
+  /** The one-shot replay every `*AvailableNow` ledger gate shares:
+    * stage `ticks` under `workDir/staged` one file per tick
+    * ([[stageBatches]]), then [[replayStaged]]. */
+  private[graft] def replayTicks[T](spark: SparkSession, workDir: String,
+      queryName: String, ticks: Seq[DataFrame])(
+      ingest: DataFrame => StreamingQuery)(readBack: => T): T =
+    replayStaged(spark, workDir, queryName,
+      stageBatches(spark, s"$workDir/staged", ticks))(ingest)(readBack)
+
+  /** Stream the files already staged under `workDir/staged` one per
+    * trigger (so each is one tick, in mtime order) through `ingest`
+    * under the replay shuffle pin, wait for the bounded stream to
+    * drain, and return `readBack`, built under the same pin. */
+  private def replayStaged[T](spark: SparkSession, workDir: String,
+      queryName: String, schema: StructType)(
+      ingest: DataFrame => StreamingQuery)(readBack: => T): T =
+    withStreamShuffle(spark) {
+      awaitOneShot(ingest(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")),
+        queryName)
+      readBack
+    }
+
+  /** Stage `batches` as one flat parquet directory, one file per
+    * batch, each stamped with a strictly later mtime, so a
+    * `maxFilesPerTrigger = 1` replay processes them in list order.
+    *
+    * r17: ONE tick-tagged job stages every batch — the K sequential
+    * `coalesce(1)` appends each paid a full job (scheduling + source
+    * scan) back-to-back, a pure fixed cost across the ~20 staged
+    * replays. The union's branches scan concurrently, the partitioned
+    * write strips the tag from the file contents, and the partition
+    * dirs then flatten to the source-visible flat files (rename is
+    * metadata-only). A batch with ZERO rows writes no partition dir;
+    * the fallback writes its empty file the old way so tick numbering
+    * never silently shifts. */
+  private def stageBatches(spark: SparkSession, staging: String,
+      batches: Seq[DataFrame]): StructType = {
+    require(batches.nonEmpty,
+      s"stageBatches: no ticks to stage under $staging — a replay needs " +
+        "at least one batch")
+    val p = new Path(staging)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val t0 = System.currentTimeMillis()
+    val tmp = new Path(p, "_graft_stage_tmp")
+    // per-branch coalesce(1), NOT a tick-keyed repartition: each
+    // branch collapses to one task (exactly the work the old
+    // per-batch coalesce(1) write did), the K tasks run CONCURRENTLY
+    // in one job, and no exchange ever moves the staged payload
+    batches.zipWithIndex
+      .map { case (b, i) =>
+        b.withColumn("__graft_tick", lit(i)).coalesce(1) }
+      .reduce(_ unionByName _)
+      .write.partitionBy("__graft_tick").parquet(tmp.toString)
+    batches.indices.foreach { i =>
+      val sub = new Path(tmp, s"__graft_tick=$i")
+      val files = if (fs.exists(sub)) dataFiles(fs, sub) else Nil
+      if (files.isEmpty) {
+        // empty batch: the partitioned write emits no dir — keep the
+        // tick by writing its empty file the sequential way (stamp
+        // only the files this write created: earlier ticks' files
+        // already carry their own times)
+        val before = fs.listStatus(p).toSeq.filter(_.isFile)
+          .map(_.getPath.getName).toSet
+        batches(i).coalesce(1).write.mode("append").parquet(staging)
+        stampStagedBatch(fs, p, t0 + i * 60000L, before)
+      } else files.zipWithIndex.foreach { case (f, j) =>
+        val dst = new Path(p, f"b$i%03d-$j%03d.parquet")
+        require(fs.rename(f.getPath, dst),
+          s"stageBatches: rename ${f.getPath} -> $dst failed")
+        fs.setTimes(dst, t0 + i * 60000L, -1)
+      }
+    }
+    fs.delete(tmp, true)
+    spark.read.parquet(staging).schema
+  }
+
+  /** Split `df` into `n` replay ticks by `pmod(hash(key), n)`. Not
+    * `abs(hash) % n`: under ANSI mode `abs(Int.MinValue)` raises
+    * ARITHMETIC_OVERFLOW, so a key hashing there would fail the replay
+    * (and without ANSI, `Int.MinValue % n` is negative for odd `n`, so
+    * the row would land in no tick). For `n = 2` the split equals the
+    * old parity split on every other key. */
+  private def hashTicks(df: DataFrame, key: String, n: Int): Seq[DataFrame] =
+    (0 until n).map(i => df.filter(pmod(hash(col(key)), lit(n)) === i))
+
+  /** Stage `df` under `workDir/staged` as `n` files range-split on `c`
+    * and stamp their mtimes strictly increasing in part-file name
+    * order. One write produces all the files, so their mtimes tie; the
+    * range partition index ascends with `c`, so the stamp makes replay
+    * arrival order the ingest order by construction, not by tie-break
+    * luck. */
+  private def stageRanges(spark: SparkSession, df: DataFrame, n: Int,
+      c: String, workDir: String): Unit = {
+    val staging = new Path(s"$workDir/staged")
+    df.repartitionByRange(n, col(c)).write.parquet(staging.toString)
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val t0 = System.currentTimeMillis()
+    dataFiles(fs, staging).sortBy(_.getPath.getName).zipWithIndex
+      .foreach { case (f, i) => fs.setTimes(f.getPath, t0 + i * 60000L, -1) }
+  }
+
+  /** The `batch=<id>` subdirs under `root` other than tick `batchId`'s
+    * own: the prior ticks' state. A replayed tick's own leftovers (a
+    * crash after one state write, before the next) never count as
+    * history, or its rows would pair against themselves. */
+  private def priorDirs(spark: SparkSession, root: String,
+      batchId: Long): Array[String] = {
+    val p = new Path(root)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(p))
+      fs.listStatus(p).map(_.getPath.getName)
+        .filter(d => d.startsWith("batch=") && d != s"batch=$batchId")
+        .map(d => s"$root/$d")
+    else Array.empty[String]
+  }
+
+  /** The newest `batch=<id>` subdir under `root` with id below
+    * `before`, if any. */
+  private def latestBatchDir(spark: SparkSession, root: String,
+      before: Long = Long.MaxValue): Option[String] = {
+    val p = new Path(root)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p)
+      .map(_.getPath.getName).filter(_.startsWith("batch="))
+      .map(_.stripPrefix("batch=").toLong).filter(_ < before)
+      .maxOption.map(b => s"$root/batch=$b")
+  }
+
+  /** The label snapshot a cluster-label tick folds from: the newest
+    * `labels/batch=<id>` STRICTLY older than the tick, so a replayed
+    * tick re-reads the same prior state and rewrites its own snapshot
+    * byte-identically. */
+  private def priorLabels(spark: SparkSession, labelsPath: String,
+      batchId: Long, ledger: String): DataFrame = {
+    val snap = latestBatchDir(spark, labelsPath, before = batchId)
+    require(snap.nonEmpty, s"$ledger ledger: earlier ticks exist but no " +
+      s"label snapshot precedes batch $batchId")
+    spark.read.parquet(snap.get)
+  }
 
   /** One-shot (`AvailableNow`) replay of [[asofStream]] over the events
     * table for the oracle gate; the single batch makes the replay
@@ -482,7 +652,7 @@ object Streaming {
     // (strictly increasing mtimes) — write-time mtimes can tie under
     // coarse filesystem granularity and would let a sentinel batch
     // arrive before the data it must flush
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
+    val stagingPath = new Path(staging)
     val sfs = stagingPath.getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val t0 = System.currentTimeMillis()
@@ -492,9 +662,7 @@ object Streaming {
     seen = stampStagedBatch(sfs, stagingPath, t0 + 60000, seen)
     sentinelDf(401).coalesce(1).write.mode("append").parquet(staging)
     stampStagedBatch(sfs, stagingPath, t0 + 120000, seen)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
+    withStreamShuffle(spark) {
       def side(habit: String) = spark.readStream.schema(base.schema)
         .option("maxFilesPerTrigger", "1").parquet(staging)
         .filter(col("event_type") === habit)
@@ -510,7 +678,7 @@ object Streaming {
       spark.table(queryName).filter(
         coalesce(col("l_event_id"), lit(Long.MaxValue)) >= 0 &&
           coalesce(col("r_event_id"), lit(Long.MaxValue)) >= 0)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Incremental ETL sink: each micro-batch upserts into the
@@ -531,26 +699,17 @@ object Streaming {
   def upsertStream(events: DataFrame, storePath: String,
       checkpointDir: String,
       keys: Seq[String] = graft.load.Merge.EventKeys)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         _: Long) =>
-          val df = batch.toDF()
-          val sp = df.sparkSession
-          // Hadoop FileSystem, NOT java.io.File: the store may live on
-          // HDFS/S3, where a local-file exists() is always false and the
-          // bootstrap branch's overwrite would wipe the store every tick
-          val p = new org.apache.hadoop.fs.Path(storePath)
-          val exists = p.getFileSystem(sp.sessionState.newHadoopConf())
-            .exists(p)
-          if (exists) graft.load.EventStore.upsert(sp, storePath, df, keys)
-          else graft.load.EventStore.write(df, storePath)
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(events, checkpointDir) { (df, _) =>
+      val sp = df.sparkSession
+      // Hadoop FileSystem, NOT java.io.File: the store may live on
+      // HDFS/S3, where a local-file exists() is always false and the
+      // bootstrap branch's overwrite would wipe the store every tick
+      val p = new Path(storePath)
+      val exists = p.getFileSystem(sp.sessionState.newHadoopConf()).exists(p)
+      if (exists) graft.load.EventStore.upsert(sp, storePath, df, keys)
+      else graft.load.EventStore.write(df, storePath)
+    }
 
   /** Streaming CDC apply: each micro-batch of an insert/update/delete
     * change feed merges into the parquet sink via `Merge.applyCdc` —
@@ -566,36 +725,27 @@ object Streaming {
     * partitions exactly like [[upsertStream]]'s store. */
   def cdcStream(changes: DataFrame, sinkPath: String, checkpointDir: String,
       keys: Seq[String], seqCol: String, opCol: String = "op")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         _: Long) =>
-          val df = batch.toDF()
-          val sp = df.sparkSession
-          val p = new org.apache.hadoop.fs.Path(sinkPath)
-          val fs = p.getFileSystem(sp.sessionState.newHadoopConf())
-          val current =
-            if (fs.exists(p)) sp.read.parquet(sinkPath)
-            else sp.createDataFrame(
-              sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              org.apache.spark.sql.types.StructType(
-                df.drop(seqCol, opCol).schema))
-          val merged = graft.load.Merge
-            .applyCdc(current, df, keys, seqCol, opCol)
-            // the rewrite reads the files it replaces — cut lineage
-            // before the overwrite, same guard as EventStore.upsert
-            .localCheckpoint(true)
-          merged.write.mode("overwrite").parquet(sinkPath)
-          // release the tick's pin — clearCache does not cover
-          // checkpoint blocks, and a long-running stream must not
-          // accumulate one batch-sized pin per commit
-          graft.ext.Pinned.release(merged)
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(changes, checkpointDir) { (df, _) =>
+      val sp = df.sparkSession
+      val p = new Path(sinkPath)
+      val fs = p.getFileSystem(sp.sessionState.newHadoopConf())
+      val current =
+        if (fs.exists(p)) sp.read.parquet(sinkPath)
+        else sp.createDataFrame(
+          sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(df.drop(seqCol, opCol).schema))
+      val merged = graft.load.Merge
+        .applyCdc(current, df, keys, seqCol, opCol)
+        // the rewrite reads the files it replaces — cut lineage
+        // before the overwrite, same guard as EventStore.upsert
+        .localCheckpoint(true)
+      merged.write.mode("overwrite").parquet(sinkPath)
+      // release the tick's pin — clearCache does not cover
+      // checkpoint blocks, and a long-running stream must not
+      // accumulate one batch-sized pin per commit
+      graft.ext.Pinned.release(merged)
+    }
 
   /** Streaming near-duplicate detection: each micro-batch of documents
     * is checked against the accumulated corpus with
@@ -621,50 +771,28 @@ object Streaming {
   def dedupStreamIncremental(docs: DataFrame, corpusPath: String,
       pairsPath: String, checkpointDir: String, idCol: String,
       textCol: String, threshold: Double = 0.5)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val sp = batch.sparkSession
-          val p = new org.apache.hadoop.fs.Path(corpusPath)
-          val fs = p.getFileSystem(sp.sessionState.newHadoopConf())
-          // pin THROUGH the corpus state write (r17): one job where
-          // the tick paid a checkpoint pin AND a corpus copy. The
-          // prior-dir exclusion below keeps replay safe: the corpus is
-          // every PRIOR tick's subdir; this tick's own replayed
-          // leftovers (crash after corpus write, before ledger write)
-          // must not count as "existing" or its docs would pair
-          // against themselves.
-          batch.toDF().write.mode("overwrite")
-            .parquet(s"$corpusPath/batch=$batchId")
-          val df = sp.read.parquet(s"$corpusPath/batch=$batchId")
-          val prior =
-            if (fs.exists(p))
-              fs.listStatus(p).map(_.getPath.getName)
-                .filter(d => d.startsWith("batch=") &&
-                  d != s"batch=$batchId")
-                .map(d => s"$corpusPath/$d")
-            else Array.empty[String]
-          val pairs =
-            if (prior.nonEmpty)
-              graft.ext.Dedup.minhashDupPairsIncremental(
-                df, sp.read.parquet(prior.toSeq: _*), idCol, textCol,
-                threshold)
-            else
-              // bootstrap tick: no prior corpus — batch-internal dups
-              graft.ext.Dedup.minhashDupPairs(df, idCol, textCol, threshold)
-          pairs.write.mode("overwrite")
-            .parquet(s"$pairsPath/batch=$batchId")
-          // release the pair-finder's persisted shingle/band relations
-          // (its documented contract: the caller clears) — without this
-          // a long-running stream accumulates one persisted set per tick
-          sp.catalog.clearCache()
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(docs, checkpointDir) { (batch, batchId) =>
+      val sp = batch.sparkSession
+      // pin THROUGH the corpus state write (r17): one job where the
+      // tick paid a checkpoint pin AND a corpus copy; replay-safe
+      // because priorDirs excludes this tick's own subdir
+      batch.write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
+      val df = sp.read.parquet(s"$corpusPath/batch=$batchId")
+      val prior = priorDirs(sp, corpusPath, batchId)
+      val pairs =
+        if (prior.nonEmpty)
+          graft.ext.Dedup.minhashDupPairsIncremental(
+            df, sp.read.parquet(prior.toSeq: _*), idCol, textCol, threshold)
+        else
+          // bootstrap tick: no prior corpus — batch-internal dups
+          graft.ext.Dedup.minhashDupPairs(df, idCol, textCol, threshold)
+      pairs.write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
+      // release the pair-finder's persisted shingle/band relations
+      // (its documented contract: the caller clears) — without this
+      // a long-running stream accumulates one persisted set per tick
+      sp.catalog.clearCache()
+    }
 
   /** Run [[habitDailyStream]] over the driver's `events` parquet as a
     * bounded stream (Trigger.AvailableNow → memory sink, complete mode)
@@ -735,22 +863,18 @@ object Streaming {
       checkpointDir: String, queryName: String,
       keys: Seq[String] = graft.load.Merge.EventKeys,
       trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        val s = df.sparkSession
-        import graft.load.VersionedStore
-        val done = VersionedStore.maxCommitted(s, storePath, "streamBatch")
-        if (done.forall(_ < id)) {
-          val meta = Map("streamBatch" -> id.toString)
-          if (VersionedStore.versions(s, storePath).isEmpty)
-            VersionedStore.create(df, storePath, meta = meta)
-          else VersionedStore.upsert(s, storePath, df, keys, meta = meta)
-        }
-        ()
-      }.start()
+      : StreamingQuery =
+    ledgerStream(events, checkpointDir, queryName, trigger) { (df, id) =>
+      val s = df.sparkSession
+      import graft.load.VersionedStore
+      val done = VersionedStore.maxCommitted(s, storePath, "streamBatch")
+      if (done.forall(_ < id)) {
+        val meta = Map("streamBatch" -> id.toString)
+        if (VersionedStore.versions(s, storePath).isEmpty)
+          VersionedStore.create(df, storePath, meta = meta)
+        else VersionedStore.upsert(s, storePath, df, keys, meta = meta)
+      }
+    }
 
   /** One-shot gate replay of the BACKFILL → STREAMING HANDOFF — the
     * standard bootstrap pattern for a new pipeline: half the history
@@ -763,13 +887,12 @@ object Streaming {
   def backfillHandoffAvailableNow(spark: SparkSession, dir: String,
       storePath: String, checkpointDir: String, queryName: String): Unit =
     withStagedEvents(spark, dir) { mkStream =>
-      def half(df: DataFrame, side: Int): DataFrame =
-        df.filter(abs(hash(col("event_id"))) % 2 === side)
-      val backfill = half(graft.Tables.events(spark, dir), 0)
+      val backfill =
+        hashTicks(graft.Tables.events(spark, dir), "event_id", 2)(0)
         .withColumnRenamed("user_id", "user_email")
         .withColumnRenamed("event_type", "habit")
       graft.load.VersionedStore.create(backfill, storePath)
-      val stream = half(mkStream(), 1)
+      val stream = hashTicks(mkStream(), "event_id", 2)(1)
         .withColumnRenamed("user_id", "user_email")
         .withColumnRenamed("event_type", "habit")
       awaitOneShot(
@@ -777,33 +900,7 @@ object Streaming {
         queryName)
     }
 
-  /** Streaming JOIN-view maintenance — the lakehouse "continuous
-    * aggregate" closed over the store's own change feed: every
-    * micro-batch (1) commits to the fact store exactly-once (committed
-    * batch-id dedup, as [[versionedIngest]]), (2) derives that
-    * commit's change feed from the manifest diff, and (3) advances the
-    * maintained fact⋈dim view with
-    * [[graft.load.IncrementalView.applyJoinDelta]] — publishing each
-    * view generation under `viewDir/v<version>`, so the VIEW time-
-    * travels in lockstep with the store.
-    *
-    * Per-tick cost tracks the BATCH: one scoped store commit, one
-    * commit-sized change feed (the manifest diff only scans rewritten
-    * days), one commit×dim delta join, one dims-keyed merge of the
-    * (dims-cardinality-sized) view. The fact store is never rescanned.
-    *
-    * `factCols` are the fact-side columns `dims`/`contribE6` read
-    * (beyond `joinKeys`); `dim` is the static dimension relation —
-    * a changing dim side composes through the same `applyJoinDelta`
-    * zB leg from its own store's feed. */
-  /** Per-tick telemetry for the foreachBatch maintenance streams: wall
-    * time of the tick body and the scheduler GAP since the previous
-    * tick finished. A tick crossing `SlowTickMs` logs one structured
-    * stderr line — the attribution a tail-latency outlier needs (is
-    * the stall inside a tick's commit work, or between ticks in the
-    * streaming scheduler/file-source?) without touching steady-state
-    * cost. BENCH_FULL's per-run `spread` flags WHICH query has a tail;
-    * this names WHERE in the tick cycle it sat. */
+  // end time of each query's previous tick, for timedTick's gap
   private val lastTickEnd =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private val SlowTickMs = 10000L
@@ -887,8 +984,6 @@ object Streaming {
         stages.map { case (n, ms) => s"$n=${ms}ms" }.mkString(" "))
       ()
     }
-  /** Wall-clock a stage inside an instrumented tick — the shared
-    * helper behind the [[recordTickStages]] stage splits. */
   /** The occupancy guard with an availability escape hatch: the
     * default HARD-FAILS a degraded tick (a boilerplate-skewed corpus
     * must not surface as a mystery slowdown), but because ledger and
@@ -947,7 +1042,15 @@ object Streaming {
     outcomes.collectFirst { case (_, _, Left(e)) => e }.foreach(throw _)
     outcomes.map { case (n, ms, _) => (n, ms) }
   }
-  private[graft] def timedTick[T](queryName: String, batchId: Long)(
+  /** Per-tick telemetry for the foreachBatch maintenance streams: wall
+    * time of the tick body and the scheduler GAP since the previous
+    * tick finished. A tick crossing `SlowTickMs` logs one structured
+    * stderr line — the attribution a tail-latency outlier needs (is
+    * the stall inside a tick's commit work, or between ticks in the
+    * streaming scheduler/file-source?) without touching steady-state
+    * cost. BENCH_FULL's per-run `spread` flags WHICH query has a tail;
+    * this names WHERE in the tick cycle it sat. */
+  private def timedTick[T](queryName: String, batchId: Long)(
       body: => T): T = {
     val start = System.nanoTime()
     val gapMs = Option(lastTickEnd.get(queryName))
@@ -961,83 +1064,97 @@ object Streaming {
     out
   }
 
+  /** Streaming JOIN-view maintenance — the lakehouse "continuous
+    * aggregate" closed over the store's own change feed: every
+    * micro-batch (1) commits to the fact store exactly-once (committed
+    * batch-id dedup, as [[versionedIngest]]), (2) derives that
+    * commit's change feed from the manifest diff, and (3) advances the
+    * maintained fact⋈dim view with
+    * [[graft.load.IncrementalView.applyJoinDelta]] — publishing each
+    * view generation under `viewDir/v<version>`, so the VIEW time-
+    * travels in lockstep with the store.
+    *
+    * Per-tick cost tracks the BATCH: one scoped store commit, one
+    * commit-sized change feed (the manifest diff only scans rewritten
+    * days), one commit×dim delta join, one dims-keyed merge of the
+    * (dims-cardinality-sized) view. The fact store is never rescanned.
+    *
+    * `factCols` are the fact-side columns `dims`/`contribE6` read
+    * (beyond `joinKeys`); `dim` is the static dimension relation —
+    * a changing dim side composes through the same `applyJoinDelta`
+    * zB leg from its own store's feed. */
   def joinViewIngest(events: DataFrame, storePath: String, viewDir: String,
       dim: DataFrame, joinKeys: Seq[String], factCols: Seq[String],
       dims: Seq[String], contribE6: org.apache.spark.sql.Column,
       checkpointDir: String, queryName: String,
       keys: Seq[String] = graft.load.Merge.EventKeys,
       trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, id: Long) => timedTick(queryName, id) {
-        val s = df.sparkSession
-        import graft.load.{IncrementalView, VersionedStore}
-        val done = VersionedStore.maxCommitted(s, storePath, "streamBatch")
-        if (done.forall(_ < id)) {
-          // pin the micro-batch once: the commit path reads it at least
-          // twice (touched-day probe + merge shuffle) and each read
-          // would otherwise re-run the source scan
-          val batch = df.toDF().localCheckpoint(true)
-          val meta = Map("streamBatch" -> id.toString)
-          val prev = VersionedStore.versions(s, storePath).lastOption
-          val v = prev match {
-            case None => VersionedStore.create(batch, storePath, meta = meta)
-            case Some(_) =>
-              VersionedStore.upsert(s, storePath, batch, keys, meta = meta)
-          }
-          // advance from the newest view generation that actually
-          // COMMITTED, not blindly from v−1: a crash between the
-          // manifest publish and the view write leaves a version
-          // without its view, and the delta rule telescopes across
-          // commits — the next tick heals the gap by diffing q → v in
-          // one step. Bare directory existence is NOT commitment: a
-          // job that died mid-write leaves v<q> created but partial,
-          // and resuming from it would read garbage forever — so a
-          // generation only counts once the writer's job-commit marker
-          // (_SUCCESS) landed
-          val fs = new org.apache.hadoop.fs.Path(viewDir).getFileSystem(
-            s.sparkContext.hadoopConfiguration)
-          val lastView = (v - 1 to 0 by -1).find(q =>
-            fs.exists(
-              new org.apache.hadoop.fs.Path(s"$viewDir/v$q/_SUCCESS")))
-          // the advance's change feed as a signed z-relation; with no
-          // prior view generation, the whole snapshot is the insert set
-          val zA = lastView match {
-            case None => VersionedStore.snapshot(s, storePath, Some(v))
-              .select((joinKeys ++ factCols).map(col): _*)
-              .withColumn("_sign", lit(1L))
-            case Some(q) =>
-              val cdf = VersionedStore.changes(s, storePath, q, v, keys)
-              val plain = cdf.columns.toSet
-              // a factCol that is a store KEY rides the feed unsuffixed
-              // (keys cannot change under upsert); payload columns come
-              // as the _old/_new pair zRelation collapses
-              IncrementalView.zRelation(cdf.select(
-                joinKeys.map(col) ++ Seq(col("op")) ++
-                  factCols.flatMap(c =>
-                    if (plain(c)) Seq(col(c))
-                    else Seq(col(s"${c}_old"), col(s"${c}_new"))): _*))
-          }
-          val viewPrev = lastView match {
-            case None => zA.limit(0).join(dim.limit(0), joinKeys)
-              .groupBy(dims.map(col): _*)
-              .agg(count(lit(1)).as("n"), sum(lit(0L)).as("sum_e6"))
-              .select(dims.map(col) :+ col("n") :+ col("sum_e6"): _*)
-            case Some(q) => s.read.parquet(s"$viewDir/v$q")
-          }
-          // static dim ⇒ the A_old⋈ΔB leg is empty by construction
-          IncrementalView.applyJoinDelta(viewPrev, zA, dim,
-              zA.limit(0).drop("_sign"),
-              dim.limit(0).withColumn("_sign", lit(1L)),
-              joinKeys, dims, contribE6)
-            .coalesce(1)
-            .write.mode("errorifexists").parquet(s"$viewDir/v$v")
-          graft.ext.Pinned.release(batch)
+      : StreamingQuery =
+    ledgerStream(events, checkpointDir, queryName, trigger) { (df, id) =>
+      val s = df.sparkSession
+      import graft.load.{IncrementalView, VersionedStore}
+      val done = VersionedStore.maxCommitted(s, storePath, "streamBatch")
+      if (done.forall(_ < id)) {
+        // pin the micro-batch once: the commit path reads it at least
+        // twice (touched-day probe + merge shuffle) and each read
+        // would otherwise re-run the source scan
+        val batch = df.localCheckpoint(true)
+        val meta = Map("streamBatch" -> id.toString)
+        val prev = VersionedStore.versions(s, storePath).lastOption
+        val v = prev match {
+          case None => VersionedStore.create(batch, storePath, meta = meta)
+          case Some(_) =>
+            VersionedStore.upsert(s, storePath, batch, keys, meta = meta)
         }
-        ()
-      } }.start()
+        // advance from the newest view generation that actually
+        // COMMITTED, not blindly from v−1: a crash between the
+        // manifest publish and the view write leaves a version
+        // without its view, and the delta rule telescopes across
+        // commits — the next tick heals the gap by diffing q → v in
+        // one step. Bare directory existence is NOT commitment: a
+        // job that died mid-write leaves v<q> created but partial,
+        // and resuming from it would read garbage forever — so a
+        // generation only counts once the writer's job-commit marker
+        // (_SUCCESS) landed
+        val fs = new Path(viewDir).getFileSystem(
+          s.sparkContext.hadoopConfiguration)
+        val lastView = (v - 1 to 0 by -1).find(q =>
+          fs.exists(new Path(s"$viewDir/v$q/_SUCCESS")))
+        // the advance's change feed as a signed z-relation; with no
+        // prior view generation, the whole snapshot is the insert set
+        val zA = lastView match {
+          case None => VersionedStore.snapshot(s, storePath, Some(v))
+            .select((joinKeys ++ factCols).map(col): _*)
+            .withColumn("_sign", lit(1L))
+          case Some(q) =>
+            val cdf = VersionedStore.changes(s, storePath, q, v, keys)
+            val plain = cdf.columns.toSet
+            // a factCol that is a store KEY rides the feed unsuffixed
+            // (keys cannot change under upsert); payload columns come
+            // as the _old/_new pair zRelation collapses
+            IncrementalView.zRelation(cdf.select(
+              joinKeys.map(col) ++ Seq(col("op")) ++
+                factCols.flatMap(c =>
+                  if (plain(c)) Seq(col(c))
+                  else Seq(col(s"${c}_old"), col(s"${c}_new"))): _*))
+        }
+        val viewPrev = lastView match {
+          case None => zA.limit(0).join(dim.limit(0), joinKeys)
+            .groupBy(dims.map(col): _*)
+            .agg(count(lit(1)).as("n"), sum(lit(0L)).as("sum_e6"))
+            .select(dims.map(col) :+ col("n") :+ col("sum_e6"): _*)
+          case Some(q) => s.read.parquet(s"$viewDir/v$q")
+        }
+        // static dim ⇒ the A_old⋈ΔB leg is empty by construction
+        IncrementalView.applyJoinDelta(viewPrev, zA, dim,
+            zA.limit(0).drop("_sign"),
+            dim.limit(0).withColumn("_sign", lit(1L)),
+            joinKeys, dims, contribE6)
+          .coalesce(1)
+          .write.mode("errorifexists").parquet(s"$viewDir/v$v")
+        graft.ext.Pinned.release(batch)
+      }
+    }
 
   /** TWO-SIDED streaming JOIN-view maintenance — [[joinViewIngest]]
     * with a dimension that CHANGES: each micro-batch (1) commits the
@@ -1073,95 +1190,91 @@ object Streaming {
       keys: Seq[String] = graft.load.Merge.EventKeys,
       dimKeys: Seq[String] = Seq("user_email"),
       trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, id: Long) => timedTick(queryName, id) {
-        val s = df.sparkSession
-        import graft.load.{IncrementalView, VersionedStore}
-        val done = VersionedStore.maxCommitted(s, factStore, "streamBatch")
-        if (done.forall(_ < id)) {
-          val meta = Map("streamBatch" -> id.toString)
-          // the two commits land in DIFFERENT stores (disjoint paths,
-          // no shared driver state) — overlap them (r16, guide §2.6);
-          // the view advance below depends on both and stays after
-          // the join
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val vFf = Future {
-            if (VersionedStore.versions(s, factStore).isEmpty)
-              VersionedStore.create(df, factStore, meta = meta)
-            else VersionedStore.upsert(s, factStore, df, keys, meta = meta)
-          }
-          val vD = dimForBatch(id) match {
-            case Some(dimBatch) =>
-              if (VersionedStore.versions(s, dimStore).isEmpty)
-                VersionedStore.create(dimBatch, dimStore, meta = meta,
-                  sortCols = dimKeys)
-              else VersionedStore.upsert(s, dimStore, dimBatch, dimKeys,
-                meta = meta, sortCols = dimKeys)
-            case None =>
-              val vs = VersionedStore.versions(s, dimStore)
-              require(vs.nonEmpty, "joinViewIngestTwoSided: dimForBatch " +
-                "must supply the bootstrap dim for the first batch")
-              vs.last
-          }
-          val vF = Await.result(vFf, Duration.Inf)
-          val fs = new org.apache.hadoop.fs.Path(viewDir).getFileSystem(
-            s.sparkContext.hadoopConfiguration)
-          val gen = "v(\\d+)_(\\d+)".r
-          val viewPath = new org.apache.hadoop.fs.Path(viewDir)
-          val lastView =
-            if (!fs.exists(viewPath)) None
-            else fs.listStatus(viewPath).toSeq.filter(_.isDirectory)
-              .map(_.getPath.getName)
-              .collect { case gen(f, d) if fs.exists(
-                  new org.apache.hadoop.fs.Path(s"$viewDir/v${f}_$d/_SUCCESS"))
-                => (f.toInt, d.toInt) }
-              .sorted.lastOption
-          val factProj = (joinKeys ++ factCols).map(col)
-          val dimProj = (joinKeys ++ dimCols).map(col)
-          val bNew = VersionedStore.snapshot(s, dimStore, Some(vD))
-            .select(dimProj: _*)
-          def feedZ(store: String, from: Int, to: Int, ks: Seq[String],
-              cols: Seq[String]): DataFrame = {
-            val cdf = VersionedStore.changes(s, store, from, to, ks)
-            val plain = cdf.columns.toSet
-            IncrementalView.zRelation(cdf.select(
-              joinKeys.map(col) ++ Seq(col("op")) ++
-                cols.flatMap(c =>
-                  if (plain(c)) Seq(col(c))
-                  else Seq(col(s"${c}_old"), col(s"${c}_new"))): _*))
-          }
-          val (viewPrev, zA, zB, aOld) = lastView match {
-            case None =>
-              val empty = VersionedStore.snapshot(s, factStore, Some(vF))
-                .select(factProj: _*).limit(0)
-              (empty.join(bNew.limit(0), joinKeys)
-                  .groupBy(dims.map(col): _*)
-                  .agg(count(lit(1)).as("n"), sum(lit(0L)).as("sum_e6"))
-                  .select(dims.map(col) :+ col("n") :+ col("sum_e6"): _*),
-                VersionedStore.snapshot(s, factStore, Some(vF))
-                  .select(factProj: _*).withColumn("_sign", lit(1L)),
-                bNew.limit(0).withColumn("_sign", lit(1L)),
-                empty)
-            case Some((qF, qD)) =>
-              (s.read.parquet(s"$viewDir/v${qF}_$qD"),
-                feedZ(factStore, qF, vF, keys, factCols),
-                if (qD == vD) bNew.limit(0).withColumn("_sign", lit(1L))
-                else feedZ(dimStore, qD, vD, dimKeys, dimCols),
-                VersionedStore.snapshot(s, factStore, Some(qF))
-                  .select(factProj: _*))
-          }
-          IncrementalView.applyJoinDelta(viewPrev, zA, bNew, aOld, zB,
-              joinKeys, dims, contribE6)
-            .coalesce(1)
-            .write.mode("errorifexists").parquet(s"$viewDir/v${vF}_$vD")
+      : StreamingQuery =
+    ledgerStream(events, checkpointDir, queryName, trigger) { (df, id) =>
+      val s = df.sparkSession
+      import graft.load.{IncrementalView, VersionedStore}
+      val done = VersionedStore.maxCommitted(s, factStore, "streamBatch")
+      if (done.forall(_ < id)) {
+        val meta = Map("streamBatch" -> id.toString)
+        // the two commits land in DIFFERENT stores (disjoint paths,
+        // no shared in-process state) — overlap them (r16, guide §2.6);
+        // the view advance below depends on both and stays after
+        // the join
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.duration.Duration
+        import scala.concurrent.ExecutionContext.Implicits.global
+        val vFf = Future {
+          if (VersionedStore.versions(s, factStore).isEmpty)
+            VersionedStore.create(df, factStore, meta = meta)
+          else VersionedStore.upsert(s, factStore, df, keys, meta = meta)
         }
-        ()
-      } }.start()
+        val vD = dimForBatch(id) match {
+          case Some(dimBatch) =>
+            if (VersionedStore.versions(s, dimStore).isEmpty)
+              VersionedStore.create(dimBatch, dimStore, meta = meta,
+                sortCols = dimKeys)
+            else VersionedStore.upsert(s, dimStore, dimBatch, dimKeys,
+              meta = meta, sortCols = dimKeys)
+          case None =>
+            val vs = VersionedStore.versions(s, dimStore)
+            require(vs.nonEmpty, "joinViewIngestTwoSided: dimForBatch " +
+              "must supply the bootstrap dim for the first batch")
+            vs.last
+        }
+        val vF = Await.result(vFf, Duration.Inf)
+        val fs = new Path(viewDir).getFileSystem(
+          s.sparkContext.hadoopConfiguration)
+        val gen = "v(\\d+)_(\\d+)".r
+        val viewPath = new Path(viewDir)
+        val lastView =
+          if (!fs.exists(viewPath)) None
+          else fs.listStatus(viewPath).toSeq.filter(_.isDirectory)
+            .map(_.getPath.getName)
+            .collect { case gen(f, d) if fs.exists(
+                new Path(s"$viewDir/v${f}_$d/_SUCCESS"))
+              => (f.toInt, d.toInt) }
+            .sorted.lastOption
+        val factProj = (joinKeys ++ factCols).map(col)
+        val dimProj = (joinKeys ++ dimCols).map(col)
+        val bNew = VersionedStore.snapshot(s, dimStore, Some(vD))
+          .select(dimProj: _*)
+        def feedZ(store: String, from: Int, to: Int, ks: Seq[String],
+            cols: Seq[String]): DataFrame = {
+          val cdf = VersionedStore.changes(s, store, from, to, ks)
+          val plain = cdf.columns.toSet
+          IncrementalView.zRelation(cdf.select(
+            joinKeys.map(col) ++ Seq(col("op")) ++
+              cols.flatMap(c =>
+                if (plain(c)) Seq(col(c))
+                else Seq(col(s"${c}_old"), col(s"${c}_new"))): _*))
+        }
+        val (viewPrev, zA, zB, aOld) = lastView match {
+          case None =>
+            val empty = VersionedStore.snapshot(s, factStore, Some(vF))
+              .select(factProj: _*).limit(0)
+            (empty.join(bNew.limit(0), joinKeys)
+                .groupBy(dims.map(col): _*)
+                .agg(count(lit(1)).as("n"), sum(lit(0L)).as("sum_e6"))
+                .select(dims.map(col) :+ col("n") :+ col("sum_e6"): _*),
+              VersionedStore.snapshot(s, factStore, Some(vF))
+                .select(factProj: _*).withColumn("_sign", lit(1L)),
+              bNew.limit(0).withColumn("_sign", lit(1L)),
+              empty)
+          case Some((qF, qD)) =>
+            (s.read.parquet(s"$viewDir/v${qF}_$qD"),
+              feedZ(factStore, qF, vF, keys, factCols),
+              if (qD == vD) bNew.limit(0).withColumn("_sign", lit(1L))
+              else feedZ(dimStore, qD, vD, dimKeys, dimCols),
+              VersionedStore.snapshot(s, factStore, Some(qF))
+                .select(factProj: _*))
+        }
+        IncrementalView.applyJoinDelta(viewPrev, zA, bNew, aOld, zB,
+            joinKeys, dims, contribE6)
+          .coalesce(1)
+          .write.mode("errorifexists").parquet(s"$viewDir/v${vF}_$vD")
+      }
+    }
 
   /** One-shot gate replay of [[joinViewIngest]]: the events table is
     * re-staged as THREE parquet files and streamed with
@@ -1173,27 +1286,12 @@ object Streaming {
   def joinViewAvailableNow(spark: SparkSession, dir: String,
       workDir: String, queryName: String): DataFrame = {
     val ev = graft.Tables.eventsAsHabits(spark, dir)
-    val staging = s"$workDir/staged"
     // split the replay by TIME, not hash: each micro-batch is a
     // contiguous day span (how ingest actually arrives), so every
     // upsert rewrites only its own days and the change feed scans the
     // commit's days, not the store — a hash split would make each tick
     // touch ALL days and turn the replay into three full rewrites
-    ev.repartitionByRange(3, col("ts")).write.parquet(staging)
-    // one write produced all three files, so their mtimes tie — stamp
-    // strictly increasing mtimes in part order (range partition index
-    // is ascending in ts) so replay arrival order is the ingest order
-    // by construction, not by tie-break luck
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val sfs = stagingPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val t0 = System.currentTimeMillis()
-    sfs.listStatus(stagingPath).toSeq.filter(s => s.isFile && {
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }).sortBy(_.getPath.getName).zipWithIndex.foreach { case (f, i) =>
-      sfs.setTimes(f.getPath, t0 + i * 60000L, -1)
-    }
+    stageRanges(spark, ev, 3, "ts", workDir)
     // materialize the dim ONCE: it is captured by every tick's closure
     // and joined per advance — without the eager checkpoint each tick
     // re-runs the full-events distinct scan behind it (3 ticks × a
@@ -1202,26 +1300,18 @@ object Streaming {
     val dim = ev.select(col("user_email")).distinct()
       .withColumn("weight", (col("user_email") % 5 + 1).cast("double"))
       .localCheckpoint(true)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream
-        .schema(ev.schema).option("maxFilesPerTrigger", "1")
-        .parquet(staging)
-      val storePath = s"$workDir/fact"
-      awaitOneShot(
-        joinViewIngest(stream, storePath, s"$workDir/view", dim,
-          joinKeys = Seq("user_email"), factCols = Seq("habit", "value"),
-          dims = Seq("habit"),
-          contribE6 = round(col("value") * col("weight") * 1e6).cast("long"),
-          checkpointDir = s"$workDir/cp", queryName = queryName),
-        queryName)
-      val head = graft.load.VersionedStore
-        .versions(spark, storePath).last
+    val storePath = s"$workDir/fact"
+    try replayStaged(spark, workDir, queryName, ev.schema) { stream =>
+      joinViewIngest(stream, storePath, s"$workDir/view", dim,
+        joinKeys = Seq("user_email"), factCols = Seq("habit", "value"),
+        dims = Seq("habit"),
+        contribE6 = round(col("value") * col("weight") * 1e6).cast("long"),
+        checkpointDir = s"$workDir/cp", queryName = queryName)
+    } {
+      val head = graft.load.VersionedStore.versions(spark, storePath).last
       require(head >= 2, s"expected >= 3 commits, head version is $head")
       spark.read.parquet(s"$workDir/view/v$head")
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       // the dim pin fed the tick closures only — the returned view
       // reads parquet, so the blocks are dead once the stream drained
       graft.ext.Pinned.release(dim)
@@ -1239,18 +1329,7 @@ object Streaming {
   def joinViewTwoSidedAvailableNow(spark: SparkSession, dir: String,
       workDir: String, queryName: String): DataFrame = {
     val ev = graft.Tables.eventsAsHabits(spark, dir)
-    val staging = s"$workDir/staged"
-    ev.repartitionByRange(3, col("ts")).write.parquet(staging)
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val sfs = stagingPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val t0 = System.currentTimeMillis()
-    sfs.listStatus(stagingPath).toSeq.filter(s => s.isFile && {
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }).sortBy(_.getPath.getName).zipWithIndex.foreach { case (f, i) =>
-      sfs.setTimes(f.getPath, t0 + i * 60000L, -1)
-    }
+    stageRanges(spark, ev, 3, "ts", workDir)
     val dimTs = to_timestamp(lit("2024-01-01 00:00:00"))
     // materialized once for the same reason as the one-sided replay:
     // both dim batches derive from this relation inside tick closures
@@ -1262,35 +1341,27 @@ object Streaming {
     val dim1 = users.filter(col("user_email") % 3 === 0)
       .withColumn("ts", dimTs)
       .withColumn("weight", (col("user_email") % 7 + 1).cast("double"))
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream
-        .schema(ev.schema).option("maxFilesPerTrigger", "1")
-        .parquet(staging)
-      val factStore = s"$workDir/fact"
-      val viewDir = s"$workDir/view"
-      awaitOneShot(
-        joinViewIngestTwoSided(stream, factStore, s"$workDir/dim",
-          viewDir,
-          dimForBatch = {
-            case 0L => Some(dim0)
-            case 1L => Some(dim1)
-            case _ => None
-          },
-          joinKeys = Seq("user_email"), factCols = Seq("habit", "value"),
-          dimCols = Seq("weight"), dims = Seq("habit"),
-          contribE6 = round(col("value") * col("weight") * 1e6).cast("long"),
-          checkpointDir = s"$workDir/cp", queryName = queryName,
-          dimKeys = Seq("user_email")),
-        queryName)
+    val factStore = s"$workDir/fact"
+    val viewDir = s"$workDir/view"
+    try replayStaged(spark, workDir, queryName, ev.schema) { stream =>
+      joinViewIngestTwoSided(stream, factStore, s"$workDir/dim", viewDir,
+        dimForBatch = {
+          case 0L => Some(dim0)
+          case 1L => Some(dim1)
+          case _ => None
+        },
+        joinKeys = Seq("user_email"), factCols = Seq("habit", "value"),
+        dimCols = Seq("weight"), dims = Seq("habit"),
+        contribE6 = round(col("value") * col("weight") * 1e6).cast("long"),
+        checkpointDir = s"$workDir/cp", queryName = queryName,
+        dimKeys = Seq("user_email"))
+    } {
       val headF = graft.load.VersionedStore.versions(spark, factStore).last
       require(headF >= 2, s"expected >= 3 fact commits, head is $headF")
       val headD = graft.load.VersionedStore
         .versions(spark, s"$workDir/dim").last
       spark.read.parquet(s"$viewDir/v${headF}_$headD")
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       // dim0/dim1 derive from this pin inside tick closures only
       graft.ext.Pinned.release(users)
     }
@@ -1310,17 +1381,13 @@ object Streaming {
       lo: Double, hi: Double, buckets: Int, sinkPath: String,
       checkpointDir: String, queryName: String,
       trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        graft.ext.Profile.psiDrift(ref, df, valueCol, lo, hi, buckets)
-          .withColumn("batch_id", lit(id))
-          .coalesce(1)
-          .write.mode("append").parquet(sinkPath)
-        ()
-      }.start()
+      : StreamingQuery =
+    ledgerStream(stream, checkpointDir, queryName, trigger) { (df, id) =>
+      graft.ext.Profile.psiDrift(ref, df, valueCol, lo, hi, buckets)
+        .withColumn("batch_id", lit(id))
+        .coalesce(1)
+        .write.mode("append").parquet(sinkPath)
+    }
 
   /** One-shot gate replay of [[driftStream]]: the purchase-value
     * stream arrives in ONE batch and scores against the click-value
@@ -1409,67 +1476,6 @@ object Streaming {
     }
   }
 
-  /** Stage `batches` as one flat parquet directory, one file per
-    * batch, each stamped with a strictly later mtime, so a
-    * `maxFilesPerTrigger = 1` replay processes them in list order —
-    * the generalized form of the per-wrapper staging the joinView
-    * replays do inline.
-    *
-    * r17: ONE tick-tagged job stages every batch — the K sequential
-    * `coalesce(1)` appends each paid a full job (scheduling + source
-    * scan) back-to-back, a pure fixed cost across the ~20 staged
-    * replays. The union's branches scan concurrently, the
-    * tick-keyed repartition puts each batch's rows in one task, the
-    * partitioned write strips the tag from the file contents, and
-    * the partition dirs then flatten to the source-visible flat
-    * files (rename is metadata-only). A batch with ZERO rows writes
-    * no partition dir; the fallback writes its empty file the old
-    * way so tick numbering never silently shifts. */
-  private def stageBatches(spark: SparkSession, staging: String,
-      batches: Seq[DataFrame]): StructType = {
-    val p = new org.apache.hadoop.fs.Path(staging)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val t0 = System.currentTimeMillis()
-    val tmp = s"$staging/_graft_stage_tmp"
-    // per-branch coalesce(1), NOT a tick-keyed repartition: each
-    // branch collapses to one task (exactly the work the old
-    // per-batch coalesce(1) write did), the K tasks run CONCURRENTLY
-    // in one job, and no exchange ever moves the staged payload
-    batches.zipWithIndex
-      .map { case (b, i) =>
-        b.withColumn("__graft_tick", lit(i)).coalesce(1) }
-      .reduce(_ unionByName _)
-      .write.partitionBy("__graft_tick").parquet(tmp)
-    batches.indices.foreach { i =>
-      val sub = new org.apache.hadoop.fs.Path(tmp, s"__graft_tick=$i")
-      val files =
-        if (fs.exists(sub))
-          fs.listStatus(sub).toSeq.filter(s => s.isFile && {
-            val n = s.getPath.getName
-            !n.startsWith("_") && !n.startsWith(".")
-          })
-        else Nil
-      if (files.isEmpty) {
-        // empty batch: the partitioned write emits no dir — keep the
-        // tick by writing its empty file the sequential way (stamp
-        // only the files this write created: earlier ticks' files
-        // already carry their own times)
-        val before = fs.listStatus(p).toSeq.filter(_.isFile)
-          .map(_.getPath.getName).toSet
-        batches(i).coalesce(1).write.mode("append").parquet(staging)
-        stampStagedBatch(fs, p, t0 + i * 60000L, before)
-        ()
-      } else files.zipWithIndex.foreach { case (f, j) =>
-        val dst = new org.apache.hadoop.fs.Path(p, f"b$i%03d-$j%03d.parquet")
-        require(fs.rename(f.getPath, dst),
-          s"stageBatches: rename ${f.getPath} -> $dst failed")
-        fs.setTimes(dst, t0 + i * 60000L, -1)
-      }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    spark.read.parquet(staging).schema
-  }
-
   /** One-shot gate replay of [[dedupStreamIncremental]]: the documents
     * corpus is staged as two files (hash-split on doc_id) and streamed
     * one file per trigger, so tick 0 bootstraps the corpus store
@@ -1486,22 +1492,14 @@ object Streaming {
       : DataFrame = {
     val docs = graft.Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val halves = Seq(
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 0),
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(
-        dedupStreamIncremental(stream, s"$workDir/corpus",
-          s"$workDir/pairs", s"$workDir/cp", "doc_id", "text", threshold),
-        queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", 2)) { stream =>
+      dedupStreamIncremental(stream, s"$workDir/corpus",
+        s"$workDir/pairs", s"$workDir/cp", "doc_id", "text", threshold)
+    } {
       spark.read.parquet(s"$workDir/pairs")
         .select(col("id_a"), col("id_b"), col("jaccard"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Streaming SIGNATURE/BAND-LEDGER dedup — [[dedupStreamIncremental]]
@@ -1520,64 +1518,46 @@ object Streaming {
   def bandLedgerIngest(docs: DataFrame, workPath: String,
       checkpointDir: String, idCol: String, textCol: String,
       threshold: Double = 0.5, queryName: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    named(docs.writeStream, queryName)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val sp = batch.sparkSession
-          val corpusPath = s"$workPath/corpus"
-          val bandsPath = s"$workPath/bands"
-          // pin THROUGH the tick's own corpus state write (r17): the
-          // corpus `batch=<id>` subdir has to be written anyway, and a
-          // parquet read-back is the same eviction-immune replay-safe
-          // pin a localCheckpoint was — one job instead of a pin job
-          // PLUS a corpus write, with per-consumer column pruning for
-          // free. Replay-safe: overwrite mode, and priorDirs below
-          // excludes this tick's own (possibly replayed) subdir.
-          batch.toDF().write.mode("overwrite")
-            .parquet(s"$corpusPath/batch=$batchId")
-          val df = sp.read.parquet(s"$corpusPath/batch=$batchId")
-          val fs = new org.apache.hadoop.fs.Path(workPath)
-            .getFileSystem(sp.sessionState.newHadoopConf())
-          def priorDirs(root: String): Array[String] = {
-            val p = new org.apache.hadoop.fs.Path(root)
-            if (fs.exists(p))
-              fs.listStatus(p).map(_.getPath.getName)
-                .filter(d => d.startsWith("batch=") &&
-                  d != s"batch=$batchId")
-                .map(d => s"$root/$d")
-            else Array.empty[String]
-          }
-          val prior = priorDirs(corpusPath)
-          val priorBands = priorDirs(bandsPath)
-          val pairs =
-            if (prior.nonEmpty) {
-              require(priorBands.length == prior.length,
-                s"band ledger: ${prior.length} corpus tick(s) but " +
-                  s"${priorBands.length} band tick(s)")
-              graft.ext.Dedup.minhashDupPairsFromLedger(
-                df, sp.read.parquet(priorBands.toSeq: _*),
-                sp.read.parquet(prior.toSeq: _*), idCol, textCol,
-                threshold)
-            } else
-              graft.ext.Dedup.minhashDupPairs(df, idCol, textCol, threshold)
-          // two independent writes off the on-disk batch (pairs probes
-          // the PRIOR ledger, bands is the tick's own state) — overlap
-          // them (r16, guide §2.6)
-          parWrites(
-            "pairs" -> (() => pairs.write.mode("overwrite")
-              .parquet(s"$workPath/pairs/batch=$batchId")),
-            "bands" -> (() =>
-              graft.ext.Dedup.minhashBandRelation(df, idCol, textCol)
-                .write.mode("overwrite")
-                .parquet(s"$bandsPath/batch=$batchId")))
-          sp.catalog.clearCache()
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(docs, checkpointDir, queryName) { (batch, batchId) =>
+      val sp = batch.sparkSession
+      val corpusPath = s"$workPath/corpus"
+      val bandsPath = s"$workPath/bands"
+      // pin THROUGH the tick's own corpus state write (r17): the
+      // corpus `batch=<id>` subdir has to be written anyway, and a
+      // parquet read-back is the same eviction-immune replay-safe
+      // pin a localCheckpoint was — one job instead of a pin job
+      // PLUS a corpus write, with per-consumer column pruning for
+      // free. Replay-safe: overwrite mode, and priorDirs below
+      // excludes this tick's own (possibly replayed) subdir.
+      batch.write.mode("overwrite")
+        .parquet(s"$corpusPath/batch=$batchId")
+      val df = sp.read.parquet(s"$corpusPath/batch=$batchId")
+      val prior = priorDirs(sp, corpusPath, batchId)
+      val priorBands = priorDirs(sp, bandsPath, batchId)
+      val pairs =
+        if (prior.nonEmpty) {
+          require(priorBands.length == prior.length,
+            s"band ledger: ${prior.length} corpus tick(s) but " +
+              s"${priorBands.length} band tick(s)")
+          graft.ext.Dedup.minhashDupPairsFromLedger(
+            df, sp.read.parquet(priorBands.toSeq: _*),
+            sp.read.parquet(prior.toSeq: _*), idCol, textCol,
+            threshold)
+        } else
+          graft.ext.Dedup.minhashDupPairs(df, idCol, textCol, threshold)
+      // two independent writes off the on-disk batch (pairs probes
+      // the PRIOR ledger, bands is the tick's own state) — overlap
+      // them (r16, guide §2.6)
+      parWrites(
+        "pairs" -> (() => pairs.write.mode("overwrite")
+          .parquet(s"$workPath/pairs/batch=$batchId")),
+        "bands" -> (() =>
+          graft.ext.Dedup.minhashBandRelation(df, idCol, textCol)
+            .write.mode("overwrite")
+            .parquet(s"$bandsPath/batch=$batchId")))
+      sp.catalog.clearCache()
+    }
 
   /** Drive [[bandLedgerIngest]] over the driver's documents as a
     * two-tick bounded stream and return the accumulated pair ledger —
@@ -1588,22 +1568,14 @@ object Streaming {
       : DataFrame = {
     val docs = graft.Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val halves = Seq(
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 0),
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(
-        bandLedgerIngest(stream, workDir, s"$workDir/cp",
-          "doc_id", "text", threshold, queryName),
-        queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", 2)) { stream =>
+      bandLedgerIngest(stream, workDir, s"$workDir/cp",
+        "doc_id", "text", threshold, queryName)
+    } {
       spark.read.parquet(s"$workDir/pairs")
         .select(col("id_a"), col("id_b"), col("jaccard"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Streaming CLUSTER-LABEL ledger: each micro-batch of documents
@@ -1633,113 +1605,86 @@ object Streaming {
   def clusterLedgerIngest(docs: DataFrame, workPath: String,
       checkpointDir: String, idCol: String, textCol: String,
       threshold: Double = 0.5, queryName: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    named(docs.writeStream, queryName)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) => timedTick(queryName, batchId) {
-          val sp = batch.sparkSession
-          val corpusPath = s"$workPath/corpus"
-          val labelsPath = s"$workPath/labels"
-          val bandsPath = s"$workPath/bands"
-          // pin THROUGH the corpus state write (r17, the bandLedger
-          // note): one job where the tick paid a checkpoint pin AND a
-          // corpus copy; replay-safe because priorDirs excludes this
-          // tick's own subdir
-          val (df, corpusMs) = timedMs {
-            batch.toDF().write.mode("overwrite")
-              .parquet(s"$corpusPath/batch=$batchId")
-            sp.read.parquet(s"$corpusPath/batch=$batchId")
-          }
-          val cp = new org.apache.hadoop.fs.Path(corpusPath)
-          val fs = cp.getFileSystem(sp.sessionState.newHadoopConf())
-          def priorDirs(root: String): Array[String] = {
-            val p = new org.apache.hadoop.fs.Path(root)
-            if (fs.exists(p))
-              fs.listStatus(p).map(_.getPath.getName)
-                .filter(d => d.startsWith("batch=") &&
-                  d != s"batch=$batchId")
-                .map(d => s"$root/$d")
-            else Array.empty[String]
-          }
-          val prior = priorDirs(corpusPath)
-          val priorBands = priorDirs(bandsPath)
-          // stage-attributed tick (the BASELINE.md q_cluster_stream
-          // table): probe = pair-finding against the stored ledger,
-          // materialized here so the CC fold reads blocks instead of
-          // replaying the probe per iteration; fold = incremental CC +
-          // label snapshot write; bands/corpus = the at-ingest state
-          // later ticks probe (work the pre-ledger r11 tick did not do)
-          val ((pairsOpt, candRows), probeMs) = timedMs {
-            if (prior.isEmpty) (None, -1L)
-            else {
-              require(priorBands.length == prior.length,
-                s"cluster ledger: ${prior.length} corpus tick(s) but " +
-                  s"${priorBands.length} band tick(s) — the signature " +
-                  "ledger is out of step with the corpus store")
-              // census form: the tick's stage line carries the probe's
-              // candidate count, so band-bucket degradation shows up
-              // as a rising per-tick column instead of wall-time
-              // pairs come back PINNED from the census (r16) — the
-              // release below frees them once the fold consumed them
-              val (pairs, cand) = graft.ext.Dedup.minhashLedgerProbeCensus(
-                df, sp.read.parquet(priorBands.toSeq: _*),
-                sp.read.parquet(prior.toSeq: _*), idCol, textCol,
-                threshold)
-              (Some(pairs), cand)
-            }
-          }
-          val (labels, labelMs) = timedMs {
-            pairsOpt match {
-              case None =>
-                graft.ext.Dedup.dupClusters(graft.ext.Dedup
-                  .minhashDupPairs(df, idCol, textCol, threshold))
-              case Some(pairs) =>
-                val lp = new org.apache.hadoop.fs.Path(labelsPath)
-                val priorSnap = fs.listStatus(lp).map(_.getPath.getName)
-                  .filter(_.startsWith("batch="))
-                  .map(_.stripPrefix("batch=").toLong).filter(_ < batchId)
-                require(priorSnap.nonEmpty,
-                  s"cluster ledger: corpus ticks exist but no label " +
-                    s"snapshot precedes batch $batchId")
-                graft.ext.Dedup.dupClustersIncremental(
-                  sp.read.parquet(s"$labelsPath/batch=${priorSnap.max}"),
-                  pairs)
-            }
-          }
-          // label snapshot (checkpointed by dupClusters) and the
-          // tick's band relation (the at-ingest sufficient statistic
-          // later ticks probe) are independent writes off materialized
-          // state — overlap them (r16, guide §2.6; the corpus copy now
-          // IS the pin above)
-          val stageWrites = timedMs {
-            parWrites(
-              "labels" -> (() => labels.write.mode("overwrite")
-                .parquet(s"$labelsPath/batch=$batchId")),
-              "bands" -> (() =>
-                graft.ext.Dedup.minhashBandRelation(df, idCol, textCol)
-                  .write.mode("overwrite")
-                  .parquet(s"$bandsPath/batch=$batchId")))
-          }
-          val perWrite = stageWrites._1.toMap
-          val foldMs = labelMs + perWrite("labels")
-          val bandMs = perWrite("bands")
-          // release this tick's persisted shingle/band relations (the
-          // pair-finders' documented caching contract: the CALLER
-          // clears) — a long-running stream must not accumulate them
-          sp.catalog.clearCache()
-          // ...and the pair pin (checkpoint blocks are outside the
-          // relation cache); the batch itself is parquet-backed now
-          pairsOpt.foreach(graft.ext.Pinned.release)
-          recordTickStages(queryName, batchId, Seq("probe" -> probeMs,
-            "fold" -> foldMs, "bands" -> bandMs, "corpus" -> corpusMs) ++
-            (if (candRows >= 0) Seq("cand_rows" -> candRows) else Nil))
-          ()
+      : StreamingQuery =
+    ledgerStream(docs, checkpointDir, queryName) { (batch, batchId) =>
+      val sp = batch.sparkSession
+      val corpusPath = s"$workPath/corpus"
+      val labelsPath = s"$workPath/labels"
+      val bandsPath = s"$workPath/bands"
+      // pin THROUGH the corpus state write (r17, the bandLedger
+      // note): one job where the tick paid a checkpoint pin AND a
+      // corpus copy; replay-safe because priorDirs excludes this
+      // tick's own subdir
+      val (df, corpusMs) = timedMs {
+        batch.write.mode("overwrite")
+          .parquet(s"$corpusPath/batch=$batchId")
+        sp.read.parquet(s"$corpusPath/batch=$batchId")
+      }
+      val prior = priorDirs(sp, corpusPath, batchId)
+      val priorBands = priorDirs(sp, bandsPath, batchId)
+      // stage-attributed tick (the BASELINE.md q_cluster_stream
+      // table): probe = pair-finding against the stored ledger,
+      // materialized here so the CC fold reads blocks instead of
+      // replaying the probe per iteration; fold = incremental CC +
+      // label snapshot write; bands/corpus = the at-ingest state
+      // later ticks probe (work the pre-ledger r11 tick did not do)
+      val ((pairsOpt, candRows), probeMs) = timedMs {
+        if (prior.isEmpty) (None, -1L)
+        else {
+          require(priorBands.length == prior.length,
+            s"cluster ledger: ${prior.length} corpus tick(s) but " +
+              s"${priorBands.length} band tick(s) — the signature " +
+              "ledger is out of step with the corpus store")
+          // census form: the tick's stage line carries the probe's
+          // candidate count, so band-bucket degradation shows up
+          // as a rising per-tick column instead of wall-time
+          // pairs come back PINNED from the census (r16) — the
+          // release below frees them once the fold consumed them
+          val (pairs, cand) = graft.ext.Dedup.minhashLedgerProbeCensus(
+            df, sp.read.parquet(priorBands.toSeq: _*),
+            sp.read.parquet(prior.toSeq: _*), idCol, textCol,
+            threshold)
+          (Some(pairs), cand)
         }
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      val (labels, labelMs) = timedMs {
+        pairsOpt match {
+          case None =>
+            graft.ext.Dedup.dupClusters(graft.ext.Dedup
+              .minhashDupPairs(df, idCol, textCol, threshold))
+          case Some(pairs) =>
+            graft.ext.Dedup.dupClustersIncremental(
+              priorLabels(sp, labelsPath, batchId, "cluster"), pairs)
+        }
+      }
+      // label snapshot (checkpointed by dupClusters) and the
+      // tick's band relation (the at-ingest sufficient statistic
+      // later ticks probe) are independent writes off materialized
+      // state — overlap them (r16, guide §2.6; the corpus copy now
+      // IS the pin above)
+      val stageWrites = timedMs {
+        parWrites(
+          "labels" -> (() => labels.write.mode("overwrite")
+            .parquet(s"$labelsPath/batch=$batchId")),
+          "bands" -> (() =>
+            graft.ext.Dedup.minhashBandRelation(df, idCol, textCol)
+              .write.mode("overwrite")
+              .parquet(s"$bandsPath/batch=$batchId")))
+      }
+      val perWrite = stageWrites._1.toMap
+      val foldMs = labelMs + perWrite("labels")
+      val bandMs = perWrite("bands")
+      // release this tick's persisted shingle/band relations (the
+      // pair-finders' documented caching contract: the CALLER
+      // clears) — a long-running stream must not accumulate them
+      sp.catalog.clearCache()
+      // ...and the pair pin (checkpoint blocks are outside the
+      // relation cache); the batch itself is parquet-backed now
+      pairsOpt.foreach(graft.ext.Pinned.release)
+      recordTickStages(queryName, batchId, Seq("probe" -> probeMs,
+        "fold" -> foldMs, "bands" -> bandMs, "corpus" -> corpusMs) ++
+        (if (candRows >= 0) Seq("cand_rows" -> candRows) else Nil))
+    }
 
   /** Drive [[clusterLedgerIngest]] over the driver's documents as a
     * two-tick bounded stream and return the FINAL label snapshot —
@@ -1749,30 +1694,13 @@ object Streaming {
       threshold: Double = 0.5): DataFrame = {
     val docs = graft.Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val halves = Seq(
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 0),
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(
-        clusterLedgerIngest(stream, workDir, s"$workDir/cp",
-          "doc_id", "text", threshold, queryName),
-        queryName)
-      val lp = s"$workDir/labels"
-      // locate the final snapshot through the Hadoop FS API (the same
-      // handle clusterLedgerIngest writes through) — java.io.File
-      // returns null on a non-local workDir
-      val lpPath = new org.apache.hadoop.fs.Path(lp)
-      val fs = lpPath.getFileSystem(spark.sessionState.newHadoopConf())
-      val last = fs.listStatus(lpPath).map(_.getPath.getName)
-        .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
-        .max
-      spark.read.parquet(s"$lp/batch=$last")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", 2)) { stream =>
+      clusterLedgerIngest(stream, workDir, s"$workDir/cp",
+        "doc_id", "text", threshold, queryName)
+    } {
+      spark.read.parquet(latestBatchDir(spark, s"$workDir/labels").get)
+    }
   }
 
   /** Streaming CURATION-PIPELINE ledger: the at-ingest state that makes
@@ -1824,115 +1752,86 @@ object Streaming {
       geometry: graft.ext.Dedup.SigProbeGeometry =
         graft.ext.Dedup.ChunkGeometry(),
       failOnDegraded: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    named(docs.writeStream, queryName)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) => timedTick(queryName, batchId) {
-          import graft.ext.{Dedup, TextAnalysis}
-          val sp = batch.sparkSession
-          val gatedPath = s"$workPath/gated"
-          val sigsPath = s"$workPath/sigs"
-          val labelsPath = s"$workPath/labels"
-          // gate once, at ingest — the exact Curation.curate stage-1/2
-          // semantics via the typed kernel twin (bit-identical values,
-          // ExtSpec-pinned), so survivors match the batch pipeline's
-          // `kept`. r17: the gate output pins THROUGH its own state
-          // write — the `gated/batch=<id>` subdir had to be written
-          // anyway, and the parquet read-back is the same replay-safe
-          // pin the checkpoint was, one job instead of two (plus
-          // column pruning per consumer).
-          val (gated, gateMs) = timedMs {
-            TextAnalysis.langQualityGateLocal(batch.toDF(), idCol,
-                textCol, lang, minQuality, carryCols = Seq("source"))
-              .write.mode("overwrite")
-              .parquet(s"$gatedPath/batch=$batchId")
-            sp.read.parquet(s"$gatedPath/batch=$batchId") }
-          // the words census (the tokenizer trainer's sufficient
-          // statistic, additive across ticks) reads only the on-disk
-          // gated state — run it CONCURRENTLY with the sig/probe/fold
-          // chain below (guide §2.6) instead of at the tick's tail
-          import scala.concurrent.{Await, Future, blocking}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val wordsF = Future(blocking(timedMs {
-            graft.ext.Bpe.docWordCensus(gated, idCol, textCol)
-              .write.mode("overwrite")
-              .parquet(s"$workPath/words/batch=$batchId") }._2))
-          val fs = new org.apache.hadoop.fs.Path(workPath)
-            .getFileSystem(sp.sessionState.newHadoopConf())
-          def priorDirs(root: String): Array[String] = {
-            val p = new org.apache.hadoop.fs.Path(root)
-            if (fs.exists(p))
-              fs.listStatus(p).map(_.getPath.getName)
-                .filter(d => d.startsWith("batch=") &&
-                  d != s"batch=$batchId")
-                .map(d => s"$root/$d")
-            else Array.empty[String]
-          }
-          val priorSigs = priorDirs(sigsPath)
-          // the tick's dominant cost, paid exactly once: the signature
-          // relation both JOINS the ledger and drives this tick's pair
-          // probe — pinned through its own `sigs/batch=<id>` state
-          // write (r17), one job instead of pin + write
-          val (sig, sigMs) = timedMs {
-            Dedup.simhashSignaturesLocal(gated, idCol, textCol)
-              .write.mode("overwrite")
-              .parquet(s"$sigsPath/batch=$batchId")
-            sp.read.parquet(s"$sigsPath/batch=$batchId") }
-          // census probe under the configured geometry (empty ledger on
-          // tick 0 → batch-internal pairs only, same set as the direct
-          // pigeonhole): the stage line carries the candidate count and
-          // the occupancy guard fails a degraded corpus AT THE TICK
-          val ledgerSig =
-            if (priorSigs.isEmpty) sig.limit(0)
-            else sp.read.parquet(priorSigs.toSeq: _*)
-          val ((pairs, probeStats), probeMs) = timedMs {
-            Dedup.simhashLedgerProbeCensus(sig, ledgerSig, idCol,
-              maxHamming, geometry) }
-          guardOccupancy(probeStats, s"pipeline ledger tick $batchId",
-            failOnDegraded)
-          val labels =
-            if (priorSigs.isEmpty) Dedup.dupClusters(pairs)
-            else {
-              val lp = new org.apache.hadoop.fs.Path(labelsPath)
-              val priorSnap = fs.listStatus(lp).map(_.getPath.getName)
-                .filter(_.startsWith("batch="))
-                .map(_.stripPrefix("batch=").toLong).filter(_ < batchId)
-              require(priorSnap.nonEmpty,
-                s"pipeline ledger: signature ticks exist but no label " +
-                  s"snapshot precedes batch $batchId")
-              Dedup.dupClustersIncremental(
-                sp.read.parquet(s"$labelsPath/batch=${priorSnap.max}"),
-                pairs)
-            }
-          val (_, foldMs) = timedMs {
-            labels.write.mode("overwrite")
-              .parquet(s"$labelsPath/batch=$batchId") }
-          // gated/sig state landed as the pins above; the words census
-          // has been running concurrently since the gate — collect its
-          // wall now (it bounds the tick only when it outlasts the
-          // whole sig/probe/fold chain)
-          val stateMs = Await.result(wordsF, Duration.Inf)
-          sp.catalog.clearCache()
-          // the pair pin is dead once the fold consumed it —
-          // clearCache does not release checkpoint blocks; gated/sig
-          // are parquet-backed now, nothing to free there
-          graft.ext.Pinned.release(pairs)
-          recordTickStages(queryName, batchId, Seq("gate" -> gateMs,
-            "sig" -> sigMs, "probe" -> probeMs, "fold" -> foldMs,
-            "state" -> stateMs,
-            "cand_rows" -> probeStats.candidates,
-            "pair_rows" -> probeStats.pairs,
-            // the geometry actually probed (Auto records its pick as
-            // `geo_auto-><arm>`) — the decision is ON the stage line
-            s"geo_${probeStats.geometry}" -> 1L))
-          ()
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(docs, checkpointDir, queryName) { (batch, batchId) =>
+      import graft.ext.{Dedup, TextAnalysis}
+      val sp = batch.sparkSession
+      val gatedPath = s"$workPath/gated"
+      val sigsPath = s"$workPath/sigs"
+      val labelsPath = s"$workPath/labels"
+      // gate once, at ingest — the exact Curation.curate stage-1/2
+      // semantics via the typed kernel twin (bit-identical values,
+      // ExtSpec-pinned), so survivors match the batch pipeline's
+      // `kept`. r17: the gate output pins THROUGH its own state
+      // write — the `gated/batch=<id>` subdir had to be written
+      // anyway, and the parquet read-back is the same replay-safe
+      // pin the checkpoint was, one job instead of two (plus
+      // column pruning per consumer).
+      val (gated, gateMs) = timedMs {
+        TextAnalysis.langQualityGateLocal(batch, idCol,
+            textCol, lang, minQuality, carryCols = Seq("source"))
+          .write.mode("overwrite")
+          .parquet(s"$gatedPath/batch=$batchId")
+        sp.read.parquet(s"$gatedPath/batch=$batchId") }
+      // the words census (the tokenizer trainer's sufficient
+      // statistic, additive across ticks) reads only the on-disk
+      // gated state — run it CONCURRENTLY with the sig/probe/fold
+      // chain below (guide §2.6) instead of at the tick's tail
+      import scala.concurrent.{Await, Future, blocking}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val wordsF = Future(blocking(timedMs {
+        graft.ext.Bpe.docWordCensus(gated, idCol, textCol)
+          .write.mode("overwrite")
+          .parquet(s"$workPath/words/batch=$batchId") }._2))
+      val priorSigs = priorDirs(sp, sigsPath, batchId)
+      // the tick's dominant cost, paid exactly once: the signature
+      // relation both JOINS the ledger and drives this tick's pair
+      // probe — pinned through its own `sigs/batch=<id>` state
+      // write (r17), one job instead of pin + write
+      val (sig, sigMs) = timedMs {
+        Dedup.simhashSignaturesLocal(gated, idCol, textCol)
+          .write.mode("overwrite")
+          .parquet(s"$sigsPath/batch=$batchId")
+        sp.read.parquet(s"$sigsPath/batch=$batchId") }
+      // census probe under the configured geometry (empty ledger on
+      // tick 0 → batch-internal pairs only, same set as the direct
+      // pigeonhole): the stage line carries the candidate count and
+      // the occupancy guard fails a degraded corpus AT THE TICK
+      val ledgerSig =
+        if (priorSigs.isEmpty) sig.limit(0)
+        else sp.read.parquet(priorSigs.toSeq: _*)
+      val ((pairs, probeStats), probeMs) = timedMs {
+        Dedup.simhashLedgerProbeCensus(sig, ledgerSig, idCol,
+          maxHamming, geometry) }
+      guardOccupancy(probeStats, s"pipeline ledger tick $batchId",
+        failOnDegraded)
+      val labels =
+        if (priorSigs.isEmpty) Dedup.dupClusters(pairs)
+        else Dedup.dupClustersIncremental(
+          priorLabels(sp, labelsPath, batchId, "pipeline"), pairs)
+      val (_, foldMs) = timedMs {
+        labels.write.mode("overwrite")
+          .parquet(s"$labelsPath/batch=$batchId") }
+      // gated/sig state landed as the pins above; the words census
+      // has been running concurrently since the gate — collect its
+      // wall now (it bounds the tick only when it outlasts the
+      // whole sig/probe/fold chain)
+      val stateMs = Await.result(wordsF, Duration.Inf)
+      sp.catalog.clearCache()
+      // the pair pin is dead once the fold consumed it —
+      // clearCache does not release checkpoint blocks; gated/sig
+      // are parquet-backed now, nothing to free there
+      graft.ext.Pinned.release(pairs)
+      recordTickStages(queryName, batchId, Seq("gate" -> gateMs,
+        "sig" -> sigMs, "probe" -> probeMs, "fold" -> foldMs,
+        "state" -> stateMs,
+        "cand_rows" -> probeStats.candidates,
+        "pair_rows" -> probeStats.pairs,
+        // the geometry actually probed (Auto records its pick as
+        // `geo_auto-><arm>`) — the decision is ON the stage line
+        s"geo_${probeStats.geometry}" -> 1L))
+    }
 
   /** Drive [[pipelineLedgerIngest]] over the driver's documents as a
     * two-tick bounded stream, then run the
@@ -1950,31 +1849,16 @@ object Streaming {
     require(ticks >= 2, "an incremental gate needs at least two ticks")
     val docs = graft.Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
-    // pmod, not abs(hash) % n: abs(Int.MinValue) is Int.MinValue, and
-    // MinValue % n is negative for odd n — a doc hashing there would
-    // land in NO tick and silently break the incremental==batch gate
-    val parts = (0 until ticks).map(i =>
-      docs.filter(pmod(hash(col("doc_id")), lit(ticks)) === i))
-    val schema = stageBatches(spark, s"$workDir/staged", parts)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(
-        pipelineLedgerIngest(stream, workDir, s"$workDir/cp",
-          "doc_id", "text", queryName = queryName, geometry = geometry),
-        queryName)
-      val lp = new org.apache.hadoop.fs.Path(s"$workDir/labels")
-      val fs = lp.getFileSystem(spark.sessionState.newHadoopConf())
-      val last = fs.listStatus(lp).map(_.getPath.getName)
-        .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
-        .max
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", ticks)) { stream =>
+      pipelineLedgerIngest(stream, workDir, s"$workDir/cp",
+        "doc_id", "text", queryName = queryName, geometry = geometry)
+    } {
       val gated = spark.read.parquet(s"$workDir/gated/batch=*")
       // survivors: docs in no duplicate pair + cluster canonicals —
       // the Curation.curate stage-3/4 semantics over ledger state
       val surv = graft.ext.Dedup.keepCanonical(gated, "doc_id",
-          spark.read.parquet(s"$workDir/labels/batch=$last"))
+          spark.read.parquet(latestBatchDir(spark, s"$workDir/labels").get))
         .select(col("doc_id"), col("n_tokens"), col("source"),
           graft.ext.Sampling.splitLabel(col("doc_id"),
             Seq("train" -> 90), "val").as("split"))
@@ -1986,7 +1870,7 @@ object Streaming {
         // (mixture-scoped inside mixPackExport) — the refresh's train
         // step is census-sized; only the encode stage reads text
         docWords = Some(spark.read.parquet(s"$workDir/words/batch=*")))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Streaming FILTER-FUNNEL ledger: the attrition report a production
@@ -2031,154 +1915,119 @@ object Streaming {
       geometry: graft.ext.Dedup.SigProbeGeometry =
         graft.ext.Dedup.ChunkGeometry(),
       failOnDegraded: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    named(docs.writeStream, queryName)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) => timedTick(queryName, batchId) {
-          import graft.ext.{Dedup, TextAnalysis}
-          val sp = batch.sparkSession
-          // pin the micro-batch once — three consumers scan it (the
-          // repetition kernel, the synthetic page, the flag build),
-          // same discipline as the cluster/pipeline ledger ticks
-          val d = batch.toDF().localCheckpoint(true)
-          val gr = TextAnalysis.gopherRepetitionLocal(d, idCol, textCol)
-            .select(col(idCol), col("pass_repetition").as("p_gr"))
-          val c4 = TextAnalysis.c4Rules(
-              TextAnalysis.c4SyntheticPage(d, idCol, textCol),
-              idCol, "page")
-            .select(col(idCol), col("pass").as("p_c4"))
-          // one pass, gates stacked as columns — the batch funnel's
-          // flag frame, per tick; pinned because census, survivors and
-          // signatures all read it. r16: the per-row trio via the
-          // typed kernel twin (bit-identical, ExtSpec-pinned)
-          val flags = TextAnalysis.gopherLangFlagsLocal(d, idCol,
-              textCol, lang, minQuality, keepText = true)
-            .join(gr, Seq(idCol)).join(c4, Seq(idCol))
-            .withColumn("p3", col("p_gf") && col("p_gr"))
-            .withColumn("p4", col("p3") && col("p_c4"))
-            .withColumn("p5", col("p4") && col("p_lq"))
-            .localCheckpoint(true)
-          // ONE aggregate pass builds all five stage rows (r17): the
-          // 5-way union-of-filters re-scanned the pinned flag frame
-          // five times and paid a groupBy shuffle for a 5-row result;
-          // `count(when(p,1))`/`sum(when(p,n_tokens))` are exactly
-          // `filter(p)`'s count/sum (when() is null on false/null
-          // rows, and count/sum skip nulls), and the trailing
-          // `n_docs > 0` filter reproduces the inner groupBy's
-          // empty-stage drop.
-          val stages = Seq(
-            "1_all" -> lit(true), "2_gopher_format" -> col("p_gf"),
-            "3_gopher_repetition" -> col("p3"), "4_c4" -> col("p4"),
-            "5_lang_quality" -> col("p5"))
-          val aggs = stages.flatMap { case (n, p) => Seq(
-            count(when(p, 1)).as(s"c_$n"),
-            sum(when(p, col("n_tokens"))).as(s"t_$n")) }
-          // the census reads only the pinned flag frame — run its
-          // write CONCURRENTLY with the sig/probe/fold chain below
-          // (guide §2.6) instead of serializing the tick behind it
-          import scala.concurrent.{Await, Future, blocking}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val censusF = Future(blocking {
-            flags.agg(aggs.head, aggs.tail: _*)
-              .select(explode(array(stages.map { case (n, _) =>
-                struct(lit(n).as("stage"), col(s"c_$n").as("n_docs"),
-                  col(s"t_$n").as("n_tokens")) }: _*)).as("s"))
-              .select(col("s.stage"), col("s.n_docs"), col("s.n_tokens"))
-              .filter(col("n_docs") > 0)
-              .coalesce(1)
-              .write.mode("overwrite")
-              .parquet(s"$workPath/census/batch=$batchId")
-          })
-          val surv = flags.filter(col("p5"))
-          val sigsPath = s"$workPath/sigs"
-          val labelsPath = s"$workPath/labels"
-          // the signature relation pins THROUGH its own state write
-          // (r17): one job where the tick paid a checkpoint pin and a
-          // later sig write
-          val sig = {
-            Dedup.simhashSignaturesLocal(surv, idCol, textCol)
-              .write.mode("overwrite")
-              .parquet(s"$sigsPath/batch=$batchId")
-            sp.read.parquet(s"$sigsPath/batch=$batchId")
-          }
-          val fs = new org.apache.hadoop.fs.Path(workPath)
-            .getFileSystem(sp.sessionState.newHadoopConf())
-          def priorDirs(root: String): Array[String] = {
-            val p = new org.apache.hadoop.fs.Path(root)
-            if (fs.exists(p))
-              fs.listStatus(p).map(_.getPath.getName)
-                .filter(x => x.startsWith("batch=") &&
-                  x != s"batch=$batchId")
-                .map(x => s"$root/$x")
-            else Array.empty[String]
-          }
-          val priorSigs = priorDirs(sigsPath)
-          // census probe under the configured geometry (empty ledger on
-          // tick 0 → batch-internal pairs only): stage line carries the
-          // candidate count, occupancy guard fails a degraded corpus at
-          // the tick (the pipelineLedgerIngest contract)
-          val ledgerSig =
-            if (priorSigs.isEmpty) sig.limit(0)
-            else sp.read.parquet(priorSigs.toSeq: _*)
-          val ((pairs, probeStats), probeMs) = timedMs {
-            Dedup.simhashLedgerProbeCensus(sig, ledgerSig, idCol,
-              maxHamming, geometry) }
-          guardOccupancy(probeStats, s"funnel ledger tick $batchId",
-            failOnDegraded)
-          val labels =
-            if (priorSigs.isEmpty) Dedup.dupClusters(pairs)
-            else {
-              val lp = new org.apache.hadoop.fs.Path(labelsPath)
-              val priorSnap = fs.listStatus(lp).map(_.getPath.getName)
-                .filter(_.startsWith("batch="))
-                .map(_.stripPrefix("batch=").toLong).filter(_ < batchId)
-              require(priorSnap.nonEmpty,
-                s"funnel ledger: signature ticks exist but no label " +
-                  s"snapshot precedes batch $batchId")
-              Dedup.dupClustersIncremental(
-                sp.read.parquet(s"$labelsPath/batch=${priorSnap.max}"),
-                pairs)
-            }
-          // labels (checkpointed by dupClusters) and surv (off the
-          // pinned flags) are materialized and independent — overlap
-          // the two writes (r16, guide §2.6; sig landed as its pin)
-          val (_, foldMs) = timedMs {
-            parWrites(
-              "labels" -> (() => labels.write.mode("overwrite")
-                .parquet(s"$labelsPath/batch=$batchId")),
-              "surv" -> (() => surv.select(col(idCol), col("n_tokens"))
-                .write.mode("overwrite")
-                .parquet(s"$workPath/surv/batch=$batchId")))
-            () }
-          // the census has been writing concurrently since the flag
-          // frame pinned — the tick completes only when it landed
-          Await.result(censusF, Duration.Inf)
-          sp.catalog.clearCache()
-          graft.ext.Pinned.release(d)
-          graft.ext.Pinned.release(flags)
-          graft.ext.Pinned.release(pairs)
-          recordTickStages(queryName, batchId, Seq("probe" -> probeMs,
-            "fold" -> foldMs,
-            "cand_rows" -> probeStats.candidates,
-            "pair_rows" -> probeStats.pairs,
-            // the geometry actually probed (Auto records its pick as
-            // `geo_auto-><arm>`) — the decision is ON the stage line
-            s"geo_${probeStats.geometry}" -> 1L))
-          ()
-        }
+      : StreamingQuery =
+    ledgerStream(docs, checkpointDir, queryName) { (batch, batchId) =>
+      import graft.ext.{Dedup, TextAnalysis}
+      val sp = batch.sparkSession
+      // pin the micro-batch once — three consumers scan it (the
+      // repetition kernel, the synthetic page, the flag build),
+      // same discipline as the cluster/pipeline ledger ticks
+      val d = batch.localCheckpoint(true)
+      val gr = TextAnalysis.gopherRepetitionLocal(d, idCol, textCol)
+        .select(col(idCol), col("pass_repetition").as("p_gr"))
+      val c4 = TextAnalysis.c4Rules(
+          TextAnalysis.c4SyntheticPage(d, idCol, textCol),
+          idCol, "page")
+        .select(col(idCol), col("pass").as("p_c4"))
+      // one pass, gates stacked as columns — the batch funnel's
+      // flag frame, per tick; pinned because census, survivors and
+      // signatures all read it. r16: the per-row trio via the
+      // typed kernel twin (bit-identical, ExtSpec-pinned)
+      val flags = TextAnalysis.gopherLangFlagsLocal(d, idCol,
+          textCol, lang, minQuality, keepText = true)
+        .join(gr, Seq(idCol)).join(c4, Seq(idCol))
+        .withColumn("p3", col("p_gf") && col("p_gr"))
+        .withColumn("p4", col("p3") && col("p_c4"))
+        .withColumn("p5", col("p4") && col("p_lq"))
+        .localCheckpoint(true)
+      // ONE aggregate pass builds all five stage rows (r17): the
+      // 5-way union-of-filters re-scanned the pinned flag frame
+      // five times and paid a groupBy shuffle for a 5-row result;
+      // `count(when(p,1))`/`sum(when(p,n_tokens))` are exactly
+      // `filter(p)`'s count/sum (when() is null on false/null
+      // rows, and count/sum skip nulls), and the trailing
+      // `n_docs > 0` filter reproduces the inner groupBy's
+      // empty-stage drop.
+      val stages = Seq(
+        "1_all" -> lit(true), "2_gopher_format" -> col("p_gf"),
+        "3_gopher_repetition" -> col("p3"), "4_c4" -> col("p4"),
+        "5_lang_quality" -> col("p5"))
+      val aggs = stages.flatMap { case (n, p) => Seq(
+        count(when(p, 1)).as(s"c_$n"),
+        sum(when(p, col("n_tokens"))).as(s"t_$n")) }
+      // the census reads only the pinned flag frame — run its
+      // write CONCURRENTLY with the sig/probe/fold chain below
+      // (guide §2.6) instead of serializing the tick behind it
+      import scala.concurrent.{Await, Future, blocking}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val censusF = Future(blocking {
+        flags.agg(aggs.head, aggs.tail: _*)
+          .select(explode(array(stages.map { case (n, _) =>
+            struct(lit(n).as("stage"), col(s"c_$n").as("n_docs"),
+              col(s"t_$n").as("n_tokens")) }: _*)).as("s"))
+          .select(col("s.stage"), col("s.n_docs"), col("s.n_tokens"))
+          .filter(col("n_docs") > 0)
+          .coalesce(1)
+          .write.mode("overwrite")
+          .parquet(s"$workPath/census/batch=$batchId")
+      })
+      val surv = flags.filter(col("p5"))
+      val sigsPath = s"$workPath/sigs"
+      val labelsPath = s"$workPath/labels"
+      // the signature relation pins THROUGH its own state write
+      // (r17): one job where the tick paid a checkpoint pin and a
+      // later sig write
+      val sig = {
+        Dedup.simhashSignaturesLocal(surv, idCol, textCol)
+          .write.mode("overwrite")
+          .parquet(s"$sigsPath/batch=$batchId")
+        sp.read.parquet(s"$sigsPath/batch=$batchId")
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      val priorSigs = priorDirs(sp, sigsPath, batchId)
+      // census probe under the configured geometry (empty ledger on
+      // tick 0 → batch-internal pairs only): stage line carries the
+      // candidate count, occupancy guard fails a degraded corpus at
+      // the tick (the pipelineLedgerIngest contract)
+      val ledgerSig =
+        if (priorSigs.isEmpty) sig.limit(0)
+        else sp.read.parquet(priorSigs.toSeq: _*)
+      val ((pairs, probeStats), probeMs) = timedMs {
+        Dedup.simhashLedgerProbeCensus(sig, ledgerSig, idCol,
+          maxHamming, geometry) }
+      guardOccupancy(probeStats, s"funnel ledger tick $batchId",
+        failOnDegraded)
+      val labels =
+        if (priorSigs.isEmpty) Dedup.dupClusters(pairs)
+        else Dedup.dupClustersIncremental(
+          priorLabels(sp, labelsPath, batchId, "funnel"), pairs)
+      // labels (checkpointed by dupClusters) and surv (off the
+      // pinned flags) are materialized and independent — overlap
+      // the two writes (r16, guide §2.6; sig landed as its pin)
+      val (_, foldMs) = timedMs {
+        parWrites(
+          "labels" -> (() => labels.write.mode("overwrite")
+            .parquet(s"$labelsPath/batch=$batchId")),
+          "surv" -> (() => surv.select(col(idCol), col("n_tokens"))
+            .write.mode("overwrite")
+            .parquet(s"$workPath/surv/batch=$batchId")))
+        () }
+      // the census has been writing concurrently since the flag
+      // frame pinned — the tick completes only when it landed
+      Await.result(censusF, Duration.Inf)
+      sp.catalog.clearCache()
+      graft.ext.Pinned.release(d)
+      graft.ext.Pinned.release(flags)
+      graft.ext.Pinned.release(pairs)
+      recordTickStages(queryName, batchId, Seq("probe" -> probeMs,
+        "fold" -> foldMs,
+        "cand_rows" -> probeStats.candidates,
+        "pair_rows" -> probeStats.pairs,
+        // the geometry actually probed (Auto records its pick as
+        // `geo_auto-><arm>`) — the decision is ON the stage line
+        s"geo_${probeStats.geometry}" -> 1L))
+    }
 
-  /** Drive [[funnelLedgerIngest]] over the driver's documents as a
-    * bounded multi-tick stream, then derive the funnel report from the
-    * MAINTAINED state: stages 1-5 by summing the per-tick censuses,
-    * stage 6 by the canonical-survivor rule over the survivor union and
-    * the latest label snapshot. Equal to the one-shot `q_filter_funnel`
-    * report, whose oracle the gate shares. */
   /** Streaming URL-canonicalization ledger: each micro-batch
     * canonicalizes ITS OWN rows once, at ingest (the typed kernel —
     * the hot-path form), and appends the `(id, url_canon)` relation
@@ -2192,29 +2041,21 @@ object Streaming {
   def urlLedgerIngest(docs: DataFrame, workPath: String,
       checkpointDir: String, idCol: String, urlCol: String,
       queryName: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    named(docs.writeStream, queryName)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) => timedTick(queryName, batchId) {
-          graft.ext.Urls.urlCanonicalLocal(batch.toDF(), idCol, urlCol)
-            .select(col(idCol), col("url_canon"),
-              // the frontier verdict rides the ledger (r15): the
-              // filter is pure narrow expressions over the canonical,
-              // so the crawl's keep/drop decision is paid once, at
-              // ingest, and the attrition report is a ledger
-              // aggregation — raw URLs never re-canonicalized OR
-              // re-judged
-              graft.ext.Urls.urlFilter(col("url_canon"))
-                .getField("reason").as("reason"))
-            .write.mode("overwrite")
-            .parquet(s"$workPath/urls/batch=$batchId")
-          ()
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(docs, checkpointDir, queryName) { (batch, batchId) =>
+      graft.ext.Urls.urlCanonicalLocal(batch, idCol, urlCol)
+        .select(col(idCol), col("url_canon"),
+          // the frontier verdict rides the ledger (r15): the
+          // filter is pure narrow expressions over the canonical,
+          // so the crawl's keep/drop decision is paid once, at
+          // ingest, and the attrition report is a ledger
+          // aggregation — raw URLs never re-canonicalized OR
+          // re-judged
+          graft.ext.Urls.urlFilter(col("url_canon"))
+            .getField("reason").as("reason"))
+        .write.mode("overwrite")
+        .parquet(s"$workPath/urls/batch=$batchId")
+    }
 
   /** Drive [[urlLedgerIngest]] over the driver documents (URL fixture
     * built at ingest) as a bounded multi-tick stream, then derive the
@@ -2226,18 +2067,11 @@ object Streaming {
     val docs = graft.Tables.read(spark, dir, "documents")
       .select(col("doc_id"),
         graft.ext.Urls.demoUrl(col("doc_id"), col("source")).as("url"))
-    val parts = (0 until ticks).map(i =>
-      docs.filter(pmod(hash(col("doc_id")), lit(ticks)) === i))
-    val schema = stageBatches(spark, s"$workDir/staged", parts)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(
-        urlLedgerIngest(stream, workDir, s"$workDir/cp",
-          "doc_id", "url", queryName = queryName),
-        queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", ticks)) { stream =>
+      urlLedgerIngest(stream, workDir, s"$workDir/cp",
+        "doc_id", "url", queryName = queryName)
+    } {
       val u = spark.read.parquet(s"$workDir/urls/batch=*")
         .select(col("doc_id"), col("url_canon"))
       val keepers = u.groupBy(col("url_canon"))
@@ -2248,7 +2082,7 @@ object Streaming {
           (col("doc_id") === col("keeper")).as("keep"),
           col("n_fetches"))
         .orderBy(col("doc_id"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Streaming WEB-pipeline ledgers: each micro-batch pays the
@@ -2268,46 +2102,38 @@ object Streaming {
   def webLedgerIngest(docs: DataFrame, workPath: String,
       checkpointDir: String, idCol: String, textCol: String,
       urlCol: String, queryName: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    named(docs.writeStream, queryName)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) => timedTick(queryName, batchId) {
-          import graft.ext.TextAnalysis
-          // r17: no checkpoint pin — the micro-batch source is staged
-          // parquet, and each extraction write needs a DIFFERENT
-          // column slice (url, text, source). The pin forced one
-          // full-width row materialization plus three full-width block
-          // scans; three direct column-pruned scans of the source are
-          // strictly less work, and the concurrent writes (r16, guide
-          // §2.6) stay independent because the source files are
-          // immutable for the tick.
-          val d = batch.toDF()
-          val stages = parWrites(
-            "url" -> (() =>
-              graft.ext.Urls.urlCanonicalLocal(d, idCol, urlCol)
-                .select(col(idCol), col("url_canon"))
-                .write.mode("overwrite")
-                .parquet(s"$workPath/urls/batch=$batchId")),
-            "blocks" -> (() =>
-              TextAnalysis.htmlBlocksLocal(
-                  TextAnalysis.htmlSyntheticPage(d, idCol, textCol),
-                  idCol, "page")
-                .filter(col("kept"))
-                .select(col(idCol), col("block_idx"), col("block_text"))
-                .write.mode("overwrite")
-                .parquet(s"$workPath/blocks/batch=$batchId")),
-            "meta" -> (() =>
-              d.select(col(idCol), col("source"))
-                .write.mode("overwrite")
-                .parquet(s"$workPath/meta/batch=$batchId")))
-          recordTickStages(queryName, batchId, stages)
-          ()
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(docs, checkpointDir, queryName) { (batch, batchId) =>
+      import graft.ext.TextAnalysis
+      // r17: no checkpoint pin — the micro-batch source is staged
+      // parquet, and each extraction write needs a DIFFERENT
+      // column slice (url, text, source). The pin forced one
+      // full-width row materialization plus three full-width block
+      // scans; three direct column-pruned scans of the source are
+      // strictly less work, and the concurrent writes (r16, guide
+      // §2.6) stay independent because the source files are
+      // immutable for the tick.
+      val d = batch
+      val stages = parWrites(
+        "url" -> (() =>
+          graft.ext.Urls.urlCanonicalLocal(d, idCol, urlCol)
+            .select(col(idCol), col("url_canon"))
+            .write.mode("overwrite")
+            .parquet(s"$workPath/urls/batch=$batchId")),
+        "blocks" -> (() =>
+          TextAnalysis.htmlBlocksLocal(
+              TextAnalysis.htmlSyntheticPage(d, idCol, textCol),
+              idCol, "page")
+            .filter(col("kept"))
+            .select(col(idCol), col("block_idx"), col("block_text"))
+            .write.mode("overwrite")
+            .parquet(s"$workPath/blocks/batch=$batchId")),
+        "meta" -> (() =>
+          d.select(col(idCol), col("source"))
+            .write.mode("overwrite")
+            .parquet(s"$workPath/meta/batch=$batchId")))
+      recordTickStages(queryName, batchId, stages)
+    }
 
   /** Drive [[webLedgerIngest]] over the driver documents as a bounded
     * multi-tick stream, then run [[graft.ext.Curation.webAssembleExport]]
@@ -2320,23 +2146,16 @@ object Streaming {
     val docs = graft.Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"),
         graft.ext.Urls.demoUrl(col("doc_id"), col("source")).as("url"))
-    val parts = (0 until ticks).map(i =>
-      docs.filter(pmod(hash(col("doc_id")), lit(ticks)) === i))
-    val schema = stageBatches(spark, s"$workDir/staged", parts)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(
-        webLedgerIngest(stream, workDir, s"$workDir/cp",
-          "doc_id", "text", "url", queryName = queryName),
-        queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", ticks)) { stream =>
+      webLedgerIngest(stream, workDir, s"$workDir/cp",
+        "doc_id", "text", "url", queryName = queryName)
+    } {
       graft.ext.Curation.webAssembleExport(
         spark.read.parquet(s"$workDir/urls/batch=*"),
         spark.read.parquet(s"$workDir/blocks/batch=*"),
         spark.read.parquet(s"$workDir/meta/batch=*"), "doc_id")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Frontier-filter attrition off the SAME at-ingest URL ledger: the
@@ -2353,26 +2172,25 @@ object Streaming {
       .select(col("doc_id"),
         graft.ext.Urls.demoCrawlUrl(col("doc_id"), col("source"))
           .as("url"))
-    val parts = (0 until ticks).map(i =>
-      docs.filter(pmod(hash(col("doc_id")), lit(ticks)) === i))
-    val schema = stageBatches(spark, s"$workDir/staged", parts)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(
-        urlLedgerIngest(stream, workDir, s"$workDir/cp",
-          "doc_id", "url", queryName = queryName),
-        queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", ticks)) { stream =>
+      urlLedgerIngest(stream, workDir, s"$workDir/cp",
+        "doc_id", "url", queryName = queryName)
+    } {
       spark.read.parquet(s"$workDir/urls/batch=*")
         .groupBy(coalesce(col("reason"), lit("kept")).as("stage"))
         .agg(count(lit(1)).as("n_urls"),
           countDistinct(col("url_canon")).as("n_canonical"))
         .orderBy(col("stage"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
+  /** Drive [[funnelLedgerIngest]] over the documents table as a
+    * bounded multi-tick stream, then derive the funnel report from the
+    * MAINTAINED state: stages 1-5 by summing the per-tick censuses,
+    * stage 6 by the canonical-survivor rule over the survivor union and
+    * the latest label snapshot. Equal to the one-shot `q_filter_funnel`
+    * report, whose oracle the gate shares. */
   def funnelStreamAvailableNow(spark: SparkSession, dir: String,
       workDir: String, queryName: String, ticks: Int = 2,
       geometry: graft.ext.Dedup.SigProbeGeometry =
@@ -2380,32 +2198,18 @@ object Streaming {
     require(ticks >= 2, "a funnel ledger gate needs at least two ticks")
     val docs = graft.Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    // pmod tick routing — the abs(hash) % MinValue trap (see
-    // pipelineIncrementalAvailableNow)
-    val parts = (0 until ticks).map(i =>
-      docs.filter(pmod(hash(col("doc_id")), lit(ticks)) === i))
-    val schema = stageBatches(spark, s"$workDir/staged", parts)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(
-        funnelLedgerIngest(stream, workDir, s"$workDir/cp",
-          "doc_id", "text", queryName = queryName, geometry = geometry),
-        queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", ticks)) { stream =>
+      funnelLedgerIngest(stream, workDir, s"$workDir/cp",
+        "doc_id", "text", queryName = queryName, geometry = geometry)
+    } {
       val c15 = spark.read.parquet(s"$workDir/census")
         .groupBy(col("stage"))
         .agg(sum(col("n_docs")).as("n_docs"),
           sum(col("n_tokens")).as("n_tokens"))
-      val lp = new org.apache.hadoop.fs.Path(s"$workDir/labels")
-      val fs = lp.getFileSystem(spark.sessionState.newHadoopConf())
-      val last = fs.listStatus(lp).map(_.getPath.getName)
-        .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
-        .max
       val surv = spark.read.parquet(s"$workDir/surv/batch=*")
       val s6 = graft.ext.Dedup.keepCanonical(surv, "doc_id",
-          spark.read.parquet(s"$workDir/labels/batch=$last"))
+          spark.read.parquet(latestBatchDir(spark, s"$workDir/labels").get))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
         .select(lit("6_dedup_canonical").as("stage"),
           col("n_docs"), col("n_tokens"))
@@ -2413,7 +2217,7 @@ object Streaming {
         // global aggregate here always emits — filter restores parity
         .filter(col("n_docs") > 0)
       c15.unionByName(s6)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Streaming tokenizer-vocabulary maintenance: each micro-batch of
@@ -2428,22 +2232,15 @@ object Streaming {
     * census size, and the corpus is never rescanned. */
   def vocabIngest(docs: DataFrame, statePath: String,
       checkpointDir: String, textCol: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          batch.toDF()
-            .select(explode(
-              split(col(textCol).cast("string"), " ", -1)).as("w"))
-            .filter(col("w") =!= "")
-            .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-            .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(docs, checkpointDir) { (batch, batchId) =>
+      batch
+        .select(explode(
+          split(col(textCol).cast("string"), " ", -1)).as("w"))
+        .filter(col("w") =!= "")
+        .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+        .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
 
   /** Count-min sketch maintained at INGEST: each tick sketches ITS
     * rows and writes the serialized counter table to an idempotent
@@ -2457,26 +2254,19 @@ object Streaming {
   def cmsIngest(rows: DataFrame, statePath: String,
       checkpointDir: String, valueCol: String, eps: Double = 0.001,
       confidence: Double = 0.99, seed: Int = 42)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val s = batch.sparkSession
-          import s.implicits._
-          val sk = batch.toDF().filter(col(valueCol).isNotNull)
-            .select(col(valueCol).cast("string").as("value"))
-            .stat.countMinSketch("value", eps, confidence, seed)
-          val os = new java.io.ByteArrayOutputStream()
-          sk.writeTo(os)
-          Seq((batchId, os.toByteArray)).toDF("batch_id", "sketch")
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(rows, checkpointDir) { (batch, batchId) =>
+      val s = batch.sparkSession
+      import s.implicits._
+      val sk = batch.filter(col(valueCol).isNotNull)
+        .select(col(valueCol).cast("string").as("value"))
+        .stat.countMinSketch("value", eps, confidence, seed)
+      val os = new java.io.ByteArrayOutputStream()
+      sk.writeTo(os)
+      Seq((batchId, os.toByteArray)).toDF("batch_id", "sketch")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
 
   /** Merge the per-tick sketches accumulated by [[cmsIngest]] back
     * into one CountMinSketch (cell-wise sum via `mergeInPlace` —
@@ -2502,20 +2292,13 @@ object Streaming {
       workDir: String, queryName: String): DataFrame = {
     val ev = graft.Tables.read(spark, dir, "events")
       .select(col("event_id"), col("event_type"))
-    val halves = Seq(
-      ev.filter(abs(hash(col("event_id"))) % 2 === 0),
-      ev.filter(abs(hash(col("event_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(cmsIngest(stream, s"$workDir/state",
-        s"$workDir/cp", "event_type"), queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(ev, "event_id", 2)) { stream =>
+      cmsIngest(stream, s"$workDir/state", s"$workDir/cp", "event_type")
+    } {
       val merged = cmsMergedState(spark, s"$workDir/state")
       graft.ext.Sketches.cmsEstimates(ev, "event_type", merged)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Content-defined-chunk census maintained at INGEST — the chunk
@@ -2529,22 +2312,15 @@ object Streaming {
   def chunkIngest(docs: DataFrame, statePath: String,
       checkpointDir: String, groupCol: String, textCol: String,
       window: Int = 8, mask: Int = 32)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          graft.ext.Dedup.contentChunks(batch.toDF(), textCol,
-              window, mask)
-            .groupBy(col(groupCol), col("chunk"))
-            .agg(count(lit(1)).as("cnt"),
-              min(length(col("chunk"))).as("len"))
-            .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(docs, checkpointDir) { (batch, batchId) =>
+      graft.ext.Dedup.contentChunks(batch, textCol,
+          window, mask)
+        .groupBy(col(groupCol), col("chunk"))
+        .agg(count(lit(1)).as("cnt"),
+          min(length(col("chunk"))).as("len"))
+        .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
 
   /** One-shot gate replay of [[chunkIngest]]: documents arrive in two
     * hash ticks; the dedup accounting derived from the summed chunk
@@ -2555,20 +2331,13 @@ object Streaming {
       workDir: String, queryName: String): DataFrame = {
     val docs = graft.Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("text"))
-    val halves = Seq(
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 0),
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(chunkIngest(stream, s"$workDir/state",
-        s"$workDir/cp", "source", "text"), queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", 2)) { stream =>
+      chunkIngest(stream, s"$workDir/state", s"$workDir/cp", "source", "text")
+    } {
       graft.ext.Dedup.chunkStatsFromCensus(
         spark.read.parquet(s"$workDir/state"), "source")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Late-arrival AUDIT at ingest — streaming observability for the
@@ -2587,46 +2356,39 @@ object Streaming {
   def lateAuditIngest(events: DataFrame, statePath: String,
       checkpointDir: String, tsCol: String,
       allowedLag: String = "1 day")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val s = batch.sparkSession
-          import s.implicits._
-          val df = batch.toDF().localCheckpoint(true)
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(statePath + "/wm"),
-            s.sparkContext.hadoopConfiguration)
-          // the high-watermark stays a DataFrame value (never collected)
-          // so the audit is agnostic to TIMESTAMP vs TIMESTAMP_NTZ
-          val late =
-            if (fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/wm")))
-              df.crossJoin(broadcast(
-                  s.read.parquet(s"$statePath/wm")
-                    .filter(col("batch_id") < batchId)
-                    .agg(max(col("max_ts")).as("__hw"))))
-                .filter(col("__hw").isNotNull &&
-                  col(tsCol) < col("__hw") - expr(s"INTERVAL $allowedLag"))
-                .drop("__hw")
-            else df.limit(0)
-          // NOT parallelizable (r16 note): `late` READS the wm root —
-          // on a replayed tick that listing includes this tick's own
-          // stale `wm/batch=<id>` dir, which the wm write below
-          // overwrites; racing the two turns the late read into
-          // FAILED_READ_FILE. The anti-dependency is the order.
-          late.write.mode("overwrite")
-            .parquet(s"$statePath/late/batch=$batchId")
-          df.agg(max(col(tsCol)).as("max_ts"))
-            .withColumn("batch_id", lit(batchId))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$statePath/wm/batch=$batchId")
-          graft.ext.Pinned.release(df)
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(events, checkpointDir) { (batch, batchId) =>
+      val s = batch.sparkSession
+      import s.implicits._
+      val df = batch.localCheckpoint(true)
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        new java.net.URI(statePath + "/wm"),
+        s.sparkContext.hadoopConfiguration)
+      // the high-watermark stays a DataFrame value (never collected)
+      // so the audit is agnostic to TIMESTAMP vs TIMESTAMP_NTZ
+      val late =
+        if (fs.exists(new Path(s"$statePath/wm")))
+          df.crossJoin(broadcast(
+              s.read.parquet(s"$statePath/wm")
+                .filter(col("batch_id") < batchId)
+                .agg(max(col("max_ts")).as("__hw"))))
+            .filter(col("__hw").isNotNull &&
+              col(tsCol) < col("__hw") - expr(s"INTERVAL $allowedLag"))
+            .drop("__hw")
+        else df.limit(0)
+      // NOT parallelizable (r16 note): `late` READS the wm root —
+      // on a replayed tick that listing includes this tick's own
+      // stale `wm/batch=<id>` dir, which the wm write below
+      // overwrites; racing the two turns the late read into
+      // FAILED_READ_FILE. The anti-dependency is the order.
+      late.write.mode("overwrite")
+        .parquet(s"$statePath/late/batch=$batchId")
+      df.agg(max(col(tsCol)).as("max_ts"))
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$statePath/wm/batch=$batchId")
+      graft.ext.Pinned.release(df)
+    }
 
   /** One-shot gate replay of [[lateAuditIngest]]: events arrive in two
     * DETERMINISTIC md5-keyed ticks (the md5 split — not Spark's
@@ -2639,18 +2401,14 @@ object Streaming {
       .select(col("event_id"), col("ts"), col("event_type"))
     val tick = graft.ext.Sampling.hashBucket(col("event_id"), 2)
     val halves = Seq(ev.filter(tick === 0), ev.filter(tick === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(lateAuditIngest(stream, s"$workDir/state",
-        s"$workDir/cp", "ts", allowedLag = "1 day"), queryName)
+    replayTicks(spark, workDir, queryName, halves) { stream =>
+      lateAuditIngest(stream, s"$workDir/state",
+        s"$workDir/cp", "ts", allowedLag = "1 day")
+    } {
       spark.read.parquet(s"$workDir/state/late")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_late"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** HLL distinct-count sketches maintained at INGEST: per tick, one
@@ -2664,20 +2422,13 @@ object Streaming {
     * [[histIngest]] (quantiles). */
   def hllIngest(rows: DataFrame, statePath: String,
       checkpointDir: String, keyCol: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          batch.toDF()
-            .groupBy(date_trunc("DAY", col("ts")).as("day"))
-            .agg(hll_sketch_agg(col(keyCol)).as("sk"))
-            .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(rows, checkpointDir) { (batch, batchId) =>
+      batch
+        .groupBy(date_trunc("DAY", col("ts")).as("day"))
+        .agg(hll_sketch_agg(col(keyCol)).as("sk"))
+        .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
 
   /** One-shot gate replay of [[hllIngest]]: events arrive in two hash
     * ticks; weekly estimates unioned from the accumulated daily
@@ -2687,17 +2438,10 @@ object Streaming {
       workDir: String, queryName: String): DataFrame = {
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"))
-    val halves = Seq(
-      ev.filter(abs(hash(col("event_id"))) % 2 === 0),
-      ev.filter(abs(hash(col("event_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(hllIngest(stream, s"$workDir/state",
-        s"$workDir/cp", "user_id"), queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(ev, "event_id", 2)) { stream =>
+      hllIngest(stream, s"$workDir/state", s"$workDir/cp", "user_id")
+    } {
       val weekly = spark.read.parquet(s"$workDir/state")
         .groupBy(date_trunc("WEEK", col("day")).as("week"))
         .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est"))
@@ -2709,7 +2453,7 @@ object Streaming {
           col("exact_users"),
           (abs(col("est") - col("exact_users")) <=
             col("exact_users") * 0.05).as("approx_ok"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Bloom filter maintained at INGEST: per tick, the arriving dim
@@ -2722,26 +2466,19 @@ object Streaming {
   def bloomIngest(rows: DataFrame, statePath: String,
       checkpointDir: String, keyCol: String, expectedKeys: Long,
       fpp: Double = 0.01)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val s = batch.sparkSession
-          import s.implicits._
-          val bf = batch.toDF()
-            .select(col(keyCol).cast("long").as(keyCol))
-            .stat.bloomFilter(keyCol, expectedKeys, fpp)
-          val os = new java.io.ByteArrayOutputStream()
-          bf.writeTo(os)
-          Seq((batchId, os.toByteArray)).toDF("batch_id", "bloom")
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(rows, checkpointDir) { (batch, batchId) =>
+      val s = batch.sparkSession
+      import s.implicits._
+      val bf = batch
+        .select(col(keyCol).cast("long").as(keyCol))
+        .stat.bloomFilter(keyCol, expectedKeys, fpp)
+      val os = new java.io.ByteArrayOutputStream()
+      bf.writeTo(os)
+      Seq((batchId, os.toByteArray)).toDF("batch_id", "bloom")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
 
   /** OR-merge the per-tick blooms accumulated by [[bloomIngest]]. */
   def bloomMergedState(spark: SparkSession, statePath: String)
@@ -2764,22 +2501,16 @@ object Streaming {
       workDir: String, queryName: String): DataFrame = {
     val hot = graft.Tables.read(spark, dir, "orders")
       .filter(col("o_totalprice") > 450000)
-    val halves = Seq(
-      hot.filter(abs(hash(col("o_orderkey"))) % 2 === 0),
-      hot.filter(abs(hash(col("o_orderkey"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(bloomIngest(stream, s"$workDir/state",
-        s"$workDir/cp", "o_orderkey", expectedKeys = 20000L), queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(hot, "o_orderkey", 2)) { stream =>
+      bloomIngest(stream, s"$workDir/state",
+        s"$workDir/cp", "o_orderkey", expectedKeys = 20000L)
+    } {
       val merged = bloomMergedState(spark, s"$workDir/state")
       graft.ext.Bloom.bloomPrunedJoinWith(
         graft.Tables.read(spark, dir, "lineitem"), hot,
         "l_orderkey", "o_orderkey", merged)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** k-anonymity ledger maintained at INGEST: each tick writes its own
@@ -2793,21 +2524,14 @@ object Streaming {
     * value band) with user_id sensitive, mirroring the batch q_kanon. */
   def kanonIngest(events: DataFrame, statePath: String,
       checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          batch.toDF()
-            .groupBy(col("event_type"), to_date(col("ts")).as("d"),
-              floor(col("value") / 32.0).as("vb"), col("user_id"))
-            .agg(count(lit(1)).as("n"))
-            .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(events, checkpointDir) { (batch, batchId) =>
+      batch
+        .groupBy(col("event_type"), to_date(col("ts")).as("d"),
+          floor(col("value") / 32.0).as("vb"), col("user_id"))
+        .agg(count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
 
   /** One-shot gate replay of [[kanonIngest]]: events arrive in two
     * hash-split ticks; the audit derived from the accumulated census
@@ -2818,22 +2542,15 @@ object Streaming {
     val ev = graft.Tables.read(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    val halves = Seq(
-      ev.filter(abs(hash(col("event_id"))) % 2 === 0),
-      ev.filter(abs(hash(col("event_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(kanonIngest(stream, s"$workDir/state",
-        s"$workDir/cp"), queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(ev, "event_id", 2)) { stream =>
+      kanonIngest(stream, s"$workDir/state", s"$workDir/cp")
+    } {
       graft.ext.Privacy.anonymityAuditFromCensus(
         spark.read.parquet(s"$workDir/state"),
         Seq(col("event_type"), col("d"), col("vb")), col("user_id"),
         col("n"), reportAs = "event_type", k = 5, l = 3)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Blocklist-hit ledger maintained at INGEST: each tick scans ITS
@@ -2846,19 +2563,12 @@ object Streaming {
   def blocklistIngest(docs: DataFrame, statePath: String,
       checkpointDir: String, idCol: String, textCol: String,
       phrases: Seq[String])
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          graft.ext.Curation
-            .blocklistHits(batch.toDF(), idCol, textCol, phrases)
-            .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(docs, checkpointDir) { (batch, batchId) =>
+      graft.ext.Curation
+        .blocklistHits(batch, idCol, textCol, phrases)
+        .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
 
   /** One-shot gate replay of [[blocklistIngest]]: documents arrive in
     * two hash-split ticks; the merged ledger must equal the batch
@@ -2871,22 +2581,16 @@ object Streaming {
       phrases: Seq[String]): DataFrame = {
     val docs = graft.Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val halves = Seq(
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 0),
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(blocklistIngest(stream, s"$workDir/state",
-        s"$workDir/cp", "doc_id", "text", phrases), queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", 2)) { stream =>
+      blocklistIngest(stream, s"$workDir/state",
+        s"$workDir/cp", "doc_id", "text", phrases)
+    } {
       spark.read.parquet(s"$workDir/state")
         .groupBy(col("doc_id"))
         .agg(sum(col("n_hits")).as("n_hits"),
           min(col("first_phrase")).as("first_phrase"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Winnowing-fingerprint census maintained at INGEST: each tick
@@ -2901,23 +2605,16 @@ object Streaming {
   def winnowIngest(docs: DataFrame, statePath: String,
       checkpointDir: String, idCol: String, textCol: String,
       k: Int, w: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          graft.ext.Dedup
-            .winnowFingerprintsLocal(batch.toDF(), idCol, textCol, k, w)
-            .groupBy(col("id").as("doc_id"))
-            .agg(count(lit(1)).as("n_fp"),
-              countDistinct(col("fp")).as("n_distinct_fp"),
-              sum(col("fp") % 1000000007L).as("fp_checksum"))
-            .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(docs, checkpointDir) { (batch, batchId) =>
+      graft.ext.Dedup
+        .winnowFingerprintsLocal(batch, idCol, textCol, k, w)
+        .groupBy(col("id").as("doc_id"))
+        .agg(count(lit(1)).as("n_fp"),
+          countDistinct(col("fp")).as("n_distinct_fp"),
+          sum(col("fp") % 1000000007L).as("fp_checksum"))
+        .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
 
   /** One-shot gate replay of [[winnowIngest]]: documents arrive in two
     * hash-split ticks; the merged ledger must equal the batch
@@ -2929,23 +2626,17 @@ object Streaming {
       workDir: String, queryName: String, k: Int, w: Int): DataFrame = {
     val docs = graft.Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val halves = Seq(
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 0),
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(winnowIngest(stream, s"$workDir/state",
-        s"$workDir/cp", "doc_id", "text", k, w), queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", 2)) { stream =>
+      winnowIngest(stream, s"$workDir/state",
+        s"$workDir/cp", "doc_id", "text", k, w)
+    } {
       spark.read.parquet(s"$workDir/state")
         .groupBy(col("doc_id"))
         .agg(sum(col("n_fp")).as("n_fp"),
           sum(col("n_distinct_fp")).as("n_distinct_fp"),
           sum(col("fp_checksum")).as("fp_checksum"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Scatter-matrix sufficient statistics maintained at INGEST — the
@@ -2960,40 +2651,33 @@ object Streaming {
     * rescanned. */
   def scatterIngest(vecs: DataFrame, statePath: String,
       checkpointDir: String, idCol: String, vecCol: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val sp = batch.sparkSession
-          import sp.implicits._
-          val dims = graft.ext.Similarity
-            .quantizedDims(batch.toDF(), idCol, vecCol)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // three independent census writes (s1/s2 share the persisted
-          // dims — the block manager's per-partition locks make the
-          // concurrent fill compute-once) — overlap them (r16, §2.6)
-          parWrites(
-            "s1" -> (() =>
-              dims.groupBy(col("d")).agg(sum(col("xq")).as("s1"))
-                .write.mode("overwrite")
-                .parquet(s"$statePath/s1/batch=$batchId")),
-            "s2" -> (() =>
-              dims.as("a").join(dims.as("b"), "vid")
-                .groupBy(col("a.d").as("dj"), col("b.d").as("dk"))
-                .agg(sum(col("a.xq") * col("b.xq")).as("s"))
-                .write.mode("overwrite")
-                .parquet(s"$statePath/s2/batch=$batchId")),
-            "n" -> (() =>
-              Seq(batch.count()).toDF("n")
-                .write.mode("overwrite")
-                .parquet(s"$statePath/n/batch=$batchId")))
-          dims.unpersist(blocking = false)
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(vecs, checkpointDir) { (batch, batchId) =>
+      val sp = batch.sparkSession
+      import sp.implicits._
+      val dims = graft.ext.Similarity
+        .quantizedDims(batch, idCol, vecCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // three independent census writes (s1/s2 share the persisted
+      // dims — the block manager's per-partition locks make the
+      // concurrent fill compute-once) — overlap them (r16, §2.6)
+      parWrites(
+        "s1" -> (() =>
+          dims.groupBy(col("d")).agg(sum(col("xq")).as("s1"))
+            .write.mode("overwrite")
+            .parquet(s"$statePath/s1/batch=$batchId")),
+        "s2" -> (() =>
+          dims.as("a").join(dims.as("b"), "vid")
+            .groupBy(col("a.d").as("dj"), col("b.d").as("dk"))
+            .agg(sum(col("a.xq") * col("b.xq")).as("s"))
+            .write.mode("overwrite")
+            .parquet(s"$statePath/s2/batch=$batchId")),
+        "n" -> (() =>
+          Seq(batch.count()).toDF("n")
+            .write.mode("overwrite")
+            .parquet(s"$statePath/n/batch=$batchId")))
+      dims.unpersist(blocking = false)
+    }
 
   /** One-shot gate replay of [[scatterIngest]]: vectors arrive in two
     * hash-split ticks; the top-PC derived from the summed ledger must
@@ -3003,20 +2687,14 @@ object Streaming {
       workDir: String, queryName: String, iterations: Int): DataFrame = {
     val vecs = graft.Tables.read(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val halves = Seq(
-      vecs.filter(abs(hash(col("vec_id"))) % 2 === 0),
-      vecs.filter(abs(hash(col("vec_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(scatterIngest(stream, s"$workDir/state",
-        s"$workDir/cp", "vec_id", "embedding"), queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(vecs, "vec_id", 2)) { stream =>
+      scatterIngest(stream, s"$workDir/state",
+        s"$workDir/cp", "vec_id", "embedding")
+    } {
       graft.ext.Similarity.topComponentFromLedger(spark,
         s"$workDir/state", iterations)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Vote-cell census maintained at INGEST — label hygiene's ledger:
@@ -3031,22 +2709,15 @@ object Streaming {
   def kappaIngest(items: DataFrame, statePath: String,
       checkpointDir: String, idCol: String, labelCol: String,
       nAnnotators: Int, nCats: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    items.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          graft.ext.Agreement
-            .annotatorLabels(batch.toDF(), idCol, labelCol,
-              nAnnotators, nCats)
-            .groupBy(col("id"), col("lab"))
-            .agg(count(lit(1)).as("n"))
-            .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(items, checkpointDir) { (batch, batchId) =>
+      graft.ext.Agreement
+        .annotatorLabels(batch, idCol, labelCol,
+          nAnnotators, nCats)
+        .groupBy(col("id"), col("lab"))
+        .agg(count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
 
   /** One-shot gate replay of [[kappaIngest]]: labeled vectors arrive in
     * two hash-split ticks; kappa off the accumulated cell ledger must
@@ -3056,20 +2727,14 @@ object Streaming {
       workDir: String, queryName: String): DataFrame = {
     val items = graft.Tables.read(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"))
-    val halves = Seq(
-      items.filter(abs(hash(col("vec_id"))) % 2 === 0),
-      items.filter(abs(hash(col("vec_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(kappaIngest(stream, s"$workDir/state",
-        s"$workDir/cp", "vec_id", "label", 3, 10), queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(items, "vec_id", 2)) { stream =>
+      kappaIngest(stream, s"$workDir/state",
+        s"$workDir/cp", "vec_id", "label", 3, 10)
+    } {
       graft.ext.Agreement.fleissKappaFromCells(
         spark.read.parquet(s"$workDir/state"), nRaters = 3)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Collocation censuses maintained at INGEST: per tick, the
@@ -3083,34 +2748,27 @@ object Streaming {
     * mirrors `TextAnalysis.tokens` exactly (same oracle). */
   def collocationIngest(docs: DataFrame, statePath: String,
       checkpointDir: String, textCol: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val toks = batch.toDF()
-            .select(split(col(textCol).cast("string"), " ").as("t"))
-            .filter(col("t").isNotNull)
-          // the two census writes are independent — overlap (r16, §2.6)
-          parWrites(
-            "uni" -> (() =>
-              toks.select(explode(col("t")).as("w"))
-                .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-                .write.mode("overwrite")
-                .parquet(s"$statePath/uni/batch=$batchId")),
-            "big" -> (() =>
-              toks.filter(size(col("t")) >= 2)
-                .select(explode(expr("transform(sequence(1, size(t)-1), " +
-                  "i -> named_struct('w1', t[i-1], 'w2', t[i]))")).as("bg"))
-                .groupBy(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-                .agg(count(lit(1)).as("freq"))
-                .write.mode("overwrite")
-                .parquet(s"$statePath/big/batch=$batchId")))
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(docs, checkpointDir) { (batch, batchId) =>
+      val toks = batch
+        .select(split(col(textCol).cast("string"), " ").as("t"))
+        .filter(col("t").isNotNull)
+      // the two census writes are independent — overlap (r16, §2.6)
+      parWrites(
+        "uni" -> (() =>
+          toks.select(explode(col("t")).as("w"))
+            .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+            .write.mode("overwrite")
+            .parquet(s"$statePath/uni/batch=$batchId")),
+        "big" -> (() =>
+          toks.filter(size(col("t")) >= 2)
+            .select(explode(expr("transform(sequence(1, size(t)-1), " +
+              "i -> named_struct('w1', t[i-1], 'w2', t[i]))")).as("bg"))
+            .groupBy(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+            .agg(count(lit(1)).as("freq"))
+            .write.mode("overwrite")
+            .parquet(s"$statePath/big/batch=$batchId")))
+    }
 
   /** One-shot gate replay of [[collocationIngest]]: documents arrive
     * in two hash-split ticks; PMI off the summed censuses must equal
@@ -3120,23 +2778,16 @@ object Streaming {
       workDir: String, queryName: String, minCount: Long): DataFrame = {
     val docs = graft.Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val halves = Seq(
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 0),
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(collocationIngest(stream, s"$workDir/state",
-        s"$workDir/cp", "text"), queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", 2)) { stream =>
+      collocationIngest(stream, s"$workDir/state", s"$workDir/cp", "text")
+    } {
       val uni = spark.read.parquet(s"$workDir/state/uni")
         .groupBy(col("w")).agg(sum(col("freq")).as("cw"))
       val big = spark.read.parquet(s"$workDir/state/big")
         .groupBy(col("w1"), col("w2")).agg(sum(col("freq")).as("cww"))
       graft.ext.TextAnalysis.pmiFromCensus(uni, big, minCount)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Basket censuses maintained at INGEST: per tick, the distinct
@@ -3150,46 +2801,40 @@ object Streaming {
   def assocIngest(rows: DataFrame, statePath: String,
       checkpointDir: String, basketCol: String, itemCol: String,
       maxBasketItems: Int = 1024)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val items = batch.toDF()
-            .select(col(basketCol).as("b"), col(itemCol).as("i"))
-            .filter(col("b").isNotNull && col("i").isNotNull)
-            .distinct()
-          val sized = items.groupBy(col("b"))
-            .agg(count(lit(1)).as("basket_sz"))
-            .filter(col("basket_sz") <= maxBasketItems)
-            .select(col("b"))
-          val kept = items.join(sized, "b").persist()
-          try {
-            // three independent census writes over the persisted kept
-            // relation — overlap (r16, §2.6)
-            parWrites(
-              "item" -> (() =>
-                kept.groupBy(col("i")).agg(count(lit(1)).as("supp"))
-                  .write.mode("overwrite")
-                  .parquet(s"$statePath/item/batch=$batchId")),
-              "pair" -> (() =>
-                kept.as("x")
-                  .join(kept.as("y"),
-                    col("x.b") === col("y.b") && col("x.i") < col("y.i"))
-                  .groupBy(col("x.i").as("item_a"), col("y.i").as("item_b"))
-                  .agg(count(lit(1)).as("supp_ab"))
-                  .write.mode("overwrite")
-                  .parquet(s"$statePath/pair/batch=$batchId")),
-              "n" -> (() =>
-                kept.agg(countDistinct(col("b")).as("n"))
-                  .write.mode("overwrite")
-                  .parquet(s"$statePath/n/batch=$batchId")))
-            ()
-          } finally { kept.unpersist(); () }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(rows, checkpointDir) { (batch, batchId) =>
+      val items = batch
+        .select(col(basketCol).as("b"), col(itemCol).as("i"))
+        .filter(col("b").isNotNull && col("i").isNotNull)
+        .distinct()
+      val sized = items.groupBy(col("b"))
+        .agg(count(lit(1)).as("basket_sz"))
+        .filter(col("basket_sz") <= maxBasketItems)
+        .select(col("b"))
+      val kept = items.join(sized, "b").persist()
+      try {
+        // three independent census writes over the persisted kept
+        // relation — overlap (r16, §2.6)
+        parWrites(
+          "item" -> (() =>
+            kept.groupBy(col("i")).agg(count(lit(1)).as("supp"))
+              .write.mode("overwrite")
+              .parquet(s"$statePath/item/batch=$batchId")),
+          "pair" -> (() =>
+            kept.as("x")
+              .join(kept.as("y"),
+                col("x.b") === col("y.b") && col("x.i") < col("y.i"))
+              .groupBy(col("x.i").as("item_a"), col("y.i").as("item_b"))
+              .agg(count(lit(1)).as("supp_ab"))
+              .write.mode("overwrite")
+              .parquet(s"$statePath/pair/batch=$batchId")),
+          "n" -> (() =>
+            kept.agg(countDistinct(col("b")).as("n"))
+              .write.mode("overwrite")
+              .parquet(s"$statePath/n/batch=$batchId")))
+        ()
+      } finally { kept.unpersist(); () }
+    }
 
   /** One-shot gate replay of [[assocIngest]]: lineitem rows arrive in
     * two ticks HASH-SPLIT ON THE BASKET KEY (the arrival contract);
@@ -3202,17 +2847,9 @@ object Streaming {
     val rows = graft.Tables.read(spark, dir, "lineitem")
       .select(col("l_orderkey").as("b"),
         (col("l_partkey") % 200).as("i"))
-    val halves = Seq(
-      rows.filter(abs(hash(col("b"))) % 2 === 0),
-      rows.filter(abs(hash(col("b"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(assocIngest(stream, s"$workDir/state",
-        s"$workDir/cp", "b", "i"), queryName)
+    replayTicks(spark, workDir, queryName, hashTicks(rows, "b", 2)) { stream =>
+      assocIngest(stream, s"$workDir/state", s"$workDir/cp", "b", "i")
+    } {
       val supp = spark.read.parquet(s"$workDir/state/item")
         .groupBy(col("i")).agg(sum(col("supp")).as("supp"))
       val pairSupp = spark.read.parquet(s"$workDir/state/pair")
@@ -3221,7 +2858,7 @@ object Streaming {
       val n = spark.read.parquet(s"$workDir/state/n")
         .agg(sum(col("n")).as("n_baskets"))
       graft.ext.Assoc.pairRulesFromCensus(supp, pairSupp, n, minSupport)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** One-shot gate replay of [[vocabIngest]]: documents arrive in two
@@ -3233,21 +2870,14 @@ object Streaming {
       workDir: String, queryName: String): DataFrame = {
     val docs = graft.Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val halves = Seq(
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 0),
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(vocabIngest(stream, s"$workDir/state",
-        s"$workDir/cp", "text"), queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", 2)) { stream =>
+      vocabIngest(stream, s"$workDir/state", s"$workDir/cp", "text")
+    } {
       val words = spark.read.parquet(s"$workDir/state")
         .groupBy(col("w")).agg(sum(col("freq")).as("freq"))
       graft.ext.Unigram.unigramSeedFromWords(words)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** One-shot gate replay of the Zipf health monitor over
@@ -3260,21 +2890,14 @@ object Streaming {
       workDir: String, queryName: String): DataFrame = {
     val docs = graft.Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val halves = Seq(
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 0),
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(vocabIngest(stream, s"$workDir/state",
-        s"$workDir/cp", "text"), queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", 2)) { stream =>
+      vocabIngest(stream, s"$workDir/state", s"$workDir/cp", "text")
+    } {
       val census = spark.read.parquet(s"$workDir/state")
         .groupBy(col("w")).agg(sum(col("freq")).as("cnt"))
       graft.ext.TextAnalysis.zipfFitFromCensus(census)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Histogram sketch maintained at INGEST: per tick, the exact
@@ -3288,19 +2911,12 @@ object Streaming {
   def histIngest(rows: DataFrame, statePath: String,
       checkpointDir: String, valueCol: String, lo: Double, hi: Double,
       buckets: Int, groupCols: Seq[String])
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          graft.ext.Profile.histogram(batch.toDF(), valueCol, lo, hi,
-              buckets, groupCols)
-            .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(rows, checkpointDir) { (batch, batchId) =>
+      graft.ext.Profile.histogram(batch, valueCol, lo, hi,
+          buckets, groupCols)
+        .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
 
   /** One-shot gate replay of [[histIngest]] at the q_quantile_rollup
     * grain (per-habit daily histograms → per-habit quantiles): two
@@ -3311,24 +2927,18 @@ object Streaming {
     val ev = graft.Tables.eventsAsHabits(spark, dir)
       .withColumn("day", graft.analytics.Habits.dayBucket(col("ts")))
       .select(col("event_id"), col("habit"), col("day"), col("value"))
-    val halves = Seq(
-      ev.filter(abs(hash(col("event_id"))) % 2 === 0),
-      ev.filter(abs(hash(col("event_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(histIngest(stream, s"$workDir/state",
+    replayTicks(spark, workDir, queryName,
+        hashTicks(ev, "event_id", 2)) { stream =>
+      histIngest(stream, s"$workDir/state",
         s"$workDir/cp", "value", lo = 0.0, hi = 640.0, buckets = 64,
-        groupCols = Seq("habit", "day")), queryName)
+        groupCols = Seq("habit", "day"))
+    } {
       val daily = spark.read.parquet(s"$workDir/state")
         .groupBy(col("habit"), col("day"), col("bucket"))
         .agg(sum(col("n")).as("n"))
       graft.ext.Profile.histogramQuantiles(daily, Seq("habit"),
         qs = Seq(0.5, 0.9, 0.99), lo = 0.0, hi = 640.0, buckets = 64)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Row-granular data-quality QUARANTINE at ingest — the dead-letter-
@@ -3343,33 +2953,26 @@ object Streaming {
   def quarantineIngest(rows: DataFrame, sinkPath: String,
       quarantinePath: String, checkpointDir: String,
       predicate: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val df = batch.toDF().localCheckpoint(true)
-          // the split must be EXHAUSTIVE: a predicate evaluating to
-          // NULL (e.g. `value >= 0` on a null value) matches neither
-          // p nor !p, so null-verdict rows are pinned to the
-          // quarantine side — a row the expectation cannot vouch for
-          // waits in the ledger, never vanishes
-          val pass = coalesce(predicate, lit(false))
-          // the two sides of the split are independent scans of the
-          // pinned batch — overlap (r16, §2.6)
-          parWrites(
-            "sink" -> (() => df.filter(pass)
-              .write.mode("overwrite")
-              .parquet(s"$sinkPath/batch=$batchId")),
-            "quarantine" -> (() => df.filter(!pass)
-              .write.mode("overwrite")
-              .parquet(s"$quarantinePath/batch=$batchId")))
-          graft.ext.Pinned.release(df)
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(rows, checkpointDir) { (batch, batchId) =>
+      val df = batch.localCheckpoint(true)
+      // the split must be EXHAUSTIVE: a predicate evaluating to
+      // NULL (e.g. `value >= 0` on a null value) matches neither
+      // p nor !p, so null-verdict rows are pinned to the
+      // quarantine side — a row the expectation cannot vouch for
+      // waits in the ledger, never vanishes
+      val pass = coalesce(predicate, lit(false))
+      // the two sides of the split are independent scans of the
+      // pinned batch — overlap (r16, §2.6)
+      parWrites(
+        "sink" -> (() => df.filter(pass)
+          .write.mode("overwrite")
+          .parquet(s"$sinkPath/batch=$batchId")),
+        "quarantine" -> (() => df.filter(!pass)
+          .write.mode("overwrite")
+          .parquet(s"$quarantinePath/batch=$batchId")))
+      graft.ext.Pinned.release(df)
+    }
 
   /** One-shot gate replay of [[quarantineIngest]]: the events feed with
     * every `event_id % 11 = 3` row's value corrupted to `-(value+1)`
@@ -3383,18 +2986,11 @@ object Streaming {
       .select(col("event_id"), col("user_id"),
         when(col("event_id") % 11 === 3, -(col("value") + 1))
           .otherwise(col("value")).as("value"))
-    val halves = Seq(
-      ev.filter(abs(hash(col("event_id"))) % 2 === 0),
-      ev.filter(abs(hash(col("event_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(quarantineIngest(stream, s"$workDir/curated",
-        s"$workDir/quarantine", s"$workDir/cp", col("value") >= 0),
-        queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(ev, "event_id", 2)) { stream =>
+      quarantineIngest(stream, s"$workDir/curated",
+        s"$workDir/quarantine", s"$workDir/cp", col("value") >= 0)
+    } {
       def side(path: String, name: String) =
         spark.read.parquet(path)
           .agg(count(lit(1)).as("n_rows"),
@@ -3402,7 +2998,7 @@ object Streaming {
           .select(lit(name).as("dest"), col("n_rows"), col("value_sum"))
       side(s"$workDir/curated", "curated")
         .unionByName(side(s"$workDir/quarantine", "quarantine"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Streaming DECONTAMINATION gate: every micro-batch of TRAIN
@@ -3421,7 +3017,7 @@ object Streaming {
   def contaminationIngest(train: DataFrame, test: DataFrame,
       ledgerPath: String, checkpointDir: String, idCol: String,
       textCol: String, minLen: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     def windows(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       transform(sequence(lit(1), length(c) - (minLen - 1)),
         i => c.substr(i, lit(minLen)))
@@ -3430,23 +3026,16 @@ object Streaming {
       .select(col(idCol), posexplode(windows(col(textCol)))
         .as(Seq("pos0", "w")))
       .select(col(idCol), (col("pos0") + 1).cast("long").as("i"), col("w"))
-    train.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val tw = batch.toDF()
-            .filter(length(col(textCol)) >= minLen)
-            .select(explode(windows(col(textCol))).as("w"))
-            .distinct()
-          testIdx.join(tw, "w")
-            .select(col(idCol), col("i"))
-            .write.mode("overwrite")
-            .parquet(s"$ledgerPath/batch=$batchId")
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    ledgerStream(train, checkpointDir) { (batch, batchId) =>
+      val tw = batch
+        .filter(length(col(textCol)) >= minLen)
+        .select(explode(windows(col(textCol))).as("w"))
+        .distinct()
+      testIdx.join(tw, "w")
+        .select(col(idCol), col("i"))
+        .write.mode("overwrite")
+        .parquet(s"$ledgerPath/batch=$batchId")
+    }
   }
 
   /** One-shot gate replay of [[contaminationIngest]]: the train split
@@ -3463,22 +3052,16 @@ object Streaming {
       .select(col("doc_id"), col("text"))
     val test = d.filter(col("split") === "test")
       .select(col("doc_id"), col("text"))
-    val halves = Seq(
-      train.filter(abs(hash(col("doc_id"))) % 2 === 0),
-      train.filter(abs(hash(col("doc_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(contaminationIngest(stream, test, s"$workDir/ledger",
-        s"$workDir/cp", "doc_id", "text", minLen), queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(train, "doc_id", 2)) { stream =>
+      contaminationIngest(stream, test, s"$workDir/ledger",
+        s"$workDir/cp", "doc_id", "text", minLen)
+    } {
       spark.read.parquet(s"$workDir/ledger")
         .select(col("doc_id"), col("i")).distinct()
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_spans"), min(col("i")).as("first_pos"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Streaming TEXT-INDEX maintenance: each micro-batch of documents
@@ -3491,26 +3074,19 @@ object Streaming {
     * without ever rescanning the corpus. */
   def bm25Ingest(docs: DataFrame, indexPath: String, checkpointDir: String,
       idCol: String, textCol: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val df = batch.toDF().localCheckpoint(true)
-          val (postings, lens) =
-            graft.ext.TextAnalysis.invertedIndex(df, idCol, textCol)
-          // independent writes off the pinned batch — overlap (r16, §2.6)
-          parWrites(
-            "postings" -> (() => postings.write.mode("overwrite")
-              .parquet(s"$indexPath/postings/batch=$batchId")),
-            "lens" -> (() => lens.write.mode("overwrite")
-              .parquet(s"$indexPath/lens/batch=$batchId")))
-          graft.ext.Pinned.release(df)
-          ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    ledgerStream(docs, checkpointDir) { (batch, batchId) =>
+      val df = batch.localCheckpoint(true)
+      val (postings, lens) =
+        graft.ext.TextAnalysis.invertedIndex(df, idCol, textCol)
+      // independent writes off the pinned batch — overlap (r16, §2.6)
+      parWrites(
+        "postings" -> (() => postings.write.mode("overwrite")
+          .parquet(s"$indexPath/postings/batch=$batchId")),
+        "lens" -> (() => lens.write.mode("overwrite")
+          .parquet(s"$indexPath/lens/batch=$batchId")))
+      graft.ext.Pinned.release(df)
+    }
 
   /** One-shot gate replay of [[bm25Ingest]]: two hash-split ticks
     * build the index, then the query scores against the maintained
@@ -3521,22 +3097,15 @@ object Streaming {
       topK: Int): DataFrame = {
     val docs = graft.Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val halves = Seq(
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 0),
-      docs.filter(abs(hash(col("doc_id"))) % 2 === 1))
-    val schema = stageBatches(spark, s"$workDir/staged", halves)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(bm25Ingest(stream, s"$workDir/index",
-        s"$workDir/cp", "doc_id", "text"), queryName)
+    replayTicks(spark, workDir, queryName,
+        hashTicks(docs, "doc_id", 2)) { stream =>
+      bm25Ingest(stream, s"$workDir/index", s"$workDir/cp", "doc_id", "text")
+    } {
       graft.ext.TextAnalysis.bm25FromIndex(
         spark.read.parquet(s"$workDir/index/postings").drop("batch"),
         spark.read.parquet(s"$workDir/index/lens").drop("batch"),
         "doc_id", queryTerms, topK = topK)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Streaming ANN-INDEX maintenance: tick 0 freezes the centroid set
@@ -3553,35 +3122,28 @@ object Streaming {
     * content-deterministic), so the index never double-counts. */
   def ivfIngest(embs: DataFrame, workPath: String, checkpointDir: String,
       idCol: String, vecCol: String, nCentroids: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    embs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-          val df = batch.toDF().localCheckpoint(true)
-          val sp = df.sparkSession
-          val centPath = s"$workPath/centroids"
-          val p = new org.apache.hadoop.fs.Path(centPath)
-          val fs = p.getFileSystem(sp.sessionState.newHadoopConf())
-          if (!fs.exists(p)) {
-            require(batchId == 0L,
-              s"centroid bootstrap missing at batch $batchId — the " +
-                "index must be seeded by tick 0")
-            df.orderBy(col(idCol)).limit(nCentroids)
-              .select(col(idCol), col(vecCol))
-              .write.parquet(centPath)
-          }
-          val cents = graft.ext.Dedup.withNorm(
-            sp.read.parquet(centPath), idCol, vecCol, "cent_id", "ce")
-          graft.ext.Similarity.ivfAssign(df, idCol, vecCol, cents)
-            .write.mode("overwrite")
-            .parquet(s"$workPath/postings/batch=$batchId")
-          graft.ext.Pinned.release(df)
-          ()
+      : StreamingQuery =
+    ledgerStream(embs, checkpointDir) { (batch, batchId) =>
+      val df = batch.localCheckpoint(true)
+      val sp = df.sparkSession
+      val centPath = s"$workPath/centroids"
+      val p = new Path(centPath)
+      val fs = p.getFileSystem(sp.sessionState.newHadoopConf())
+      if (!fs.exists(p)) {
+        require(batchId == 0L,
+          s"centroid bootstrap missing at batch $batchId — the " +
+            "index must be seeded by tick 0")
+        df.orderBy(col(idCol)).limit(nCentroids)
+          .select(col(idCol), col(vecCol))
+          .write.parquet(centPath)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      val cents = graft.ext.Dedup.withNorm(
+        sp.read.parquet(centPath), idCol, vecCol, "cent_id", "ce")
+      graft.ext.Similarity.ivfAssign(df, idCol, vecCol, cents)
+        .write.mode("overwrite")
+        .parquet(s"$workPath/postings/batch=$batchId")
+      graft.ext.Pinned.release(df)
+    }
 
   /** One-shot gate replay of [[ivfIngest]]: the embeddings table is
     * staged as two RANGE-split files (ordered arrival — the bootstrap
@@ -3595,28 +3157,11 @@ object Streaming {
       nCentroids: Int = 16, nProbes: Int = 4): DataFrame = {
     val emb = graft.Tables.read(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val staging = s"$workDir/staged"
-    emb.repartitionByRange(2, col("vec_id")).write.parquet(staging)
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val sfs = stagingPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val t0 = System.currentTimeMillis()
-    sfs.listStatus(stagingPath).toSeq.filter(s => s.isFile && {
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }).sortBy(_.getPath.getName).zipWithIndex.foreach { case (f, i) =>
-      sfs.setTimes(f.getPath, t0 + i * 60000L, -1)
-    }
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream
-        .schema(spark.read.parquet(staging).schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-      awaitOneShot(
-        ivfIngest(stream, s"$workDir/ivf", s"$workDir/cp", "vec_id",
-          "embedding", nCentroids),
-        queryName)
+    stageRanges(spark, emb, 2, "vec_id", workDir)
+    replayStaged(spark, workDir, queryName, emb.schema) { stream =>
+      ivfIngest(stream, s"$workDir/ivf", s"$workDir/cp", "vec_id",
+        "embedding", nCentroids)
+    } {
       val cents = graft.ext.Dedup.withNorm(
         spark.read.parquet(s"$workDir/ivf/centroids"), "vec_id",
         "embedding", "cent_id", "ce")
@@ -3624,7 +3169,7 @@ object Streaming {
         spark.read.parquet(s"$workDir/ivf/postings").drop("batch"),
         cents, emb.filter(col("vec_id") < 8), "vec_id", "embedding",
         k, nProbes)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** One-shot gate replay of [[cdcStream]]: the change feed is staged
@@ -3640,18 +3185,12 @@ object Streaming {
       feed: DataFrame, seqValues: Seq[Long], workDir: String,
       queryName: String): DataFrame = {
     val ticks = seqValues.map(s => feed.filter(col("seq") === s))
-    val schema = stageBatches(spark, s"$workDir/staged", ticks)
     val sink = s"$workDir/sink"
     current.write.parquet(sink)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShuffleParts)
-    try {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")
-      awaitOneShot(
-        cdcStream(stream, sink, s"$workDir/cp", Seq("event_id"), "seq"),
-        queryName)
+    replayTicks(spark, workDir, queryName, ticks) { stream =>
+      cdcStream(stream, sink, s"$workDir/cp", Seq("event_id"), "seq")
+    } {
       spark.read.parquet(sink)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 }

@@ -1922,4 +1922,121 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
           "snapshot) must still equal the batch composition")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
+
+  test("chunkStatsAvailableNow routes a key hashing to Int.MinValue " +
+      "under ANSI mode and equals the batch chunkDedupStats") {
+    val s = spark
+    import s.implicits._
+    // the fixture's point: this bigint hashes to Int.MinValue, where
+    // abs(hash) raises ARITHMETIC_OVERFLOW under ANSI mode
+    assert(Seq(1957873941L).toDF("k").select(hash(col("k"))).head()
+      .getInt(0) == Int.MinValue)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ansitick_")
+    try {
+      val docs = Seq(
+        (1957873941L, "web", "the quick brown fox jumps over the lazy dog"),
+        (7L, "web", "the quick brown fox jumps over the lazy dog again"),
+        (8L, "books", "a completely different document with its own words"),
+        (9L, "books", "the quick brown fox naps under a different tree"))
+        .toDF("doc_id", "source", "text")
+      docs.coalesce(1).write.parquet(dir.resolve("documents.parquet").toString)
+      val stream = Streaming.chunkStatsAvailableNow(s, dir.toString,
+          dir.resolve("work").toString, Streaming.nextQueryName("spec_ansi"))
+        .collect().toSet
+      val batch = graft.ext.Dedup.chunkDedupStats(docs, "source", "text")
+        .collect().toSet
+      assert(stream.nonEmpty)
+      assert(stream == batch,
+        "the two-tick replay must equal the one-pass batch accounting")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("cdcStreamAvailableNow rejects an empty tick list with a clear " +
+      "message") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdcnil_")
+    try {
+      val current = Seq((1L, 1.0)).toDF("event_id", "value")
+      val feed = Seq((1L, 2.0, 1L, "U")).toDF("event_id", "value", "seq", "op")
+      val ex = intercept[IllegalArgumentException](
+        Streaming.cdcStreamAvailableNow(s, current, feed, seqValues = Nil,
+          dir.resolve("work").toString, Streaming.nextQueryName("spec_cdcnil")))
+      assert(ex.getMessage.contains("no ticks to stage"), ex.getMessage)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  /** Messages along `e`'s cause chain. */
+  private def causeMessages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .flatMap(c => Option(c.getMessage)).toSeq
+
+  /** A foreachBatch sink whose every tick throws `msg`. */
+  private def throwingSink(stream: org.apache.spark.sql.DataFrame,
+      checkpointDir: String, msg: String) =
+    stream.writeStream.option("checkpointLocation", checkpointDir)
+      .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+        throw new IllegalStateException(msg) }
+      .trigger(Trigger.AvailableNow()).start()
+
+  test("replayTicks restores spark.sql.shuffle.partitions when a tick " +
+      "throws") {
+    val s = spark
+    val prior = s.conf.get("spark.sql.shuffle.partitions")
+    val dir = java.nio.file.Files.createTempDirectory("graft_replayfail_")
+    s.conf.set("spark.sql.shuffle.partitions", "7")
+    try {
+      val ex = intercept[Exception](
+        Streaming.replayTicks(s, dir.toString,
+            Streaming.nextQueryName("spec_replayfail"),
+            Seq(s.range(0, 3).toDF("id"), s.range(3, 6).toDF("id"))) {
+          stream => throwingSink(stream, dir.resolve("cp").toString,
+            "replay tick boom")
+        }(fail("the read-back must not run after a failed replay")))
+      assert(causeMessages(ex).exists(_.contains("replay tick boom")),
+        causeMessages(ex).mkString(" | "))
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "7",
+        "the replay pin must be undone on the failure path")
+    } finally {
+      s.conf.set("spark.sql.shuffle.partitions", prior)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("withStagedEvents restores shuffle partitions and nanosAsLong " +
+      "when the replay throws") {
+    val s = spark
+    import s.implicits._
+    val priorParts = s.conf.get("spark.sql.shuffle.partitions")
+    val priorNanos = s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
+    val dir = java.nio.file.Files.createTempDirectory("graft_stagedfail_")
+    try {
+      // a single events.parquet FILE, as the testdata ships it: the
+      // staging symlinks it into the stream's source directory
+      val tmp = dir.resolve("events_tmp")
+      Seq((1L, ts("2024-01-01 10:00:00"), 1L, "click", 1.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.parquet(tmp.toString)
+      val part = tmp.toFile.listFiles().filter(_.getName.endsWith(".parquet"))
+      java.nio.file.Files.move(part.head.toPath, dir.resolve("events.parquet"))
+      s.conf.set("spark.sql.shuffle.partitions", "7")
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+      val ex = intercept[Exception](
+        Streaming.withStagedEvents(s, dir.toString) { mkStream =>
+          throwingSink(mkStream(), dir.resolve("cp").toString,
+            "staged tick boom").awaitTermination()
+        })
+      assert(causeMessages(ex).exists(_.contains("staged tick boom")),
+        causeMessages(ex).mkString(" | "))
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "7")
+      assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false")
+    } finally {
+      s.conf.set("spark.sql.shuffle.partitions", priorParts)
+      priorNanos match {
+        case Some(v) => s.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
+        case None => s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+      }
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
 }
