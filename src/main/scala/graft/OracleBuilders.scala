@@ -162,14 +162,15 @@ private[graft] object OracleBuilders {
               WHEN 2 THEN '.org.uk' WHEN 3 THEN '.io'
               WHEN 4 THEN '.unknowntld' ELSE '.com.au' END) END)"""
 
-  /** SQL twin of [[graft.ext.Urls.urlRegistrableDomain]] applied to a
-    * host-valued SQL expression — GENERATED from the engine's own
-    * suffix table and capture patterns so the two longest-match folds
-    * cannot drift. `''` marks "host IS a public suffix" and blocks the
-    * prevailing-`*` fallback, exactly as the expression form does. */
+  /** DuckDB replay of [[graft.ext.Urls.registrableDomainLocal]] applied
+    * to a host-valued SQL expression — GENERATED from the engine's own
+    * suffix table ([[graft.ext.Urls.SuffixesOrdered]], longest match
+    * first) and capture patterns, so the two cannot drift. `''` marks
+    * "host IS a public suffix" and blocks the prevailing-`*` fallback,
+    * as the kernel's early NULL return does. */
   def pldSql(host: String): String = {
-    // one flat first-match-wins CASE, mirroring the engine's flat
-    // CaseWhen (see urlRegistrableDomain's nested-coalesce note)
+    // one flat first-match-wins CASE over (suffix-equality,
+    // suffix-match) branch pairs in longest-match order
     val branches = graft.ext.Urls.SuffixesOrdered.map { s =>
       s"""WHEN $host = '$s' THEN ''
               WHEN $host LIKE '%.$s'
@@ -404,7 +405,7 @@ private[graft] object OracleBuilders {
          FROM ver WHERE $td * inter >= $tn * (sz_a + sz_b - inter)$pairCond
          ORDER BY id_a, id_b"""
 
-  /** DuckDB replay of [[graft.ext.Dedup.winnowFingerprints]]: k-gram
+  /** DuckDB replay of [[graft.ext.Dedup.winnowFingerprintsLocal]]: k-gram
     * md5-top-60 hashes, each position exploded into the ≤ w window
     * starts covering it (clamped to the valid start range
     * `[1, max(1, len−k−w+2)]`), per-window min hash with the

@@ -825,7 +825,7 @@ private[graft] object Oracles2 {
     // verified pair set — and so the attrition report — is identical
     "q_funnel_stream_auto" -> filterFunnelOracle,
 
-    // the repetition family mirrors gopherRepetition definitionally:
+    // the repetition family mirrors gopherRepetitionLocal definitionally:
     // dup counts/char mass from per-(doc, segment) GROUP BY counts
     // (= the engine's sorted-adjacency fold), top-gram mass as
     // max(count*len) among the doc's top-count grams

@@ -230,7 +230,7 @@ private[graft] object QueriesDedupSimMm {
         .orderBy(col("id_a"), col("id_b"))),
 
     "q_dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashSignatures(Tables.read(s, dir, "documents"),
+      Dedup.simhashSignaturesLocal(Tables.read(s, dir, "documents"),
           "doc_id", "text")
         .orderBy(col("doc_id"))),
 

@@ -380,10 +380,6 @@ private[graft] object QueriesScaleText {
           .when(col("doc_id") % 7 === 1, " der die und das ist")
           .when(col("doc_id") % 7 === 2, " le les des et est")
           .otherwise(""))
-      // r17: typed kernel twin (bit-identical integer scores,
-      // ExtSpec-pinned; the expression form re-embedded the five
-      // interpreted marker filters twice) — the dirtying concat stays
-      // a Catalyst expression
       TextAnalysis.langIdMarginLocal(
           Tables.read(s, dir, "documents")
             .select(col("doc_id"), dirty.as("text")),
@@ -412,11 +408,9 @@ private[graft] object QueriesScaleText {
         .orderBy(col("lang"))
     }),
 
-    // r17: typed kernel twin — one shuffle-free corpus pass against
-    // the broadcast literal profile instead of explode + two hash
-    // aggregates + broadcast join + rank window (values identical,
-    // all-long arithmetic, ExtSpec-pinned; langIdNgram stays the
-    // relational reference)
+    // one shuffle-free typed corpus pass against the literal trigram
+    // profile; the oracle replays it as explode + profile join + rank
+    // window (all-long arithmetic, so the two agree exactly)
     "q_lang_id_ngram" -> ((s, dir) =>
       TextAnalysis.langIdNgramLocal(Tables.read(s, dir, "documents"),
           "doc_id", "text")
@@ -568,13 +562,10 @@ private[graft] object QueriesScaleText {
     // segments, top-2/3/4-gram char mass, Rae et al. 2021 App. A1.1
     // thresholds) joined with the format-rule gate above into one
     // attributable pass column — rule-per-column, ppm-exact. Both
-    // sides are pure per-row expression chains; the join keys the
-    // corpus once on doc_id.
+    // sides are per-row passes; the join keys the corpus once on
+    // doc_id.
     "q_gopher_repetition" -> ((s, dir) => {
       val docs = Tables.read(s, dir, "documents")
-      // typed kernel form — bit-identical to the expression form the
-      // oracle mirrors (ExtSpec pins them equal); ~20× on this, the
-      // heaviest per-row fold in the registry
       TextAnalysis.gopherRepetitionLocal(docs, "doc_id", "text")
         .join(TextAnalysis.gopherRules(docs, "doc_id", "text",
             minWords = 50, maxWords = 100000, minStopHits = 2)
@@ -624,9 +615,8 @@ private[graft] object QueriesScaleText {
           TextAnalysis.c4SyntheticPage(docs, "doc_id", "text"),
           "doc_id", "page")
         .select(col("doc_id"), col("pass").as("p_c4"))
-      // r16: flag trio via the typed kernel twin (bit-identical,
-      // ExtSpec-pinned) — the expression form's interpreted per-token
-      // isin/rlike HOFs dominated this scan
+      // flag trio in one typed pass — interpreted per-token isin/rlike
+      // HOFs dominated this scan as Catalyst expressions
       val flags = TextAnalysis.gopherLangFlagsLocal(docs, "doc_id",
           "text", "en", 60.0)
         .join(gr, "doc_id").join(c4, "doc_id")
@@ -899,8 +889,7 @@ private[graft] object QueriesScaleText {
         .orderBy(col("doc_id"), col("chunk_idx"))),
 
     // Gopher-style repeated-n-gram quality signal: fraction of a doc's
-    // word 3-grams that repeat an earlier shingle (typed kernel form,
-    // value-identical to the expression form per ExtSpec).
+    // word 3-grams that repeat an earlier shingle (typed kernel).
     "q_repetition" -> ((s, dir) =>
       TextAnalysis.repetitionRatios(Tables.read(s, dir, "documents"),
           "doc_id", "text", 3)
@@ -1590,15 +1579,11 @@ private[graft] object QueriesScaleText {
     // but never capped). The cap composes the existing sourceCap
     // machinery keyed on pld (rank = n_tokens desc, doc_id tiebreak,
     // cap 3 — binding at sf0.01's ~4 docs/PLD). Two hash aggregations
-    // plus a PLD-keyed window whose partitions are domain-count many;
-    // the suffix fold is pure narrow expressions.
+    // plus a PLD-keyed window whose partitions are domain-count many.
     "q_pld_rollup" -> ((s, dir) => {
       import s.implicits._
-      // PLD via the typed kernel (O(labels) set lookups per row) — the
-      // expression form is the oracle-replayable reference, pinned
-      // value-identical in ExtSpec; per-row it is a ~140-branch
-      // CaseWhen over per-suffix regexes (measured 7.3 s at sf0.1 vs
-      // the kernel's sub-second — the house HOF-vs-kernel precedent)
+      // PLD via the typed kernel (O(labels) set lookups per row); the
+      // oracle replays it with OracleBuilders.pldSql's flat CASE
       val h = Tables.read(s, dir, "documents")
         .select(col("doc_id"),
           TextAnalysis.nTokens(col("text")).cast("long").as("n_tokens"),

@@ -503,33 +503,11 @@ object Dedup {
     * top-60-bit md5 value, per bit position sum ±1, keep the sign bits.
     * 60 bits (15 hex chars) so the value is portable in a signed int64.
     *
-    * The 60 per-bit tallies are 60 agg columns in ONE hash aggregate on
-    * the doc id (partial agg does the heavy lifting map-side) — not a
-    * 60-way posexplode, which would shuffle 60× the shingle count. */
-  def simhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 3): DataFrame = {
-    val h = expr("cast(conv(substr(md5(shingle), 1, 15), 16, 10) as bigint)")
-    val bitSums = (0 until 60).map(p =>
-      sum(expr(s"cast(shiftright(h, $p) & 1 as int) * 2 - 1")).as(s"_b$p"))
-    val packed = (0 until 60).map(p =>
-      when(col(s"_b$p") > 0, lit(1L << p)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    shingleRows(docs, idCol, textCol, n)
-      .select(col(idCol), h.as("h"))
-      .groupBy(col(idCol))
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col(idCol), packed.as("simhash"))
-  }
-
-  /** [[simhashSignatures]] without the shuffle: the identical shingle →
-    * md5-top-60 → bit-vote → pack function evaluated per ROW in one
-    * typed pass (a document's signature depends only on its own text,
-    * so the exploded-rows + 60-accumulator aggregate buys nothing but a
-    * corpus-wide shuffle). Bit-identical output — ExtSpec pins the two
-    * forms equal — and the form every dedup entry point uses; the
-    * aggregate form remains the SQL-replayable reference the oracle
-    * mirrors. Docs with a null/zero-shingle text are absent from the
-    * result, matching the aggregate form's explode-then-group shape. */
+    * One typed pass, per ROW: a document's signature depends only on
+    * its own text, so there is no exploded-shingle aggregate and no
+    * corpus-wide shuffle. Every dedup entry point uses this form; the
+    * `q_dedup_simhash` oracle (Oracles3) replays it in DuckDB. Docs
+    * with a null id or a null/zero-shingle text are absent. */
   def simhashSignaturesLocal(docs: DataFrame, idCol: String,
       textCol: String, n: Int = 3): DataFrame = {
     val sp = docs.sparkSession
@@ -2085,55 +2063,16 @@ object Dedup {
     * winnowed as a single window — the natural boundary convention, and
     * the one the oracle replays. Docs under k chars emit nothing.
     *
-    * Implementation: the window minimum is computed by exploding each
-    * k-gram position into the ≤ w window-starts that cover it and
-    * taking `min(struct(hash, −pos))` per (doc, start) — rightmost-min
-    * tie-break via the negated position, ONE hash aggregate, no
-    * sliding-window UDF and no per-doc sort. Shuffle volume is
-    * w × grams with partial aggregation map-side; the hash is the
-    * portable md5-top-60 idiom every detector here shares.
+    * Implementation: a document's fingerprint set depends only on its
+    * own text, so the selection runs per ROW in one typed pass —
+    * sliding-window minimum via a monotonic deque (amortized O(1) per
+    * k-gram). Pop-while `back.h ≥ new.h` keeps exactly the RIGHTMOST
+    * minimal position at the front, i.e. the paper's robust-winnowing
+    * tie-break. Zero shuffle before the caller's census aggregate; the
+    * hash is the portable md5-top-60 idiom every detector here shares.
+    * `OracleBuilders.winnowFpChainSql` replays it in DuckDB.
     *
     * @return (id, pos, fp) — 1-based k-gram position and 60-bit hash */
-  def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, w: Int = 8): DataFrame = {
-    require(k >= 1 && w >= 1, "k-gram size and window must be positive")
-    val grams = docs
-      .select(col(idCol).cast("long").as("id"),
-        col(textCol).cast("string").as("text"))
-      .filter(col("text").isNotNull && length(col("text")) >= k)
-      .select(col("id"), length(col("text")).as("len"),
-        explode(sequence(lit(1), length(col("text")) - k + 1)).as("pos"),
-        col("text"))
-      .select(col("id"), col("len"), col("pos"),
-        expr(s"cast(conv(substr(md5(substr(text, pos, $k)), 1, 15)," +
-          " 16, 10) as bigint)").as("h"))
-    // window starts s covering k-gram position pos: s ∈ [pos−w+1, pos],
-    // clamped to the valid start range [1, max(1, len−k+2−w)]. The
-    // clamp can never invert the bounds (pos ≤ len−k+1 = lastStart+w−1),
-    // so the sequence() is always ascending.
-    val nStarts = greatest(lit(1), col("len") - lit(k) + 2 - lit(w))
-    grams
-      .select(col("id"), col("pos"), col("h"),
-        explode(sequence(greatest(lit(1), col("pos") - w + 1),
-          least(col("pos"), nStarts))).as("s"))
-      .groupBy(col("id"), col("s"))
-      .agg(min(struct(col("h"), (-col("pos")).as("np"))).as("m"))
-      .select(col("id"), (-col("m.np")).cast("long").as("pos"),
-        col("m.h").as("fp"))
-      .distinct()
-  }
-
-  /** [[winnowFingerprints]] without the shuffle: a document's
-    * fingerprint set depends only on its own text, so the selection
-    * runs per ROW in one typed pass — sliding-window minimum via a
-    * monotonic deque (amortized O(1) per k-gram) instead of the
-    * exploded w× window-starts aggregate. Pop-while `back.h ≥ new.h`
-    * keeps exactly the RIGHTMOST minimal position at the front, i.e.
-    * the paper's robust-winnowing tie-break. Value-identical to the
-    * aggregate form (ExtSpec pins them equal); the aggregate form
-    * remains the SQL-replayable reference the oracle mirrors. This is
-    * the hot path every fingerprint query uses: zero shuffle before
-    * the census aggregate, w× less data in flight. */
   def winnowFingerprintsLocal(docs: DataFrame, idCol: String,
       textCol: String, k: Int = 8, w: Int = 8): DataFrame = {
     require(k >= 1 && w >= 1, "k-gram size and window must be positive")

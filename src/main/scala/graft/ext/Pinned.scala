@@ -87,15 +87,6 @@ object Pinned {
     out
   }
 
-  /** Pin `df` eagerly, hand the self-contained frame to `body`, and
-    * release the pin when `body` finishes — the per-micro-batch form
-    * ([[graft.streaming.Streaming]]'s foreachBatch ticks, where the
-    * batch is read several times per commit and must not outlive it). */
-  def withPinned[T](df: DataFrame)(body: DataFrame => T): T = {
-    val pinned = df.localCheckpoint(true)
-    try body(pinned) finally release(pinned)
-  }
-
   /** COLUMNAR eviction-immune pin: write `df` once to scratch parquet
     * and read it back. Same replay-safety contract as an eager
     * `localCheckpoint(true)` — the files can neither be evicted nor
@@ -143,24 +134,19 @@ object Pinned {
   def releaseAllScratch(): Unit = {
     var d = scratchDirs.poll()
     while (d != null) {
+      // best effort: a dir that is already gone or undeletable must not
+      // stop the drain
       try org.apache.commons.io.FileUtils.deleteDirectory(d)
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(_) => () }
       d = scratchDirs.poll()
     }
   }
 
   private val scratchDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  private lazy val scratchHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var d = scratchDirs.poll()
-      while (d != null) {
-        try org.apache.commons.io.FileUtils.deleteDirectory(d)
-        catch { case _: Throwable => () }
-        d = scratchDirs.poll()
-      }
-    }, "graft-scratch-cleanup"))
-  }
+  private lazy val scratchHook: Unit =
+    Runtime.getRuntime.addShutdownHook(
+      new Thread(() => releaseAllScratch(), "graft-scratch-cleanup"))
   private def registerScratch(dir: java.io.File): Unit = {
     scratchHook
     scratchDirs.add(dir)

@@ -131,32 +131,6 @@ object TextAnalysis {
     }
   }
 
-  /** [[langId]] with a CONFIDENCE MARGIN — the thresholded form
-    * CCNet-class pipelines actually gate on (fastText emits a
-    * probability; this heuristic's analogue is the best-vs-runner-up
-    * marker-count gap): `lang` is the plain argmax (precedence
-    * tie-break), `margin = best − second` over the per-language
-    * scores (exact ties → 0 via a descending sort, not a leave-one-out
-    * max), and `lang_conf` keeps the argmax only when at least one
-    * marker fired AND the margin clears `minMargin` — ambiguous
-    * bilingual text demotes to "und" instead of being claimed by
-    * whichever language wins by one stopword. All-integer scores, so
-    * the gate replays engine-exact. */
-  def langIdMargin(text: Column, minMargin: Int = 2): Column = {
-    val scores = LangMarkers.map { case (l, m) => l -> langScore(text, m) }
-    val best = greatest(scores.map(_._2): _*)
-    val second = sort_array(
-      array(scores.map(_._2.cast("long")): _*), asc = false).getItem(1)
-    val lang = scores.foldRight(lit("und")) { case ((l, s), rest) =>
-      when(s > 0 && s === best, lit(l)).otherwise(rest)
-    }
-    val margin = best.cast("long") - second
-    struct(lang.as("lang"), best.cast("long").as("best"),
-      second.as("second"), margin.as("margin"),
-      when(best > 0 && margin >= minMargin, lang).otherwise("und")
-        .as("lang_conf"))
-  }
-
   // ── Char-n-gram language ID (the CLD/textcat profile family) ──────────
 
   /** Per-language seed corpora the trigram profiles train from — a few
@@ -243,93 +217,22 @@ object TextAnalysis {
     trim(regexp_replace(regexp_replace(lower(text), "[^\\p{L} ]", " "), " +", " "))
 
   /** Char-trigram profile language classifier (the CLD/textcat shape):
-    * every trigram of the normalized text scores
+    * every trigram of the [[langNormalize]]d text scores
     * `count × profile-lp` (absent trigram → [[LangOovLp]]), summed per
     * language; argmax wins, precedence breaks exact ties, documents
-    * with no trigram (normalized length < 3) are "und".
+    * with no trigram (normalized length < 3, or null text) are "und".
     *
-    * Scale shape: one narrow trigram explode, one (doc, trigram) count
-    * aggregate with map-side partials, a broadcast join against the
-    * literal profile (KBs), one (doc, lang) aggregate, and a
-    * doc-partitioned rank window (5 rows per doc). No corpus
-    * self-join, no global window; linear in corpus bytes at 100 TB. */
-  def langIdNgram(docs: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val prof = broadcast(
-      LangProfiles.map { case (l, _, tg, lp) => (l, tg, lp) }
-        .toDF("lang", "tg", "lp"))
-    val langs = broadcast(
-      LangSeeds.map(_._1).zipWithIndex.toDF("lang", "prec"))
-    val counts = docs
-      .select(col(idCol), langNormalize(col(textCol)).as("_t"))
-      .filter(length(col("_t")) >= 3)
-      .select(col(idCol), explode(transform(
-        sequence(lit(1), length(col("_t")) - 2),
-        i => col("_t").substr(i, lit(3)))).as("tg"))
-      .groupBy(col(idCol), col("tg"))
-      .agg(count(lit(1)).as("_c"))
-    // r16: score the OOV mass arithmetically instead of crossJoining
-    // the trigram relation with the language table — the old plan
-    // multiplied the (doc, trigram) relation ×|langs| before its
-    // aggregate; `Σ c·(lp or OOV)` decomposes exactly (all-long
-    // arithmetic) into `Σ_hits c·lp + (N_doc − Σ_hits c)·OOV`, so the
-    // only lang-multiplied relation is the DOC-sized total, and the
-    // profile join is an inner broadcast join on the trigram alone.
-    // per-doc trigram total = normalized length − 2 (every position
-    // contributes one trigram), straight off the doc scan — never a
-    // second pass over the counts relation
-    val tot = docs
-      .select(col(idCol), langNormalize(col(textCol)).as("_t"))
-      .filter(length(col("_t")) >= 3)
-      .select(col(idCol),
-        (length(col("_t")) - 2).cast("long").as("_n"))
-    val hits = counts
-      .join(prof, Seq("tg"))
-      .groupBy(col(idCol), col("lang"))
-      .agg(sum(col("_c") * col("lp")).as("_hit"),
-        sum(col("_c")).as("_m"))
-    val scored = tot
-      .crossJoin(langs)
-      .join(hits, Seq(idCol, "lang"), "left")
-      .select(col(idCol), col("lang"), col("prec"),
-        (coalesce(col("_hit"), lit(0L)) +
-          (col("_n") - coalesce(col("_m"), lit(0L))) * lit(LangOovLp))
-          .as("_score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol))
-      .orderBy(col("_score").desc, col("prec").asc)
-    val best = scored
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .select(col(idCol), col("lang"))
-    docs.select(col(idCol))
-      .join(best, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("lang"), lit("und")).as("lang_guess"))
-  }
-
-  /** Typed-kernel twin of [[langIdNgram]] (r17): the expression form
-    * pays a trigram explode, a (doc, trigram) hash aggregate, a
-    * broadcast profile join, a (doc, lang) aggregate and a per-doc
-    * rank window — five relational passes for what is per-row
-    * arithmetic against a KB-sized literal profile. This kernel scores
-    * each document in ONE partition-local pass: normalization stays
-    * the CATALYST expression ([[langNormalize]], so the char-level
-    * semantics the oracle mirrors are untouched), then per row the
-    * code-point trigrams accumulate `Σ c·lp` and hit-mass per language
-    * off a driver-built trigram → per-lang-lp table, the OOV mass is
-    * added arithmetically (`(n − m)·OOV`, the r16 decomposition), and
-    * the argmax with precedence tie-break replicates the rank window.
-    * All-long arithmetic — values bit-identical by construction;
-    * ExtSpec pins kernel == expression on the corpus fixtures. No
-    * shuffle at all: at 100 TB this is a narrow map over the corpus,
-    * where the expression form shuffled the exploded trigram relation
-    * twice. */
+    * One partition-local pass and no shuffle: normalization stays the
+    * Catalyst expression, then per row the code-point trigrams
+    * accumulate `Σ c·lp` and the hit mass per language off a
+    * driver-built trigram → per-language-lp table, and the OOV mass is
+    * added arithmetically (`(n − m)·OOV`). All-long arithmetic, so the
+    * `q_lang_id_ngram` oracle (Oracles2: trigram explode, profile join,
+    * rank window) replays it exactly. The id column keeps its type and
+    * a null id rides through. Output: `(idCol, lang_guess)`. */
   def langIdNgramLocal(docs: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String): org.apache.spark.sql.DataFrame = {
-    val sp = docs.sparkSession
-    import sp.implicits._
+    import org.apache.spark.sql.types._
     val nLangs = LangSeeds.length
     // trigram → dense per-lang lp vector (Long.MinValue = absent);
     // profiles are ≤ 5×96 entries, broadcast-by-closure is KBs
@@ -341,67 +244,66 @@ object TextAnalysis {
         tg -> v
       }
     val langNames = LangSeeds.map(_._1).toArray
-    docs
-      .select(col(idCol), langNormalize(col(textCol)).as("_t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        if (t == null) (id, "und")
-        else {
-          val cps = t.codePoints().toArray
-          val n = cps.length - 2
-          if (n <= 0) (id, "und")
-          else {
-            val hit = new Array[Long](nLangs)
-            val m = new Array[Long](nLangs)
-            var i = 0
-            while (i < n) {
-              val tg = new String(cps, i, 3)
-              profMap.get(tg) match {
-                case Some(v) =>
-                  var l = 0
-                  while (l < nLangs) {
-                    if (v(l) != Long.MinValue) { hit(l) += v(l); m(l) += 1 }
-                    l += 1
-                  }
-                case None => ()
+    val in = docs.select(col(idCol), langNormalize(col(textCol)).as("_t"))
+    val enc = org.apache.spark.sql.Encoders.row(StructType(Array(
+      in.schema.fields.head, StructField("lang_guess", StringType))))
+    in.mapPartitions { it =>
+      it.map { r =>
+        val t = r.getString(1)
+        val cps = if (t == null) Array.emptyIntArray else t.codePoints().toArray
+        val n = cps.length - 2
+        var lang = "und"
+        if (n > 0) {
+          val hit = new Array[Long](nLangs)
+          val m = new Array[Long](nLangs)
+          var i = 0
+          while (i < n) {
+            val v = profMap.getOrElse(new String(cps, i, 3), null)
+            if (v != null) {
+              var l = 0
+              while (l < nLangs) {
+                if (v(l) != Long.MinValue) { hit(l) += v(l); m(l) += 1 }
+                l += 1
               }
-              i += 1
             }
-            // argmax by score desc, precedence asc — the rank window's
-            // order, exactly: strict > keeps the earliest (lowest-prec)
-            // language on ties
-            var bestL = 0
-            var bestScore = Long.MinValue
-            var l = 0
-            while (l < nLangs) {
-              val score = hit(l) + (n - m(l)) * LangOovLp
-              if (score > bestScore) { bestScore = score; bestL = l }
-              l += 1
-            }
-            (id, langNames(bestL))
+            i += 1
           }
+          // argmax by score desc, precedence asc — the oracle's rank
+          // window order, exactly: strict > keeps the earliest
+          // (lowest-prec) language on ties
+          var bestL = 0
+          var bestScore = Long.MinValue
+          var l = 0
+          while (l < nLangs) {
+            val score = hit(l) + (n - m(l)) * LangOovLp
+            if (score > bestScore) { bestScore = score; bestL = l }
+            l += 1
+          }
+          lang = langNames(bestL)
         }
+        org.apache.spark.sql.Row(r.get(0), lang)
       }
-      .toDF(idCol, "lang_guess")
+    }(enc)
   }
 
-  /** Typed-kernel twin of [[langIdMargin]] (r17): the expression form
-    * embeds the five interpreted [[langScore]] higher-order filters
-    * TWICE (once under `greatest`, once under the descending
-    * sort_array) — ~100 linear-scanned string compares per token. One
-    * partition-local pass computes the marker counts once
-    * ([[langScoresLocal]], the gate kernels' ExtSpec-pinned primitive)
-    * and derives best/second/margin/lang/lang_conf with the
-    * expression's exact integer semantics (ties → margin 0; all-zero
-    * scores → "und"; null text → ("und", null, null, null, "und"),
-    * mirroring size(null) = null three-valued logic). Output:
+  /** [[langId]] with a CONFIDENCE MARGIN — the thresholded form
+    * CCNet-class pipelines actually gate on (fastText emits a
+    * probability; this heuristic's analogue is the best-vs-runner-up
+    * marker-count gap): `lang` is the plain argmax (precedence
+    * tie-break), `margin = best − second` over the per-language
+    * [[langScoresLocal]] counts (exact ties → 0), and `lang_conf`
+    * keeps the argmax only when at least one marker fired AND the
+    * margin clears `minMargin` — ambiguous bilingual text demotes to
+    * "und" instead of being claimed by whichever language wins by one
+    * stopword. One partition-local pass of integer counts, so the
+    * `q_lang_margin` oracle (Oracles2) replays it exactly. Null text →
+    * ("und", null, null, null, "und"). Output:
     * `(idCol, lang, best, second, margin, lang_conf)`. */
   def langIdMarginLocal(docs: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String, minMargin: Int = 2)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.types._
-    val in = docs.select(col(idCol),
-      col(textCol).cast("string").as(textCol))
+    val in = docs.select(col(idCol), col(textCol).cast("string").as(textCol))
     val outSchema = StructType(Array(
       in.schema.fields.head,
       StructField("lang", StringType),
@@ -461,7 +363,7 @@ object TextAnalysis {
       lit(25.0) * (lit(1.0) - punctRatio(text)) +
       lit(25.0) * least(stopwordRatio(text) * lit(8.0), lit(1.0))
 
-  // ── Typed-kernel twin of the curate language/quality gate ─────────────
+  // ── Typed kernels of the curate language/quality gates ──────────────
 
   /** Per-row marker scores in [[LangMarkers]] order (multiplicity
     * counted — the [[langScore]] definition). */
@@ -505,13 +407,10 @@ object TextAnalysis {
       scoreEn: Int): Double = {
     val n = toks.length
     val nd = n.toDouble
-    // lengths in CODE POINTS, not UTF-16 units: the expression twin's
-    // length()/regexp_replace count code points, so a supplementary-
-    // plane char (emoji, rare CJK) must count once here too or the
-    // quality double — and the `>= minQuality` gate — diverges between
-    // the kernel and the oracle-mirrored expression form (r17, the
-    // advisor's non-BMP finding; the parity specs carry an emoji
-    // fixture now)
+    // lengths in CODE POINTS, not UTF-16 units, like the expression's
+    // length()/regexp_replace: a supplementary-plane char (emoji, rare
+    // CJK) counts once, or the quality double — and the `>= minQuality`
+    // gate — would diverge on non-BMP text (the specs' emoji fixtures)
     val cpLen = text.codePointCount(0, text.length)
     var punct = 0
     var j = 0
@@ -528,17 +427,17 @@ object TextAnalysis {
         (scoreEn.toDouble / math.max(n, 1).toDouble) * 8.0, 1.0)
   }
 
-  /** The funnel's per-row flag trio — `n_tokens`,
-    * `p_gf` ([[gopherPass]]) and `p_lq` (`langId === lang &&
-    * qualityScore >= minQuality`) — as ONE typed partition-local pass.
-    * Same rationale as [[langQualityGateLocal]] (interpreted
-    * per-token `isin`/`rlike` HOFs dominate the expression form;
-    * values bit-identical, ExtSpec-pinned, expression form stays the
-    * oracle's SQL reference). Null text mirrors the expression
-    * exactly: `n_tokens` and `p_gf` are NULL, but `p_lq` is FALSE —
-    * `langId(null)` falls through every `when` to the literal "und",
-    * so `langId === lang` is a non-null false and three-valued `&&`
-    * collapses the null quality compare to false.
+  /** The funnel's per-row flag trio — `n_tokens`, `p_gf` (the
+    * [[gopherRules]] `pass` conjunction) and `p_lq` (`langId === lang
+    * && qualityScore >= minQuality`) — as ONE typed partition-local
+    * pass. Same rationale as [[langQualityGateLocal]]; values are
+    * bit-identical to those expressions (ExtSpec-pinned) and the
+    * `q_filter_funnel` oracle (Oracles2 `filterFunnelOracle`) replays
+    * them. Null text mirrors the expressions exactly: `n_tokens` and
+    * `p_gf` are NULL, but `p_lq` is FALSE — `langId(null)` falls
+    * through every `when` to the literal "und", so `langId === lang`
+    * is a non-null false and three-valued `&&` collapses the null
+    * quality compare to false.
     * Output: `(idCol[, textCol], n_tokens long, p_gf, p_lq)`. */
   def gopherLangFlagsLocal(docs: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String, lang: String, minQuality: Double,
@@ -609,16 +508,12 @@ object TextAnalysis {
     * partition-local pass — the hot per-tick expression of the
     * pipeline/funnel ledger ingests and [[graft.ext.Curation.curate]].
     *
-    * Why a kernel (r16): [[langScore]]'s higher-order `filter` runs an
-    * INTERPRETED `isin` over every (token, language) pair — ~50
-    * linear-scanned string compares per token across the five marker
-    * lists — and the composite expression re-splits the text several
-    * times; measured 0.87 s per sf0.1 corpus pass against ~0.05 s for
-    * this kernel. Values are bit-identical (ExtSpec pins kernel ==
-    * expression on the corpus, including the exact `quality` doubles,
-    * so the `>= minQuality` boundary cannot diverge); the expression
-    * form remains the SQL-replayable reference the oracle mirrors —
-    * the [[graft.ext.Dedup.simhashSignaturesLocal]] dispatch contract.
+    * Why a kernel: [[langScore]]'s higher-order `filter` runs an
+    * INTERPRETED `isin` per (token, language) pair and the composite
+    * expression re-splits the text several times (0.87 s per sf0.1
+    * corpus pass against ~0.05 s here). Values are bit-identical to the
+    * expressions, `quality` doubles included (ExtSpec-pinned); the
+    * DuckDB replay is `OracleBuilders.curationGateCtesFrom`.
     *
     * Row contract mirrors the expression pipeline: null text never
     * passes the gate (its `langId` is "und" and its quality is null);
@@ -668,36 +563,17 @@ object TextAnalysis {
     *
     * Scale: pure per-row expressions — narrow, codegen'd, shuffle-free;
     * run it first so later stages see only survivors. */
-  /** The [[gopherRules]] conjunction as a bare COLUMN over a text
-    * column — for callers that stack the gate into an existing per-row
-    * select (the funnel) instead of materializing the rule-per-column
-    * report. Spec-pinned equal to `gopherRules(...)("pass")`. */
-  def gopherPass(t: Column, minWords: Int = 50, maxWords: Int = 100000,
-      minStopHits: Int = 2): Column = {
-    val (nw, mwl, alphaRatio, stopHits) = gopherMeasures(t)
-    nw >= minWords && nw <= maxWords &&
-      mwl >= 3.0 && mwl <= 10.0 &&
-      alphaRatio >= 0.8 && stopHits >= minStopHits
-  }
-
-  /** The four format-rule measures, shared by [[gopherRules]] and
-    * [[gopherPass]] so the two forms cannot drift. */
-  private def gopherMeasures(t: Column)
-      : (Column, Column, Column, Column) = {
+  def gopherRules(docs: org.apache.spark.sql.DataFrame, idCol: String,
+      textCol: String, minWords: Int = 50, maxWords: Int = 100000,
+      minStopHits: Int = 2): org.apache.spark.sql.DataFrame = {
+    val t = col(textCol)
     val nw = nTokens(t)
+    val mwl = meanTokenLen(t)
     val alphaRatio =
       size(filter(tokens(t), w => w.rlike("[A-Za-z]"))).cast("double") /
         greatest(nw, lit(1)).cast("double")
     val stopHits = size(array_intersect(array_distinct(tokens(t)),
       typedLit(LangMarkers.head._2)))
-    (nw, meanTokenLen(t), alphaRatio, stopHits)
-  }
-
-  def gopherRules(docs: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, minWords: Int = 50, maxWords: Int = 100000,
-      minStopHits: Int = 2): org.apache.spark.sql.DataFrame = {
-    val t = col(textCol)
-    val (nw, mwl, alphaRatio, stopHits) = gopherMeasures(t)
     val okWords = nw >= minWords && nw <= maxWords
     val okWordLen = mwl >= 3.0 && mwl <= 10.0
     val okAlpha = alphaRatio >= 0.8
@@ -717,18 +593,11 @@ object TextAnalysis {
   /** Fraction of word n-gram shingles that are repeats of an earlier
     * shingle in the same document — the classic repeated-n-gram
     * quality signal for training corpora (high ratio = boilerplate /
-    * degenerate repetition). Per-row expression, shuffle-free. */
-  def repetitionRatio(text: Column, n: Int = 3): Column = {
-    val sh = wordShingles(text, n)
-    lit(1.0) - size(array_distinct(sh)).cast("double") /
-      size(sh).cast("double")
-  }
-
-  /** [[repetitionRatio]] over a whole table via a typed partition-local
-    * kernel — same values (spec-pinned), ~5× the expression form, which
-    * pays an interpreted lambda per shingle window. Contract mirrors
-    * [[Dedup.shingleSets]]: numeric/long-castable ids, null id or null
-    * text drops the row. */
+    * degenerate repetition) — as one typed partition-local pass.
+    * Shingles are [[wordShingles]]' (a text under n tokens is one
+    * whole-text shingle, ratio 0); the `q_repetition` oracle (Oracles2)
+    * replays it. Contract mirrors [[Dedup.shingleSets]]:
+    * numeric/long-castable ids, null id or null text drops the row. */
   def repetitionRatios(docs: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, n: Int = 3): org.apache.spark.sql.DataFrame = {
     val sp = docs.sparkSession
@@ -752,8 +621,8 @@ object TextAnalysis {
               if (seen.add(sb.toString)) distinct += 1
               i += 1
             }
-            // identical arithmetic to the expression form: exact int
-            // division in double, so values match bit for bit
+            // exact int division in double — the oracle's
+            // `1.0 - distinct / total`, bit for bit
             ratio = 1.0 - distinct.toDouble / total.toDouble
           } // under n tokens: one whole-text shingle, 1 distinct -> 0.0
           Some((id.longValue, ratio))
@@ -789,105 +658,13 @@ object TextAnalysis {
     * bounds): lines 0.30 / 0.20 (count/char), paragraphs 0.30 / 0.20,
     * top-2/3/4-gram char 0.20 / 0.18 / 0.16.
     *
-    * Scale (100 TB): pure per-row expression chain — zero shuffles,
-    * zero joins; the duplicate walk is one `array_sort` +
-    * adjacent-equality pass (O(k log k) per doc, never the O(k²)
-    * value-by-value recount), and the top-gram walk is a single
-    * sorted-run fold. Runs in the same scan as [[gopherRules]]. */
-  def gopherRepetition(docs: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, lineWords: Int = 8, paraWords: Int = 32)
-      : org.apache.spark.sql.DataFrame = {
-    val t = coalesce(col(textCol).cast("string"), lit(""))
-    val toks = split(t, " ", -1)
-    val nChars = greatest(length(t), lit(1)).cast("long")
-    // fixed word windows at offsets 0, w, 2w, … (segmentDedup's shape);
-    // split("") = [""] so the sequence upper bound is always >= 0
-    def segsOf(w: Int): Column = transform(
-      sequence(lit(0), floor((size(toks) - 1) / lit(w)).cast("int")),
-      i => array_join(slice(toks, i * w + 1, lit(w)), " "))
-    // duplicate count + duplicate char mass via one sort + one
-    // adjacent-equality pass: in a sorted array every element equal to
-    // its predecessor is an occurrence beyond its value's first
-    def dupCols(segs: Column): (Column, Column, Column) = {
-      val sorted = array_sort(segs)
-      val k = size(sorted)
-      def adjSum(f: (Column, Column) => Column): Column =
-        aggregate(
-          when(k > 1, zip_with(slice(sorted, lit(1), k - 1),
-            slice(sorted, lit(2), k - 1), f))
-            .otherwise(array().cast("array<long>")),
-          lit(0L), (acc, x) => acc + x)
-      (k.cast("long"),
-        adjSum((a, b) => when(a === b, lit(1L)).otherwise(lit(0L))),
-        adjSum((a, b) => when(a === b, length(b).cast("long"))
-          .otherwise(lit(0L))))
-    }
-    // top sliding-n-gram char mass: sort the grams, fold over runs
-    // carrying (prev, run count, best count, best mass); a run that
-    // passes the best count resets the mass, a tie takes the max mass
-    def topMass(n: Int): Column = {
-      val grams = when(size(toks) >= n,
-        array_sort(transform(sequence(lit(1), size(toks) - (n - 1)),
-          i => array_join(slice(toks, i, lit(n)), " "))))
-        .otherwise(array().cast("array<string>"))
-      aggregate(grams,
-        struct(lit("").as("prev"), lit(0L).as("cnt"),
-          lit(0L).as("bc"), lit(0L).as("bm")),
-        (st, g) => {
-          val cnt = when(g === st("prev"), st("cnt") + 1L).otherwise(lit(1L))
-          val mass = cnt * length(g).cast("long")
-          struct(g.as("prev"), cnt.as("cnt"),
-            greatest(st("bc"), cnt).as("bc"),
-            when(cnt > st("bc"), mass)
-              .when(cnt === st("bc"), greatest(st("bm"), mass))
-              .otherwise(st("bm")).as("bm"))
-        },
-        st => st("bm"))
-    }
-    val (nLines, dupLines, dupLineChars) = dupCols(segsOf(lineWords))
-    val (nParas, dupParas, dupParaChars) = dupCols(segsOf(paraWords))
-    val out = docs.select(col(idCol),
-      nLines.as("n_lines"), dupLines.as("_dl"), dupLineChars.as("_dlc"),
-      nParas.as("n_paras"), dupParas.as("_dp"), dupParaChars.as("_dpc"),
-      topMass(2).as("_t2"), topMass(3).as("_t3"), topMass(4).as("_t4"),
-      nChars.as("_nc"))
-    val withPpm = out.select(col(idCol), col("n_lines"), col("n_paras"),
-      expr("1000000 * _dl div n_lines").as("dup_line_ppm"),
-      expr("1000000 * _dlc div _nc").as("dup_line_char_ppm"),
-      expr("1000000 * _dp div n_paras").as("dup_para_ppm"),
-      expr("1000000 * _dpc div _nc").as("dup_para_char_ppm"),
-      expr("1000000 * _t2 div _nc").as("top2_char_ppm"),
-      expr("1000000 * _t3 div _nc").as("top3_char_ppm"),
-      expr("1000000 * _t4 div _nc").as("top4_char_ppm"))
-    withPpm.select(col(idCol), col("n_lines"), col("n_paras"),
-      col("dup_line_ppm"), col("dup_line_char_ppm"),
-      col("dup_para_ppm"), col("dup_para_char_ppm"),
-      col("top2_char_ppm"), col("top3_char_ppm"), col("top4_char_ppm"),
-      (col("dup_line_ppm") <= 300000).as("ok_dup_line"),
-      (col("dup_line_char_ppm") <= 200000).as("ok_dup_line_char"),
-      (col("dup_para_ppm") <= 300000).as("ok_dup_para"),
-      (col("dup_para_char_ppm") <= 200000).as("ok_dup_para_char"),
-      (col("top2_char_ppm") <= 200000).as("ok_top2"),
-      (col("top3_char_ppm") <= 180000).as("ok_top3"),
-      (col("top4_char_ppm") <= 160000).as("ok_top4"),
-      (col("dup_line_ppm") <= 300000 &&
-        col("dup_line_char_ppm") <= 200000 &&
-        col("dup_para_ppm") <= 300000 &&
-        col("dup_para_char_ppm") <= 200000 &&
-        col("top2_char_ppm") <= 200000 &&
-        col("top3_char_ppm") <= 180000 &&
-        col("top4_char_ppm") <= 160000).as("pass_repetition"))
-  }
-
-  /** [[gopherRepetition]] via a typed per-row kernel — same values bit
-    * for bit (ExtSpec pins the two forms equal; every measure is pure
-    * integer math, so "bit-identical" is exact, not IEEE-modulo), ~20×
-    * the expression form, which pays interpreted lambda dispatch per
-    * sorted-array fold step across five sorts and five folds per row
-    * (the [[repetitionRatios]] precedent, on a heavier kernel). The
-    * expression form remains the SQL-replayable reference the oracle
-    * mirrors. Contract also mirrors [[repetitionRatios]]: long-castable
-    * ids, a null id drops the row, null text reads as "". */
+    * One typed per-row pass — zero shuffles, zero joins; the duplicate
+    * walk is one sort + adjacent-equality pass (O(k log k) per doc,
+    * never the O(k²) value-by-value recount), and the top-gram walk is
+    * a single sorted-run fold. All measures are integer math, so the
+    * oracle (Oracles2 `gopherRepetitionOracle`, per-(doc, segment)
+    * GROUP BY counts) replays them exactly. Long-castable ids; a null
+    * id drops the row, null text reads as "". */
   def gopherRepetitionLocal(docs: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String, lineWords: Int = 8,
       paraWords: Int = 32): org.apache.spark.sql.DataFrame = {
@@ -916,9 +693,8 @@ object TextAnalysis {
             }
             out
           }
-          // sorted adjacency: identical to the expression form's
-          // array_sort + zip_with pass (ASCII corpus — every string
-          // ordering the engines use agrees)
+          // sorted adjacency: in a sorted array every element equal to
+          // its predecessor is an occurrence beyond its value's first
           def dup(segs: Array[String]): (Long, Long, Long) = {
             val s = segs.clone(); java.util.Arrays.sort(
               s, java.util.Comparator.naturalOrder[String]())
@@ -929,9 +705,9 @@ object TextAnalysis {
             }
             (s.length.toLong, d, dc)
           }
-          // run fold over sorted n-grams, comparing against the OLD
-          // best count before updating it — the expression form's
-          // struct-step order, replicated exactly
+          // run fold over sorted n-grams carrying (prev, run count,
+          // best count, best mass): a run that passes the best count
+          // resets the mass, a tie takes the max mass
           def topMass(n: Int): Long = {
             if (toks.length < n) return 0L
             val grams = new Array[String](toks.length - n + 1)
@@ -1037,7 +813,7 @@ object TextAnalysis {
     *
     * Scale (100 TB): pure per-row expression chain — zero shuffles,
     * zero joins; runs in the same scan as [[gopherRules]] /
-    * [[gopherRepetition]]. */
+    * [[gopherRepetitionLocal]]. */
   def c4Rules(docs: org.apache.spark.sql.DataFrame, idCol: String,
       pageCol: String, minLineWords: Int = 5, minSentences: Int = 3)
       : org.apache.spark.sql.DataFrame = {
@@ -1099,7 +875,7 @@ object TextAnalysis {
     val noComment = regexp_replace(noStyle, "(?s)<!--.*?-->", " ")
     // the quote-aware tag regex's alternation costs ~3× the plain
     // class scan, and quoted attributes are absent from most BLOCK
-    // bodies (the htmlBlocks per-<p> path) — gate it on a cheap
+    // bodies (the htmlBlocksLocal per-<p> path) — gate it on a cheap
     // contains-quote test, the same discipline as the numeric-ref
     // chain's contains("&#") below. Semantics-free: on a string with
     // no '"' and no '\'' the hardened alternation's quoted branches
@@ -1187,56 +963,12 @@ object TextAnalysis {
         .otherwise(""),
       lit("</body></html>")).as("page"))
 
-  /** Block-level boilerplate removal (jusText/trafilatura's core
-    * signal, the deterministic slice): per `<p>` block, LINK DENSITY =
-    * characters of anchor text / characters of block text (both
-    * measured on the EXTRACTED text, ppm-quantized) — navigation and
-    * footer blocks are link-dominated, prose is not. A block is kept
-    * when density ≤ `maxLinkPpm` AND it carries ≥ `minWords` words.
-    * One row per (doc, block) with the measures AND the flag, so
-    * dropped blocks are attributable (the rule-per-column house
-    * convention). Zero-char blocks (markup-only) report density 1e6 —
-    * all link, never prose.
-    *
-    * Scale: regexp_extract_all + posexplode — narrow, per-row work
-    * linear in page size, no shuffle beyond the caller's. */
-  def htmlBlocks(docs: org.apache.spark.sql.DataFrame, idCol: String,
-      htmlCol: String, maxLinkPpm: Long = 500000L, minWords: Int = 5)
-      : org.apache.spark.sql.DataFrame = {
-    require(maxLinkPpm >= 0 && minWords >= 0)
-    val paras = regexp_extract_all(
-      coalesce(col(htmlCol).cast("string"), lit("")),
-      lit("(?is)<p[^>]*>(.*?)</p>"), lit(1))
-    docs.select(col(idCol), posexplode(paras).as(Seq("block_idx", "_raw")))
-      .select(col(idCol), col("block_idx").cast("long").as("block_idx"),
-        htmlExtract(col("_raw")).as("block_text"),
-        htmlExtract(concat_ws(" ", regexp_extract_all(col("_raw"),
-          lit("(?is)<a[^>]*>(.*?)</a>"), lit(1)))).as("_link"))
-      .select(col(idCol), col("block_idx"), col("block_text"),
-        length(col("block_text")).cast("long").as("n_chars"),
-        size(filter(split(col("block_text"), " ", -1), w => w =!= ""))
-          .cast("long").as("n_words"),
-        // integer ppm (Scala/Spark `div` == DuckDB `//` on non-negative
-        // longs); the empty-block branch guards the ANSI div-by-zero
-        when(length(col("block_text")) === 0, lit(1000000L))
-          .otherwise(expr("CAST(length(_link) AS BIGINT) * 1000000 div " +
-            "CAST(length(block_text) AS BIGINT)"))
-          .as("link_ppm"))
-      .withColumn("kept",
-        col("link_ppm") <= maxLinkPpm && col("n_words") >= minWords)
-  }
-
-  /** Typed-kernel twin of [[htmlExtract]] over a plain String (r17,
-    * the r16 verdict's q_html_blocks item): the expression form is a
-    * ~20-step regexp_replace chain that whole-stage-codegen compiles
-    * into one enormous Janino method — its one-time compile showed up
-    * as the q_html_blocks 4.7 s cold first run — and every step pays a
-    * UTF8String ⇄ String conversion. The kernel runs the SAME
-    * java.util.regex patterns (compiled once per JVM) in the same
-    * order with the same replacements, so outputs are pointwise
-    * identical; the two instr gates are semantics-free skips on both
-    * forms (gated chains are fixed points of their inputs), kept here
-    * for the same speed reason. */
+  /** [[htmlExtract]] over a plain String: the SAME java.util.regex
+    * patterns (compiled once per JVM) in the same order with the same
+    * replacements and the same two semantics-free instr gates, so
+    * outputs are pointwise identical. The Column form compiles into
+    * one enormous codegen method and converts UTF8String ⇄ String at
+    * every step; the per-block kernels call this form instead. */
   private[graft] object HtmlPatterns {
     import java.util.regex.Pattern
     val script: Pattern = Pattern.compile("(?is)<script[^>]*>.*?</script>")
@@ -1281,13 +1013,23 @@ object TextAnalysis {
     x8.substring(a, b)
   }
 
-  /** Typed-kernel twin of [[htmlBlocks]] — identical schema and
-    * values ([[htmlExtractLocal]]'s pointwise-equal extraction;
-    * lengths in code points like Spark's length(); the same integer
-    * ppm arithmetic), one partition-local pass per page with the
-    * patterns compiled once per JVM. The expression form remains the
-    * SQL-replayable reference the oracle mirrors; ExtSpec pins the
-    * two equal on the synthetic pages. */
+  /** Block-level boilerplate removal (jusText/trafilatura's core
+    * signal, the deterministic slice): per `<p>` block, LINK DENSITY =
+    * characters of anchor text / characters of block text (both
+    * measured on the EXTRACTED text, ppm-quantized) — navigation and
+    * footer blocks are link-dominated, prose is not. A block is kept
+    * when density ≤ `maxLinkPpm` AND it carries ≥ `minWords` words.
+    * One row per (doc, block) with the measures AND the flag, so
+    * dropped blocks are attributable (the rule-per-column house
+    * convention). Zero-char blocks (markup-only) report density 1e6 —
+    * all link, never prose.
+    *
+    * One partition-local pass per page — [[htmlExtractLocal]] on each
+    * block and its anchor text, lengths in code points like Spark's
+    * and DuckDB's length(), integer ppm arithmetic — with the patterns
+    * compiled once per JVM; no shuffle beyond the caller's. The
+    * `q_html_blocks` oracle (Oracles1) replays it over
+    * `OracleBuilders.htmlExtractSql`. */
   def htmlBlocksLocal(docs: org.apache.spark.sql.DataFrame, idCol: String,
       htmlCol: String, maxLinkPpm: Long = 500000L, minWords: Int = 5)
       : org.apache.spark.sql.DataFrame = {
@@ -2052,34 +1794,19 @@ object TextAnalysis {
 
   // ── Fingerprinting ─────────────────────────────────────────────────────
 
-  val HashMod = 1000000007L
-
-  /** Polynomial rolling hash (base 31, mod 1e9+7) over the whole string —
-    * a content fingerprint cheaper than a cryptographic digest and
-    * incrementally computable. */
-  def polyFingerprint(text: Column): Column =
-    aggregate(split(text, ""), lit(0L),
-      (acc, c) => pmod(acc * lit(31L) + ascii(c), lit(HashMod)))
-
-  /** [[polyFingerprint]] via the native codegen'd Catalyst expression
-    * (`graft.plans.PolyHash`) — same values, no per-char interpreted
-    * lambda. Requires the session to register
-    * `graft.plans.GraftExtensions`. */
+  /** Polynomial rolling hash (base 31, mod 1e9+7) over the string's
+    * code points — a content fingerprint cheaper than a cryptographic
+    * digest and incrementally computable — as the native codegen'd
+    * Catalyst expression [[graft.plans.PolyHash]]. Requires the
+    * session to register `graft.plans.GraftExtensions`; the
+    * `q_fingerprint` oracle (Oracles2) replays it as a `list_reduce`. */
   def polyFingerprintNative(text: Column): Column =
     call_function("graft_polyhash", text)
 
-  /** Winnowing-style minimum over the rolling hashes of all char k-grams:
-    * robust to local edits (an edit perturbs only k windows). Texts
-    * shorter than k fall back to the whole-string hash. */
-  def minKgramFingerprint(text: Column, k: Int = 8): Column =
-    when(length(text) >= k,
-      array_min(transform(sequence(lit(1), length(text) - (k - 1)),
-        i => polyFingerprint(text.substr(i, lit(k))))))
-      .otherwise(polyFingerprint(text))
-
-  /** [[minKgramFingerprint]] as ONE native single-pass expression
-    * (`graft.plans.MinKgramHash`) — no per-window interpreted lambda,
-    * no substring materialization. Same values. */
+  /** Winnowing-style minimum over the rolling hashes of all code-point
+    * k-grams, as ONE native pass ([[graft.plans.MinKgramHash]]): robust
+    * to local edits (an edit perturbs only k windows). Texts shorter
+    * than k fall back to the whole-string hash. */
   def minKgramFingerprintNative(text: Column, k: Int = 8): Column =
     call_function("graft_minkgram", text, lit(k))
 

@@ -215,10 +215,8 @@ object Urls {
     * slice of the Mozilla Public Suffix List's ICANN section:
     * multi-label country suffixes plus the common gTLDs/ccTLDs). A
     * production deployment swaps in the full list — it is config-sized
-    * (~10k entries) and the longest-match rule below is list-size
-    * independent in shape (a fold of narrow per-row expressions; with
-    * the full list, a broadcast map + the same longest-match in a
-    * typed kernel). */
+    * (~10k entries) and the longest-match kernel below is O(labels)
+    * set lookups per host whatever the list size. */
   val PublicSuffixSample: Seq[String] = Seq(
     // multi-label (the cases a naive last-two-labels rule gets wrong)
     "co.uk", "org.uk", "ac.uk", "gov.uk", "me.uk", "net.uk",
@@ -240,59 +238,28 @@ object Urls {
   private[graft] val SuffixesOrdered: Seq[String] =
     PublicSuffixSample.sortBy(s => (-s.count(_ == '.'), -s.length, s))
 
-  /** REGISTRABLE domain (PLD / eTLD+1) of a canonical host —
-    * `news.bbc.co.uk` → `bbc.co.uk`: the key RefinedWeb-class
-    * pipelines cap and dedup on (a host-level cap still lets one
-    * registrant flood the corpus through subdomain farms). Longest
-    * matching [[PublicSuffixSample]] suffix + one label; a host that
-    * IS a public suffix → NULL (nothing registrable); an unknown TLD
-    * falls back to the PSL prevailing-`*` rule (last two labels);
-    * single-label hosts → NULL. Pure narrow expressions — the
-    * suffix-list fold is a static coalesce chain, and the capture
-    * regexes are shared TEXTUALLY with the oracle builder
-    * ([[graft.OracleBuilders.pldSql]]), so the two engines cannot
-    * drift. */
-  def urlRegistrableDomain(host: Column): Column = {
-    // ONE flat first-match-wins CASE over (suffix-equality,
-    // suffix-match) branch pairs in longest-match order — NOT a
-    // nested coalesce fold: Coalesce(CaseWhen(Coalesce(…))) nested
-    // ~70 deep sent Catalyst's conditional-simplification rules into
-    // a minutes-long planning spin (measured r15); the flat CaseWhen
-    // plans instantly and evaluates identically. '' marks "host IS
-    // the suffix", blocking the fallback from minting a registrable
-    // domain out of a bare suffix.
-    val matched = SuffixesOrdered.foldLeft(
-      when(host.isNull, lit(null).cast("string"))) { (acc, s) =>
-        acc.when(host === s, lit(""))
-          .when(endswith(host, lit("." + s)),
-            regexp_extract(host, pldPattern(s), 1))
-    }
-    val r = coalesce(matched,
-      when(instr(host, ".") > 0,
-        regexp_extract(host, PldFallbackPattern, 1)))
-    when(r === "", lit(null)).otherwise(r)
-  }
-
   /** `([^.]+\.<suffix>)$` — one label plus the (dot-escaped) suffix,
     * anchored; shared textually with the oracle. */
   private[graft] def pldPattern(suffix: String): String =
     "([^.]+\\." + suffix.replace(".", "\\.") + ")$"
 
-  // lazy: PublicSuffixSample/PldFallbackPattern are declared later in
-  // the object — a strict val here would capture them mid-init (null)
+  // lazy: PldFallbackPattern is declared later in the object — a
+  // strict val here would capture it mid-init (null)
   private lazy val SuffixSet: Set[String] = PublicSuffixSample.toSet
   private lazy val PldFallbackRe = PldFallbackPattern.r
 
-  /** Typed twin of [[urlRegistrableDomain]] — the hot-path form (the
-    * house HOF-vs-kernel precedent: the expression form is a
-    * ~140-branch CaseWhen over per-suffix regexes, fine as the
-    * oracle-replayable reference but measurably slow per row; the
-    * kernel is O(labels) set lookups). Longest matching suffix = the
-    * suffix with the most labels, which is exactly what evaluating
-    * [[SuffixesOrdered]] first-match finds; the empty-label guard and
-    * the regex fallback mirror the expression's capture-group
-    * semantics on degenerate hosts. ExtSpec pins the two forms
-    * value-identical on the fixture space + a degenerate edge table. */
+  /** REGISTRABLE domain (PLD / eTLD+1) of a canonical host —
+    * `news.bbc.co.uk` → `bbc.co.uk`: the key RefinedWeb-class
+    * pipelines cap and dedup on (a host-level cap still lets one
+    * registrant flood the corpus through subdomain farms). Longest
+    * matching [[PublicSuffixSample]] suffix + one label (the suffix
+    * with the most labels — what first-match over [[SuffixesOrdered]]
+    * finds); a host that IS a public suffix → NULL (nothing
+    * registrable); an unknown TLD falls back to the PSL prevailing-`*`
+    * rule (last two labels); single-label hosts and empty labels →
+    * NULL. O(labels) set lookups per row. The oracle replays it with
+    * [[graft.OracleBuilders.pldSql]], generated from the same suffix
+    * table and capture patterns. */
   private[graft] def registrableDomainLocal(host: String): String = {
     if (host == null) return null
     if (SuffixSet.contains(host)) return null
@@ -306,18 +273,6 @@ object Urls {
       i += 1
     }
     PldFallbackRe.findFirstIn(host).orNull
-  }
-
-  /** [[registrableDomainLocal]] over a `(idCol: long, hostCol:
-    * string)` relation — returns `(idCol, hostCol, pld)`. */
-  def registrableDomainLocalDf(docs: org.apache.spark.sql.DataFrame,
-      idCol: String, hostCol: String): org.apache.spark.sql.DataFrame = {
-    val sp = docs.sparkSession
-    import sp.implicits._
-    docs.select(col(idCol).cast("long"), col(hostCol).cast("string"))
-      .as[(java.lang.Long, String)]
-      .map { case (id, h) => (id, h, registrableDomainLocal(h)) }
-      .toDF(idCol, hostCol, "pld")
   }
 
   /** The prevailing-`*` fallback: last two labels. */

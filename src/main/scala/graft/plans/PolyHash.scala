@@ -9,16 +9,16 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for the engine's polynomial rolling hash
-  * (base 31, mod 1e9+7 over Unicode code points) — the codegen'd form of
-  * `TextAnalysis.polyFingerprint`'s `aggregate(split(text,''), ...)`
-  * chain, which pays interpreted-lambda dispatch per character.
+  * (base 31, mod 1e9+7 over Unicode code points) — the codegen'd
+  * `TextAnalysis.polyFingerprintNative`, one tight loop per row instead
+  * of an interpreted lambda per character.
   *
-  * Semantics contract (must stay equal to the expression form and the
-  * DuckDB oracle): fold left over the string's Unicode CODE POINTS with
+  * Semantics contract (must stay equal to the `q_fingerprint` DuckDB
+  * oracle): fold left over the string's Unicode CODE POINTS with
   * `acc = (acc * 31 + codepoint) % 1_000_000_007`, empty string → 0,
-  * null → null. Code points, not UTF-16 units: `split(text, '')` never
-  * splits a surrogate pair and Spark's `ascii` returns `codePointAt`,
-  * so unit-wise iteration would diverge on non-BMP text (emoji).
+  * null → null. Code points, not UTF-16 units: the oracle's
+  * `string_split(text, '')` never splits a surrogate pair, so unit-wise
+  * iteration would diverge on non-BMP text (emoji).
   *
   * This is extension ladder rung (b) from the build brief: a scalar
   * `Expression` with `doGenCode`, registered via
@@ -78,12 +78,10 @@ object PolyHash {
 }
 
 /** Winnowing-style fingerprint as ONE native pass: the minimum
-  * [[PolyHash]] over every `k`-code-point window of the string. The
-  * expression-tree form (`transform(sequence(...), i => hash(substr))`)
-  * pays an interpreted lambda per window; this emits a tight nested
-  * loop in codegen. Contract matches
-  * `TextAnalysis.minKgramFingerprint`: windows over CODE POINTS,
-  * whole-string hash when the text is shorter than `k`. */
+  * [[PolyHash]] over every `k`-code-point window of the string, a tight
+  * nested loop in codegen (`TextAnalysis.minKgramFingerprintNative`).
+  * Contract (mirrored by the `q_fingerprint` oracle): windows over CODE
+  * POINTS, whole-string hash when the text is shorter than `k`. */
 case class MinKgramHash(child: Expression, k: Int)
     extends UnaryExpression {
   require(k > 0, "window size must be positive")

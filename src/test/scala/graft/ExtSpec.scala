@@ -55,7 +55,7 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
         "derrière notre immeuble", "fr"),
       5L -> ("昨天晚上我们一起做饭 然后在桌子旁坐了很久 聊了许多事情", "zh"))
     val d = docs(held.map { case (id, (t, _)) => (id, t) }: _*)
-    val out = TextAnalysis.langIdNgram(d, "doc_id", "text")
+    val out = TextAnalysis.langIdNgramLocal(d, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     held.foreach { case (id, (_, want)) => assert(out(id) == want,
       s"doc $id: got ${out(id)}, want $want") }
@@ -64,12 +64,13 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
     val hard = docs((9L, "hablamos demasiado durante aquella tarde soleada"))
     val marker = hard.select(TextAnalysis.langId(col("text")))
       .collect().head.getString(0)
-    val ngram = TextAnalysis.langIdNgram(hard, "doc_id", "text")
+    val ngram = TextAnalysis.langIdNgramLocal(hard, "doc_id", "text")
       .collect().head.getString(1)
     assert(marker == "und")
     assert(ngram == "es")
     // No-trigram input stays "und" in the ngram family too.
-    val empty = TextAnalysis.langIdNgram(docs((7L, "!!")), "doc_id", "text")
+    val empty =
+      TextAnalysis.langIdNgramLocal(docs((7L, "!!")), "doc_id", "text")
       .collect().head.getString(1)
     assert(empty == "und")
   }
@@ -95,10 +96,34 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
       .toDF("doc_id", "text")
       .union(Seq(Tuple1(13L)).toDF("doc_id")
         .withColumn("text", lit(null).cast("string")))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(rows(TextAnalysis.langIdNgramLocal(base, "doc_id", "text")) ==
-      rows(TextAnalysis.langIdNgram(base, "doc_id", "text")))
+    // literal values captured from the retired relational langIdNgram
+    val got = TextAnalysis.langIdNgramLocal(base, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == Map(1L -> "en", 2L -> "es", 3L -> "de", 4L -> "fr",
+      5L -> "zh", 6L -> "es", 7L -> "und", 8L -> "und", 9L -> "und",
+      10L -> "en", 11L -> "en", 12L -> "en", 13L -> "und"))
+  }
+
+  test("langIdNgramLocal keeps the id column's type: string, int and " +
+      "null ids ride through") {
+    val s = spark
+    import s.implicits._
+    val en = "the weather this morning was cold but the birds kept singing"
+    val es = "hablamos demasiado durante aquella tarde soleada"
+    val strIds = Seq(("a", en), ("b", es), ("c", "!!")).toDF("doc_id", "text")
+    val byStr = TextAnalysis.langIdNgramLocal(strIds, "doc_id", "text")
+    assert(byStr.schema("doc_id").dataType ==
+      org.apache.spark.sql.types.StringType)
+    assert(byStr.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      == Map("a" -> "en", "b" -> "es", "c" -> "und"))
+    val intIds = Seq((Some(1), en), (Some(2), es), (None, es))
+      .toDF("doc_id", "text")
+    val byInt = TextAnalysis.langIdNgramLocal(intIds, "doc_id", "text")
+    assert(byInt.schema("doc_id").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(byInt.collect().map(r =>
+        Option(r.get(0)).map(_.asInstanceOf[Int]) -> r.getString(1)).toSet
+      == Set(Some(1) -> "en", Some(2) -> "es", None -> "es"))
   }
 
   test("htmlBlocksLocal is identical to the htmlBlocks expression form " +
@@ -120,13 +145,33 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
           "<p>Read the <a href=\"/x\">full story</a> and much more " +
             "prose follows here today</p>").otherwise(""))
         .as("page"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-        r.getLong(3), r.getLong(4), r.getLong(5), r.getBoolean(6))).toSet
-    val expr = TextAnalysis.htmlBlocks(pg, "doc_id", "page")
     val kern = TextAnalysis.htmlBlocksLocal(pg, "doc_id", "page")
-    assert(kern.columns.toSeq == expr.columns.toSeq)
-    assert(rows(kern) == rows(expr))
+    assert(kern.columns.toSeq == Seq("doc_id", "block_idx", "block_text",
+      "n_chars", "n_words", "link_ppm", "kept"))
+    // literal blocks captured from the retired htmlBlocks expression
+    // form: every page's body <p>, then the entity tail (id % 3), the
+    // nav bar (id % 4) and the prose block (id % 7), in page order; the
+    // quoted-attr anchor (id % 7) sits outside any <p>
+    val tail = ("Tail <tagged> \"quoted\" entity's 'end' hex's zero'd " +
+      "dash\u2013here amp&lt;kept \u2019curly\u2019", 80L, 10L, 0L, true)
+    val nav = ("Home About", 10L, 2L, 1000000L, false)
+    val prose = ("Read the full story and much more prose follows here " +
+      "today", 58L, 11L, 172413L, true)
+    def blocks(id: Long, body: (String, Long, Long, Long, Boolean)) =
+      (body +: Seq((id % 3 == 0) -> tail, (id % 4 == 0) -> nav,
+          (id % 7 == 0) -> prose).collect { case (true, b) => b })
+        .zipWithIndex.map { case ((t, c, w, p, k), i) =>
+          (id, i.toLong, t, c, w, p, k) }
+    val want = (0L until 60L).flatMap { id =>
+      val body = s"some text body number $id with the usual words and " +
+        "a few more tokens to cross the word floor for block keeping"
+      blocks(id, (body, if (id < 10) 108L else 109L, 22L, 0L, true))
+    } ++ blocks(999L, ("", 0L, 0L, 1000000L, false)) // null-text page
+    assert(want.size == 106)
+    val got = kern.collect().toSeq.map(r => (r.getLong(0), r.getLong(1),
+      r.getString(2), r.getLong(3), r.getLong(4), r.getLong(5),
+      r.getBoolean(6)))
+    assert(got.sortBy(r => (r._1, r._2)) == want.sortBy(r => (r._1, r._2)))
     // htmlExtractLocal pointwise == the expression chain on the raw
     // pages too (script/style/comment/entity/numeric-ref edges)
     val pages = pg.select(col("doc_id"), col("page")).collect()
@@ -153,23 +198,25 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
       .toDF("doc_id", "text")
       .union(Seq(Tuple1(7L)).toDF("doc_id")
         .withColumn("text", lit(null).cast("string")))
+    // literal rows captured from the retired langIdMargin expression:
+    // (id, lang, best, second, margin); lang_conf varies with minMargin
+    val scores = Seq[(Long, String, Any, Any, Any)](
+      (1L, "en", 4L, 0L, 4L), (2L, "es", 7L, 0L, 7L),
+      (3L, "und", 0L, 0L, 0L), (4L, "en", 1L, 1L, 0L),
+      (5L, "en", 5L, 3L, 2L), (6L, "und", 0L, 0L, 0L),
+      (7L, "und", null, null, null))
+    val confident = Map(1 -> Set(1L, 2L, 5L), 2 -> Set(1L, 2L, 5L),
+      4 -> Set(1L, 2L))
     for (minMargin <- Seq(1, 2, 4)) {
-      val expr = base
-        .select(col("doc_id"),
-          TextAnalysis.langIdMargin(col("text"), minMargin).as("m"))
-        .select(col("doc_id"), col("m.lang"), col("m.best"),
-          col("m.second"), col("m.margin"), col("m.lang_conf"))
       val kern = TextAnalysis.langIdMarginLocal(base, "doc_id", "text",
         minMargin)
-      assert(kern.columns.toSeq == expr.columns.toSeq)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0),
-          r.getString(1),
-          if (r.isNullAt(2)) null else r.getLong(2),
-          if (r.isNullAt(3)) null else r.getLong(3),
-          if (r.isNullAt(4)) null else r.getLong(4),
-          r.getString(5))).toSet
-      assert(rows(kern) == rows(expr), s"minMargin=$minMargin")
+      assert(kern.columns.toSeq ==
+        Seq("doc_id", "lang", "best", "second", "margin", "lang_conf"))
+      val got = kern.collect().map(r => (r.getLong(0), r.getString(1),
+        r.get(2), r.get(3), r.get(4), r.getString(5))).toSet
+      val want = scores.map { case (id, l, b, s2, m) =>
+        (id, l, b, s2, m, if (confident(minMargin)(id)) l else "und") }
+      assert(got == want.toSet, s"minMargin=$minMargin")
     }
   }
 
@@ -187,25 +234,24 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("repetitionRatio: repeated shingles raise the ratio; short text 0") {
-    val out = docs(
+    val out = TextAnalysis.repetitionRatios(docs(
       (1L, "a b c a b c a b c"), // 7 shingles, 3 distinct -> 4/7
       (2L, "all distinct words here now"),
-      (3L, "x \u00e2\u0080 y \ufffd \u00e2\u0080"), (4L, null))
-      .select(col("doc_id"),
-        TextAnalysis.repetitionRatio(col("text"), 3).as("r"))
+      (3L, "x \u00e2\u0080 y \ufffd \u00e2\u0080"), (4L, null)),
+        "doc_id", "text", 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(math.abs(out(1L) - 4.0 / 7.0) < 1e-9)
     assert(out(2L) == 0.0 && out(3L) == 0.0)
-    // the typed kernel form is value-identical to the expression form
+    assert(!out.contains(4L), "null text drops the row")
+    // exact doubles captured from the retired repetitionRatio expression
+    // (the q_repetition oracle's `1.0 - distinct / total`)
     val fixtures = docs((1L, "a b c a b c a b c"),
       (2L, "all distinct words here now"), (3L, "x y"),
       (4L, "p q p q p q p q"), (5L, "one two  three two  three"))
     val kernel = TextAnalysis.repetitionRatios(fixtures, "doc_id", "text", 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val exprForm = fixtures.select(col("doc_id"),
-        TextAnalysis.repetitionRatio(col("text"), 3).as("r"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(kernel == exprForm)
+    assert(kernel == Map(1L -> 0.5714285714285714, 2L -> 0.0, 3L -> 0.0,
+      4L -> 0.6666666666666667, 5L -> 0.19999999999999996))
   }
 
   test("tokenChunks packs consecutive fixed-size chunks, partial tail kept") {
@@ -246,7 +292,8 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
 
   test("polyFingerprint matches the documented base-31 mod-1e9+7 hash") {
     val out = docs((1L, "abc"))
-      .select(TextAnalysis.polyFingerprint(col("text"))).head().getLong(0)
+      .select(TextAnalysis.polyFingerprintNative(col("text")))
+      .head().getLong(0)
     // ((0*31+97)*31+98)*31+99 mod 1e9+7
     assert(out == ((97L * 31 + 98) * 31 + 99) % 1000000007L)
   }
@@ -254,24 +301,28 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
   test("native PolyHash expression equals the builtin-expression form") {
     val d = docs((1L, "abc"), (2L, ""), (3L, "the quick brown fox 42!"),
       (4L, "héllo wörld"), (5L, "emoji 😀 tail")) // non-BMP
-    val out = d.select(
-        TextAnalysis.polyFingerprint(col("text")).as("a"),
+    val out = d.select(col("doc_id"), col("text"),
         TextAnalysis.polyFingerprintNative(col("text")).as("b"),
-        TextAnalysis.minKgramFingerprint(col("text"), 8).as("ka"),
         TextAnalysis.minKgramFingerprintNative(col("text"), 8).as("kb"))
       .collect()
+    // literal values captured from the retired builtin-expression forms
+    // (polyFingerprint / minKgramFingerprint)
+    assert(out.map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).toSet ==
+      Set((1L, 96354L, 96354L), (2L, 0L, 0L),
+        (3L, 611831251L, 97868118L), (4L, 309710581L, 295233784L),
+        (5L, 164364210L, 125691852L)))
+    // and the driver-side reference implementations agree
     out.foreach { r =>
-      assert(r.getLong(0) == r.getLong(1))
-      assert(r.getLong(2) == r.getLong(3))
+      assert(r.getLong(2) == graft.plans.PolyHash.hash(r.getString(1)))
+      assert(r.getLong(3) ==
+        graft.plans.MinKgramHash.minHash(r.getString(1), 8))
     }
-    // and the driver-side reference implementation agrees
-    assert(out(0).getLong(0) == graft.plans.PolyHash.hash("abc"))
   }
 
   test("minKgramFingerprint is invariant to a far-away edit") {
     val base = "aaaa bbbb cccc dddd eeee ffff gggg"
     val Seq(f1, f2) = docs((1L, base + " zzzz"), (2L, base + " yyyy"))
-      .select(TextAnalysis.minKgramFingerprint(col("text"), 8))
+      .select(TextAnalysis.minKgramFingerprintNative(col("text"), 8))
       .collect().toSeq.map(_.getLong(0))
     // min over shared windows usually survives a tail edit
     assert(f1 == f2)
@@ -347,15 +398,15 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
       .union(Seq((7L, "ab"), (8L, "")).toDF("doc_id", "text"))
       .union(Seq(Tuple1(9L)).toDF("doc_id")
         .withColumn("text", lit(null).cast("string")))
-    def collectSigs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val agg = collectSigs(Dedup.simhashSignatures(d, "doc_id", "text"))
-    val local = collectSigs(
-      Dedup.simhashSignaturesLocal(d, "doc_id", "text"))
-    assert(local == agg)
-    // the short doc (< n tokens -> [text] shingle) and the empty text
-    // must be present; the null text absent from both forms
-    assert(agg.contains(7L) && agg.contains(8L) && !agg.contains(9L))
+    val local = Dedup.simhashSignaturesLocal(d, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // literal signatures captured from the retired aggregate form: the
+    // short doc (< n tokens -> [text] shingle) and the empty text are
+    // present, the null text is absent
+    assert(local == Map(1L -> 981716688516934108L,
+      2L -> 690144071894409692L, 3L -> 367120304039007857L,
+      4L -> 638844038129775868L, 7L -> 110319792137841948L,
+      8L -> 955282973525019424L))
   }
 
   test("langQualityGateLocal is bit-identical to the expression gate, " +
@@ -426,10 +477,12 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
       .union(Seq(Tuple1(5L)).toDF("doc_id")
         .withColumn("text", lit(null).cast("string")))
     val expr = base.select(col("doc_id"),
-      TextAnalysis.nTokens(col("text")).cast("long").as("n_tokens"),
-      TextAnalysis.gopherPass(col("text")).as("p_gf"),
-      (TextAnalysis.langId(col("text")) === "en" &&
-        TextAnalysis.qualityScore(col("text")) >= 60.0).as("p_lq"))
+        TextAnalysis.nTokens(col("text")).cast("long").as("n_tokens"),
+        (TextAnalysis.langId(col("text")) === "en" &&
+          TextAnalysis.qualityScore(col("text")) >= 60.0).as("p_lq"))
+      .join(TextAnalysis.gopherRules(base, "doc_id", "text")
+        .select(col("doc_id"), col("pass").as("p_gf")), "doc_id")
+      .select("doc_id", "n_tokens", "p_gf", "p_lq")
     val kern = TextAnalysis.gopherLangFlagsLocal(base, "doc_id", "text",
       "en", 60.0)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -438,6 +491,12 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
         if (r.isNullAt(2)) null else r.getBoolean(2),
         if (r.isNullAt(3)) null else r.getBoolean(3))).toSet
     assert(rows(kern) == rows(expr))
+    // literal trio captured from the retired gopherPass column form
+    assert(rows(kern) == Set[(Long, Any, Any, Any)](
+      (1L, 71L, true, true), (2L, 5L, false, false),
+      (3L, 61L, false, true), (4L, 1L, false, false),
+      (5L, null, null, false), (6L, 83L, false, true),
+      (7L, 46L, false, true)))
     // the null-text row: n_tokens/p_gf NULL, but p_lq FALSE — langId
     // of null text is the literal "und", so the === compare is a
     // non-null false and the && collapses
@@ -452,7 +511,7 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("simhash of near-dups is close in Hamming distance, far docs far") {
-    val sig = Dedup.simhashSignatures(nearDupDocs, "doc_id", "text")
+    val sig = Dedup.simhashSignaturesLocal(nearDupDocs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sig(1L), sig(2L)) < ham(sig(1L), sig(3L)))
@@ -471,7 +530,7 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
     val pairs = Dedup.simhashDupPairs(d, "doc_id", "text", maxHamming = 7)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // brute force over the signatures
-    val sig = Dedup.simhashSignatures(d, "doc_id", "text")
+    val sig = Dedup.simhashSignaturesLocal(d, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val brute = (for {
       a <- sig.keys; b <- sig.keys if a < b
@@ -580,7 +639,7 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
     assert(p88 == pairsAt(4, 16))
     assert(p88 == pairsAt(6, 10))
     // brute-force witness at the same threshold
-    val sig = Dedup.simhashSignatures(d, "doc_id", "text")
+    val sig = Dedup.simhashSignaturesLocal(d, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val brute = (for {
       a <- sig.keys; b <- sig.keys if a < b
@@ -703,6 +762,29 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
       "releasing the returned handle frees the last block")
   }
 
+  test("Pinned.releaseAllScratch deletes every columnarPin dir, " +
+      "tolerating one already removed by hand") {
+    val s = spark
+    import s.implicits._
+    import org.apache.commons.io.FileUtils.deleteDirectory
+    val root = java.nio.file.Files.createTempDirectory("graft-scratch-spec")
+      .toFile
+    s.conf.set("spark.graft.scratch.dir", root.getAbsolutePath)
+    try {
+      val a = graft.ext.Pinned.columnarPin(Seq(1L, 2L).toDF("v"), "spec")
+      val b = graft.ext.Pinned.columnarPin(Seq(3L).toDF("v"), "spec")
+      assert(a.count() == 2L && b.count() == 1L)
+      val dirs = root.listFiles().toSeq
+      assert(dirs.size == 2 && dirs.forall(_.isDirectory))
+      deleteDirectory(dirs.head)
+      graft.ext.Pinned.releaseAllScratch()
+      assert(root.listFiles().isEmpty, "every pin dir must be gone")
+    } finally {
+      s.conf.unset("spark.graft.scratch.dir")
+      deleteDirectory(root)
+    }
+  }
+
   test("urlCanonical rule table: ports, www, slashes, params, fragments") {
     val s = spark
     import s.implicits._
@@ -814,38 +896,28 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
       "com" -> null,
       // single-label host: nothing registrable
       "localhost" -> null)
-    val out = cases.zipWithIndex.map { case ((h, _), i) => (i.toLong, h) }
-      .toDF("id", "host")
-      .select(col("id"),
-        graft.ext.Urls.urlRegistrableDomain(col("host")).as("pld"))
-      .collect()
-      .map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) null else r.getString(1))).toMap
-    cases.zipWithIndex.foreach { case ((h, want), i) =>
-      assert(out(i.toLong) == want, s"pld($h)") }
-    // the typed kernel (the hot-path form q_pld_rollup runs) must be
-    // value-identical to the expression reference — over the named
-    // cases, the whole demoHost fixture space, and degenerate hosts
-    // the fixture never produces
-    val degenerate = Seq("", ".", "x.", ".x", ".co.uk", "co.uk.",
-      "a..co.uk", "..")
+    cases.foreach { case (h, want) =>
+      assert(graft.ext.Urls.registrableDomainLocal(h) == want, s"pld($h)") }
+    // degenerate hosts the fixture never produces: every one is NULL,
+    // as the retired expression form answered too
+    Seq("", ".", "x.", ".x", ".co.uk", "co.uk.", "a..co.uk", "..")
+      .foreach(h => assert(graft.ext.Urls.registrableDomainLocal(h) == null,
+        s"pld('$h')"))
+    // the whole demoHost fixture space (the hosts q_pld_rollup keys
+    // on): bare suffix and single-label hosts are NULL, every other
+    // host's PLD is the host minus its subdomain prefix — the value the
+    // retired expression form gave on all 62 distinct hosts
     val fixture = (0L until 500L).map(i => (i, s"src${i % 20}"))
       .toDF("doc_id", "source")
       .select(graft.ext.Urls.demoHost(col("doc_id"), col("source"))
         .as("host"))
-      .collect().map(_.getString(0)).toSeq
-    (cases.map(_._1) ++ degenerate ++ fixture).zipWithIndex
-      .map { case (h, i) => (i.toLong, h) }
-      .toDF("id", "host")
-      .select(col("id"), col("host"),
-        graft.ext.Urls.urlRegistrableDomain(col("host")).as("pld"))
-      .collect().foreach { r =>
-        val h = r.getString(1)
-        val expr = if (r.isNullAt(2)) null else r.getString(2)
-        val kern = graft.ext.Urls.registrableDomainLocal(h)
-        assert(kern == expr,
-          s"kernel != expression at host '$h': $kern vs $expr")
-      }
+      .collect().map(_.getString(0)).toSeq.distinct
+    assert(fixture.size == 62)
+    fixture.foreach { h =>
+      val want = if (h == "co.uk" || h == "localhost") null
+        else h.stripPrefix("news.").stripPrefix("blog.m.")
+      assert(graft.ext.Urls.registrableDomainLocal(h) == want, s"pld($h)")
+    }
   }
 
   test("urlFilter rule table: extensions, banned paths, param " +
@@ -923,9 +995,8 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
       (3L, "xyzzy plugh"),                         // no markers -> und
       (4L, "the of la"))                           // en 2 vs es 1: margin 1 < 2
       .toDF("id", "t")
-    val out = rows.select(col("id"),
-        TextAnalysis.langIdMargin(col("t")).as("m"))
-      .select(col("id"), col("m.lang"), col("m.margin"), col("m.lang_conf"))
+    val out = TextAnalysis.langIdMarginLocal(rows, "id", "t")
+      .select(col("id"), col("lang"), col("margin"), col("lang_conf"))
       .collect().map(r => r.getLong(0) ->
         ((r.getString(1), r.getLong(2), r.getString(3)))).toMap
     assert(out(0L) == (("en", 5L, "en")))
@@ -1112,7 +1183,7 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
       "<p>too short</p>" +                                           // floor
       "<p><!-- only markup --></p>" +                                // empty
       "</body>"
-    val out = graft.ext.TextAnalysis.htmlBlocks(
+    val out = graft.ext.TextAnalysis.htmlBlocksLocal(
         Seq((1L, page)).toDF("doc_id", "page"), "doc_id", "page")
       .collect().map(r => r.getAs[Long]("block_idx") ->
         ((r.getAs[String]("block_text"), r.getAs[Long]("link_ppm"),
@@ -1799,12 +1870,14 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
     val fromRules = TextAnalysis.gopherRules(d, "doc_id", "text")
       .select(col("doc_id"), col("pass"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val fromCol = d.select(col("doc_id"),
-        TextAnalysis.gopherPass(col("text")).as("p"))
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    // the pass column now comes from the funnel's flag kernel
+    val fromCol = TextAnalysis.gopherLangFlagsLocal(d, "doc_id", "text",
+        "en", 60.0)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(fromCol == fromRules)
-    assert(fromRules.values.toSet == Set(true, false),
-      "the fixture must exercise both outcomes")
+    // literal outcomes captured from the retired gopherPass column
+    assert(fromRules == Map(1L -> true, 2L -> false, 3L -> false,
+      4L -> false), "the fixture must exercise both outcomes")
   }
 
   test("gopherRepetitionLocal is bit-identical to the expression form " +
@@ -1821,17 +1894,39 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
       // POINTS (Spark/DuckDB length()), not UTF-16 units
       (6L, "😀a b 😀a b 😀a b"))
       .toDF("doc_id", "text")
+    // literal rows captured from the retired gopherRepetition
+    // expression form: (id, n_lines, n_paras, dup_line, dup_line_char,
+    // dup_para, dup_para_char, top2, top3, top4 — all ppm), then the
+    // seven rule flags and pass_repetition
+    val F = false
+    val T = true
+    val want = Seq(
+      Row(0L, 2L, 1L, 500000L, 489361L, 0L, 0L, 212765L, 340425L, 468085L,
+        F, F, T, T, F, F, F, F),
+      Row(1L, 8L, 2L, 500000L, 486274L, 500000L, 498039L, 54901L, 86274L,
+        117647L, F, F, F, F, T, T, T, F),
+      Row(2L, 1L, 1L, 0L, 0L, 0L, 0L, 818181L, 909090L, 1272727L,
+        T, T, T, T, F, F, F, F),
+      Row(3L, 1L, 1L, 0L, 0L, 0L, 0L, 476190L, 428571L, 523809L,
+        T, T, T, T, F, F, F, F),
+      Row(4L, 1L, 1L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, T, T, T, T, T, T, T, T),
+      Row(5L, 1L, 1L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, T, T, T, T, T, T, T, T),
+      Row(6L, 1L, 1L, 0L, 0L, 0L, 0L, 857142L, 1000000L, 1285714L,
+        T, T, T, T, F, F, F, F))
+    assert(graft.ext.TextAnalysis.gopherRepetitionLocal(fixture, "doc_id",
+      "text").orderBy(col("doc_id")).collect().toSeq == want)
+    // real corpus: row count and an order-independent digest over every
+    // output column, both captured from the retired expression form
     val real = s.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
-    for (d <- Seq(fixture, real)) {
-      val expr = graft.ext.TextAnalysis
-        .gopherRepetition(d, "doc_id", "text")
-        .orderBy(col("doc_id")).collect().toSeq
-      val kern = graft.ext.TextAnalysis
-        .gopherRepetitionLocal(d, "doc_id", "text")
-        .orderBy(col("doc_id")).collect().toSeq
-      assert(kern == expr)
-    }
+    val kern = graft.ext.TextAnalysis
+      .gopherRepetitionLocal(real, "doc_id", "text")
+    val digest = kern.agg(count(lit(1)),
+        sum(xxhash64(kern.columns.map(col): _*).cast("decimal(38,0)")))
+      .head()
+    assert(digest.getLong(0) == 500L)
+    assert(digest.getDecimal(1) ==
+      new java.math.BigDecimal("34390048285110783322"))
   }
 
   test("gopherRepetition pins each published rule independently: dup " +
@@ -1855,7 +1950,7 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
       (4L, "hello")
     ).toDF("doc_id", "text")
     val out = graft.ext.TextAnalysis
-      .gopherRepetition(docs, "doc_id", "text")
+      .gopherRepetitionLocal(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r).toMap
     def ppm(num: Long, den: Long): Long = 1000000L * num / den
     // doc 0: n_lines 2, 1 dup line of 23 chars, 47 total chars

@@ -75,10 +75,11 @@ object PropertiesSpec extends Properties("graft") {
       val out = strs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("id", "text")
         .select(col("text"),
-          TextAnalysis.polyFingerprint(col("text")).as("a"),
           TextAnalysis.polyFingerprintNative(col("text")).as("b"))
         .collect()
-      out.forall(r => r.getLong(1) == r.getLong(2) &&
+      // the builtin-expression form is retired; the driver-side
+      // reference fold stays the independent check
+      out.forall(r =>
         r.getLong(1) == graft.plans.PolyHash.hash(r.getString(0)))
     }
 
@@ -288,10 +289,7 @@ object PropertiesSpec extends Properties("graft") {
       import s.implicits._
       val d = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
-      val got = Dedup.winnowFingerprints(d, "doc_id", "text", k, w)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      // the deque hot path must match the aggregate reference form
+      // the deque kernel must match the reference winnowing below
       val gotLocal = Dedup.winnowFingerprintsLocal(d, "doc_id", "text", k, w)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -311,7 +309,7 @@ object PropertiesSpec extends Properties("graft") {
           }.distinct
         }
       }.toSet
-      got == expect && gotLocal == expect
+      gotLocal == expect
     }
 
   property("wordDropout at 0% is the identity; reference drop at any pct") =
