@@ -95,23 +95,8 @@ object Bench {
     }
     val loadStart = loadAvg1m()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // parse up front: a non-numeric env value must fail fast here, not
-    // surface later as an invalid-JSON _cpus entry that silently breaks
-    // round-over-round diffs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // any streaming query's slow micro-batch logs its per-phase
-    // durations — tail outliers attributable from the round artifact
-    graft.streaming.Streaming.registerSlowBatchListener(spark)
+    val cpus = DriverSession.cpus()
+    val spark = DriverSession.session(cpus)
     // absorb one-time SESSION costs before any timed work — noop-sink
     // registration, parquet footer/schema reads, first-job scheduler
     // spin-up — so they don't bill to whichever query happens to run
@@ -184,24 +169,11 @@ object Bench {
       // a failed query reports -1, never a fast-looking elapsed time
       val elapsed = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       val gcDelta = gcMillis() - gc0
-      // free any caches the operator left behind (outside the timed
-      // window: the query's own work is fully paid above); the RDD
-      // sweep also frees eager-localCheckpoint pins (graph ops, DAG
-      // pins inside operators), which live in the block manager but
-      // NOT in the catalog cache — without it a 288-query session
-      // accumulates every query's checkpoint blocks
-      spark.catalog.clearCache()
-      // blocking sweep: with blocking=false the removal messages can
-      // still be in flight when the NEXT query is timed, so its
-      // heap/cache start samples would blame the wrong query
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      // scratch-parquet pins (Pinned.columnarPin) are disk state, not
-      // block-manager state: release them per query too, or a full
-      // bench session accumulates one corpus-sized dir per pinning
-      // query invocation until JVM exit (safe here: the result was
-      // fully materialized to the noop sink above)
-      graft.ext.Pinned.releaseAllScratch()
+      // free what the query left pinned (outside the timed window: the
+      // query's own work is fully paid above, and its result was fully
+      // materialized to the noop sink); without it a 321-query session
+      // accumulates every query's checkpoint blocks and scratch dirs
+      DriverSession.sweep(spark)
       if (heapUsedMb() > drainMb) System.gc()
       (elapsed, loadAvg1m(), gcDelta, heapUsedMb(), heapStart,
         cacheStartMb, rddsStart)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Empirical scale probe behind SCALING.md's measured section: the
@@ -25,15 +25,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val (dir1, dir10) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").trim.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DriverSession.session(DriverSession.cpus())
 
     def docs(d: String) = spark.read.parquet(s"$d/documents.parquet")
     def embs(d: String) = spark.read.parquet(s"$d/embeddings.parquet")
@@ -51,42 +43,36 @@ object ScaleProbe {
           .distinct().orderBy(col("p")).limit(200)
           .collect().map(_.getString(0)).toSeq
       })
-    // the 90%-corpus label ledger, pre-warmed per dir (dupClusters
-    // localCheckpoints its output, so the cached frame reads blocks):
-    // the incremental probe must time the FOLD, not the ledger build
-    val labelCache = scala.collection.mutable.Map.empty[String, DataFrame]
+    // the ledgers the probe arms READ as maintained state: written to
+    // parquet once per (ledger, dir), outside every timed region and
+    // out of the per-op sweep's reach; deleted at exit
+    val stored = scala.collection.mutable.Map.empty[(String, String), String]
+    def storeOnce(name: String, d: String)(build: => DataFrame): String =
+      stored.getOrElseUpdate((name, d), {
+        val out = java.nio.file.Files
+          .createTempDirectory(s"graft_${name}_").toString
+        build.write.mode("overwrite").parquet(out)
+        out
+      })
+    // the 90%-corpus label ledger: the incremental probe must time the
+    // FOLD, not the ledger build
     def labels90(d: String): DataFrame =
-      labelCache.getOrElseUpdate(d,
+      spark.read.parquet(storeOnce("labels", d)(
         Dedup.dupClusters(Dedup.minhashDupPairs(
           docs(d).filter(col("doc_id") % 10 =!= 0),
-          "doc_id", "text", threshold = 0.5)))
-    // the STORED band ledger over the corpus side (doc_id >= 500),
-    // written to parquet once per dir so the probe arm times a READ of
-    // maintained state + the batch-sized probe — never the ledger build
-    val bandLedgerCache = scala.collection.mutable.Map.empty[String, String]
+          "doc_id", "text", threshold = 0.5))))
+    // the band ledger over the corpus side (doc_id >= 500): the probe
+    // arm times a READ of maintained state + the batch-sized probe
     def bandLedger(d: String): String =
-      bandLedgerCache.getOrElseUpdate(d, {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_bands_").toString
-        Dedup.minhashBandRelation(
-            docs(d).filter(col("doc_id") >= 500), "doc_id", "text")
-          .write.mode("overwrite").parquet(out)
-        out
-      })
-    // the STORED simhash signature ledger over the corpus side — for
-    // SimHash the 60-bit signature alone is the verify statistic, so
-    // the probe arm's whole corpus-side footprint is a 16-byte-per-doc
-    // parquet read (no text, not even for candidates)
-    val sigLedgerCache = scala.collection.mutable.Map.empty[String, String]
+      storeOnce("bands", d)(Dedup.minhashBandRelation(
+        docs(d).filter(col("doc_id") >= 500), "doc_id", "text"))
+    // the simhash signature ledger over the corpus side — for SimHash
+    // the 60-bit signature alone is the verify statistic, so the probe
+    // arm's whole corpus-side footprint is a 16-byte-per-doc parquet
+    // read (no text, not even for candidates)
     def sigLedger(d: String): String =
-      sigLedgerCache.getOrElseUpdate(d, {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_sigs_").toString
-        Dedup.simhashSignaturesLocal(
-            docs(d).filter(col("doc_id") >= 500), "doc_id", "text")
-          .write.mode("overwrite").parquet(out)
-        out
-      })
+      storeOnce("sigs", d)(Dedup.simhashSignaturesLocal(
+        docs(d).filter(col("doc_id") >= 500), "doc_id", "text"))
     val ops: Seq[(String, String => DataFrame)] = Seq(
       // the signature-ledger scale claim, measured directly: a FIXED
       // 500-doc batch (same ids at both scales) dedups against a
@@ -240,7 +226,7 @@ object ScaleProbe {
     // mint is pre-paid too so neither blocklist form times it
     if (selected.exists(_._1.startsWith("blocklist"))) phrases200(dir10)
     if (selected.exists(_._1 == "cluster_incremental"))
-      { labels90(dir1).count(); labels90(dir10).count(); () }
+      { labels90(dir1); labels90(dir10); () }
     if (selected.exists(_._1 == "band_ledger_fixed_batch"))
       { bandLedger(dir1); bandLedger(dir10); () }
     if (selected.exists(_._1 == "sig_ledger_fixed_batch"))
@@ -258,7 +244,7 @@ object ScaleProbe {
     val results = selected.map { case (name, f) =>
       val (s1, n1) = timed(f(dir1))
       val (s10, n10) = timed(f(dir10))
-      spark.catalog.clearCache()
+      DriverSession.sweep(spark)
       (name, s1, n1, s10, n10)
     }
 
@@ -361,6 +347,8 @@ object ScaleProbe {
           s""""corpus_candidates":{$corpusBody}"""
       } else ""
     println(s"""{"metric":"scale_probe","ops":{$body}$candBody}""")
+    stored.values.foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,18 +10,7 @@ object Verify {
     // its own queries' oracle SQL, so check_oracle.py checks it alone.
     val only = args.lift(2).map(_.split(",").toSet)
     val selected = (name: String) => only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.streaming.Streaming.registerSlowBatchListener(spark)
+    val spark = DriverSession.session(DriverSession.cpus())
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => selected(name) }
@@ -32,17 +20,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // operators that persist() (dedup family) release their big
-      // intermediates themselves but keep an output-sized result cache;
-      // drop it so back-to-back queries don't accumulate blocks — and
-      // sweep persistent RDDs too, which catches eager-localCheckpoint
-      // pins the catalog cache does not track
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // scratch-parquet pins are disk state the RDD sweep can't see —
-      // release per query (the result landed in parquet above)
-      graft.ext.Pinned.releaseAllScratch()
+      // the result landed in parquet above: free what the query pinned
+      // so back-to-back queries don't accumulate blocks or scratch dirs
+      DriverSession.sweep(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

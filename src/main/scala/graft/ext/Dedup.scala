@@ -87,19 +87,6 @@ object Dedup {
     } else Array(text)
   }
 
-  /** Driver/executor-side form of THE portable-hash idiom
-    * (`Sampling.md5Top60`): top 60 bits of md5, i.e. the first 15 hex
-    * digits — equals the first 8 digest bytes read big-endian, shifted
-    * right 4. */
-  private def md5Top60Local(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    v >>> 4
-  }
-
   /** One row per (id, distinct word-n-gram shingle). The explode is the
     * only data expansion: ~tokens-per-doc rows per doc. */
   def shingleRows(docs: DataFrame, idCol: String, textCol: String,
@@ -522,7 +509,7 @@ object Dedup {
           else {
             val votes = new Array[Int](60)
             shingles.foreach { s =>
-              val h = md5Top60Local(s)
+              val h = Sampling.md5Top60Local(s)
               var p = 0
               while (p < 60) {
                 votes(p) += (((h >>> p) & 1L).toInt * 2 - 1); p += 1
@@ -2048,10 +2035,10 @@ object Dedup {
   // ── Winnowing (MOSS) fingerprints ──────────────────────────────────────
 
   /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    * SIGMOD 2003 — the MOSS algorithm): hash every char k-gram, slide a
-    * window of `w` consecutive k-gram positions, and in each window
-    * select the MINIMUM hash (ties → the RIGHTMOST minimal position,
-    * the paper's robust-winnowing rule). The distinct selected
+    * SIGMOD 2003 — the MOSS algorithm): hash every code-point k-gram,
+    * slide a window of `w` consecutive k-gram positions, and in each
+    * window select the MINIMUM hash (ties → the RIGHTMOST minimal
+    * position, the paper's robust-winnowing rule). The distinct selected
     * (position, hash) pairs are the document's fingerprint set, with
     * the guarantee the paper proves: any substring shared between two
     * documents of length ≥ w + k − 1 chars contributes at least one
@@ -2081,13 +2068,24 @@ object Dedup {
     docs.select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(java.lang.Long, String)]
       .flatMap { case (id, text) =>
-        if (id == null || text == null || text.length < k) Iterator.empty
+        val n = if (text == null) 0 else text.codePointCount(0, text.length)
+        if (id == null || n < k) Iterator.empty
         else {
-          val nGrams = text.length - k + 1
+          // k-grams count CODE POINTS, as the DuckDB replay does: off(c)
+          // is code point c's UTF-16 offset, so a surrogate pair is one
+          // character and never split across two grams
+          val off = new Array[Int](n + 1)
+          var c = 0
+          while (c < n) {
+            off(c + 1) = off(c) + Character.charCount(text.codePointAt(off(c)))
+            c += 1
+          }
+          val nGrams = n - k + 1
           val hs = new Array[Long](nGrams)
           var p = 0
           while (p < nGrams) {
-            hs(p) = md5Top60Local(text.substring(p, p + k)); p += 1
+            hs(p) = Sampling.md5Top60Local(text.substring(off(p), off(p + k)))
+            p += 1
           }
           val out = scala.collection.mutable.LinkedHashSet.empty[(Long, Long)]
           if (nGrams <= w) {

@@ -151,14 +151,19 @@ object Sampling {
     df.filter(hashBucket(key, 100) < rate)
   }
 
-  /** Driver-side scalar mirror of [[md5Top60]] — for plan-time ring
-    * construction ([[ringShard]]); the same value the column
-    * expression (and its DuckDB rendering) computes for the key. */
+  /** Scalar mirror of [[md5Top60]], driver- or executor-side — for
+    * plan-time ring construction ([[ringShard]]) and the per-shingle /
+    * per-k-gram hashes of the dedup kernels; the same value the column
+    * expression (and its DuckDB rendering) computes for the key. The
+    * top 60 bits of md5 (the first 15 hex digits) are the first 8
+    * digest bytes read big-endian, shifted right 4. */
   private[graft] def md5Top60Local(key: String): Long = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(key.getBytes("UTF-8"))
-    java.lang.Long.parseLong(
-      d.take(8).map(b => f"$b%02x").mkString.take(15), 16)
+    var v = 0L
+    var i = 0
+    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
+    v >>> 4
   }
 
   /** Consistent-hash ring shard assignment — the STABLE alternative to

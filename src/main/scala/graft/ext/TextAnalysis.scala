@@ -1397,8 +1397,9 @@ object TextAnalysis {
     // per doc. CollapseProject keeps the split in its own Project
     // (non-cheap expression referenced more than once), so `_t` is
     // computed once; the trigram build is then three output-sized
-    // array slices zipped positionally. Measured (LmProbe, sf0.1,
-    // 260k instances): explode 3.76 s → 0.46 s.
+    // array slices zipped positionally. Measured (sf0.1, 260k
+    // instances, `git show 428e7a8:src/main/scala/graft/LmProbe.scala`):
+    // explode 3.76 s → 0.46 s.
     val tk = col("_t")
     val inst = docs
       .select(col(idCol), t.as("_t"))
@@ -1427,7 +1428,8 @@ object TextAnalysis {
     val n = toks.count()
     // same materialize-once + positional-zip rewrite as `inst` (the
     // r15 element_at-lambda form re-split the doc per bigram position;
-    // LmProbe measured this table's build at 2.55 s → output-sized)
+    // the same retired probe measured this table's build at 2.55 s →
+    // output-sized)
     val big = docs
       .select(t.as("_t"))
       .filter(size(tk) >= 2)

@@ -428,12 +428,12 @@ object Streaming {
   private def replayStaged[T](spark: SparkSession, workDir: String,
       queryName: String, schema: StructType)(
       ingest: DataFrame => StreamingQuery)(readBack: => T): T =
-    withStreamShuffle(spark) {
+    try withStreamShuffle(spark) {
       awaitOneShot(ingest(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$workDir/staged")),
         queryName)
       readBack
-    }
+    } finally lastTickEnd.remove(queryName)
 
   /** Stage `batches` as one flat parquet directory, one file per
     * batch, each stamped with a strictly later mtime, so a
@@ -900,8 +900,9 @@ object Streaming {
         queryName)
     }
 
-  // end time of each query's previous tick, for timedTick's gap
-  private val lastTickEnd =
+  // end time of each query's previous tick, for timedTick's gap; a
+  // one-shot replay drops its entry when it ends ([[replayStaged]])
+  private[graft] val lastTickEnd =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private val SlowTickMs = 10000L
 
@@ -912,9 +913,9 @@ object Streaming {
     * Spark's own per-phase duration breakdown (getBatch/addBatch/
     * commitOffsets/…), which names WHERE inside the engine's batch
     * cycle a tail outlier sat. Complements [[timedTick]] (which also
-    * sees the BETWEEN-tick scheduler gap). Registered by the Bench and
-    * Verify mains — the surfaces whose artifacts a tail outlier needs
-    * to be attributable from. */
+    * sees the BETWEEN-tick scheduler gap). Registered on every
+    * [[graft.DriverSession.session]], so a tail outlier is attributable
+    * from any main's artifact. */
   final class SlowBatchListener(thresholdMs: Long = SlowTickMs)
       extends org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -956,34 +957,16 @@ object Streaming {
   def registerSlowBatchListener(spark: SparkSession): Unit =
     if (listenerRegistered.add(spark))
       spark.streams.addListener(new SlowBatchListener())
-  /** Per-query tick STAGE timings recorded by instrumented ingest
-    * ticks (cluster/pipeline ledgers): one entry per tick, stage name →
-    * wall ms. The attribution registry behind the stage tables in
-    * BASELINE.md — a probe main reads it after a run instead of
-    * parsing stderr; the stderr line is still printed so a driver
-    * artifact carries the numbers too. Bounded: entries accumulate per
-    * PROCESS run (Verify/Bench lifetimes), keyed by the one-shot query
-    * name. */
-  private[graft] val tickStages =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[(String, Long)])]]()
-  /** Per-query retention cap: a long-running production ingest reusing
-    * one query name must not grow the registry without bound — the
-    * newest `TickStageCap` ticks stay (probes read the tail), older
-    * entries roll off. */
-  private val TickStageCap = 256
+  /** Per-tick STAGE timings of the instrumented ingest ticks
+    * (cluster/pipeline/funnel/web ledgers): one stderr line per
+    * tick, stage name → wall ms, so a `SPARK_GRAFT_ONLY=… Bench` run
+    * shows where each tick's time went. Nothing is retained. */
   private[graft] def recordTickStages(queryName: String, batchId: Long,
       stages: Seq[(String, Long)]): Unit =
-    if (queryName.nonEmpty) {
-      val q = tickStages.computeIfAbsent(queryName,
-        _ => new java.util.concurrent.ConcurrentLinkedQueue())
-      q.add((batchId, stages))
-      while (q.size > TickStageCap) q.poll()
+    if (queryName.nonEmpty)
       System.err.println(s"[graft-stream] TICK STAGES query=$queryName " +
         s"batch=$batchId " +
         stages.map { case (n, ms) => s"$n=${ms}ms" }.mkString(" "))
-      ()
-    }
   /** The occupancy guard with an availability escape hatch: the
     * default HARD-FAILS a degraded tick (a boilerplate-skewed corpus
     * must not surface as a mystery slowdown), but because ledger and

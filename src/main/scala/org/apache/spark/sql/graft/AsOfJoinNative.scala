@@ -81,7 +81,8 @@ case class AsOfJoinNode(
   * row (no whole-stage codegen), but every projection/ordering inside
   * it is code-generated (`UnsafeProjection`/`RowOrdering`).
   *
-  * CODEGEN DECISION (round 6, measured via `graft.AsOfBench` at 20 M
+  * CODEGEN DECISION (round 6, measured by the retired AsOfBench main,
+  * `git show 428e7a8:src/main/scala/graft/AsOfBench.scala`, at 20 M
   * facts × 400 k updates × 100 k keys — BASELINE.md "AsOfJoinExec
   * codegen decision"): this interpreted loop beats the strongest fully
   * WholeStageCodegen'd composition (merge-hinted SMJ with the ≤-range

@@ -2608,6 +2608,41 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
     assert(out.find(_._1 == 7L).get._2 == expect)
   }
 
+  test("md5Top60Local pins literal values for ASCII, CJK and emoji keys " +
+      "and equals the md5Top60 column") {
+    val s = spark
+    import s.implicits._
+    import graft.ext.Sampling
+    // the first 15 hex digits of md5(utf8(key)), as DuckDB's
+    // ('0x' || substr(md5(key), 1, 15))::UBIGINT computes them
+    val expect = Seq("hello world" -> 426544247714475757L,
+      "数据去重" -> 533678913557705414L,
+      "😀🎉" -> 382525554005417775L)
+    expect.foreach { case (k, v) => assert(Sampling.md5Top60Local(k) == v, k) }
+    val col60 = expect.map(_._1).toDF("k")
+      .select(col("k"), Sampling.md5Top60(col("k")))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(col60 == expect.toMap)
+  }
+
+  test("winnowFingerprintsLocal windows over code points: literal " +
+      "emoji, CJK and ASCII fixtures") {
+    // rows replayed by OracleBuilders.winnowFpChainSql(8, 2) in DuckDB;
+    // a surrogate pair is ONE character, so the emoji doc's first gram
+    // is "😀abcdefg" at position 1
+    val d = docs((1L, "😀abcdefghij"), (2L, "数据去重指纹算法测试文本"),
+      (3L, "the quick brown fox"))
+    val got = graft.ext.Dedup.winnowFingerprintsLocal(d, "doc_id", "text",
+        k = 8, w = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == Set(
+      (1L, 1L, 752035035661608356L), (1L, 3L, 40060989269029949L),
+      (2L, 2L, 188503321762264980L), (2L, 4L, 470399820884294770L),
+      (3L, 2L, 307036410219825821L), (3L, 3L, 279883570452268497L),
+      (3L, 5L, 239533953046637015L), (3L, 7L, 105960647812987848L),
+      (3L, 9L, 35557226005317407L), (3L, 11L, 397331489564618443L)))
+  }
+
   test("mutualKnn: only reciprocal top-k pairs survive; cross-cluster " +
       "asymmetry drops out") {
     val s = spark

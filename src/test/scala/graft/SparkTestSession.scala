@@ -8,19 +8,5 @@ trait SparkTestSession {
 }
 
 object SparkTestSession {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // storage-partitioned joins over DSv2 scans that report a
-      // KeyGroupedPartitioning (FormResponseScan day blocks)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = DriverSession.session(4)
 }

@@ -2003,6 +2003,40 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("a replay drops its lastTickEnd entry when it returns and when " +
+      "it throws") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tickend_")
+    try {
+      Seq((1L, "web", "a b"), (2L, "books", "c d"), (3L, "web", "e f"))
+        .toDF("doc_id", "source", "text").coalesce(1)
+        .write.parquet(dir.resolve("documents.parquet").toString)
+      val done = Streaming.nextQueryName("spec_tickend")
+      assert(Streaming.urlStreamAvailableNow(s, dir.toString,
+        dir.resolve("ok").toString, done).count() == 3L)
+      assert(!Streaming.lastTickEnd.containsKey(done))
+      // the ticks ran under timedTick (the entry exists while the
+      // replay runs); the read-back then throws
+      val failed = Streaming.nextQueryName("spec_tickend")
+      var seen = false
+      val ex = intercept[IllegalStateException](
+        Streaming.replayTicks(s, dir.resolve("fail").toString, failed,
+            Seq(Seq((1L, "http://a.ex/")).toDF("doc_id", "url"),
+              Seq((2L, "http://b.ex/")).toDF("doc_id", "url"))) { stream =>
+          Streaming.urlLedgerIngest(stream, dir.resolve("fail").toString,
+            dir.resolve("fail/cp").toString, "doc_id", "url",
+            queryName = failed)
+        } {
+          seen = Streaming.lastTickEnd.containsKey(failed)
+          throw new IllegalStateException("read-back boom")
+        })
+      assert(ex.getMessage == "read-back boom")
+      assert(seen, "the named ticks must have recorded their end time")
+      assert(!Streaming.lastTickEnd.containsKey(failed))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("withStagedEvents restores shuffle partitions and nanosAsLong " +
       "when the replay throws") {
     val s = spark
